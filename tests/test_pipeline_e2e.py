@@ -215,3 +215,28 @@ def test_zone_mode_end_to_end(spark, env):
     finally:
         for z in ("raw", "refined", "curated"):
             spark.sql(f"DROP TABLE IF EXISTS {z}_zone.testprac_appointments")
+
+
+def test_failed_stage_leaves_audit_row(spark, env):
+    """A stage that raises marks the report FAILED AND appends one
+    FAILED row to that stage's log table: here CURATED, whose lookup
+    table is missing."""
+    spark.sql("DROP TABLE IF EXISTS e2e_office_map")
+    cfg = load_config(make_config(env))
+    rpt = run_practice(spark, cfg, "testprac")[0]
+    assert rpt.status == "FAILED"
+    assert rpt.rows_refined == 4 and rpt.rows_curated == 0
+
+    rows = spark.table("curated_ingest_log").filter(
+        F.col("parent_run_id") == rpt.parent_run_id
+    ).collect()
+    assert [r.status for r in rows] == ["FAILED"]
+    assert rows[0].error_message == rpt.error
+    assert "e2e_office_map" in rows[0].error_message
+    # the stages before it logged their success as usual
+    for stage in ("precheck", "raw", "refined"):
+        statuses = {
+            r.status for r in spark.table(f"{stage}_ingest_log")
+            .filter(F.col("parent_run_id") == rpt.parent_run_id).collect()
+        }
+        assert "SUCCESS" in statuses, stage

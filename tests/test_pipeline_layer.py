@@ -15,7 +15,7 @@ from ulh_etl_spark.sinks.tables import (
     update_flag,
     write_table,
 )
-from ulh_etl_spark.sources.files import csv_scan, list_stage_files, move_file
+from ulh_etl_spark.sources.files import csv_scan, head_lines, list_stage_files, move_file
 from ulh_etl_spark.state import mark_consumed, new_run_id, unconsumed
 from ulh_etl_spark.validate import PrecheckContract, precheck_file, strip_bom
 
@@ -365,3 +365,115 @@ def test_jsonl_scan_quarantine(spark, tmp_path):
     bad = sorted(r.raw_line for r in quar.collect())
     assert bad == ["THIS IS NOT JSON",
                    '{"doc_id": "not_an_int", "text": "typed"}']
+
+
+# ------------------------------------------------ precheck I/O per landing
+
+# first line ends exactly at head_lines' first 64 KiB read with a CR
+# whose LF starts the next read
+_CHUNK_EDGE = b"x" * (64 * 1024 - 1) + b"\r\n1,2\r\n"
+
+LINE_CASES = {
+    "lf.csv": b"a,b\n1,2\n3,4\n",
+    "crlf.csv": b"a,b\r\n1,2\r\n3,4\r\n",
+    "cr_only.csv": b"a,b\r1,2\r3,4",
+    "blank_lines.csv": b"a,b\n\n1,2\r\n\r\n\r3,4\n\n",
+    "no_final_newline.csv": b"a,b\n1,2",
+    # separators str.splitlines would break on; LineRecordReader doesn't
+    "other_breaks.csv": "a\x0cb,c\x1cd\x85e\u2028f\n1,2\n".encode(),
+    "chunk_edge.csv": _CHUNK_EDGE,
+    "name with space.csv": b"h\nx\ny\n",
+    "many.csv": b"".join(b"%d\n" % i for i in range(50)),
+}
+
+
+@pytest.fixture()
+def line_files(spark, tmp_path):
+    import gzip
+
+    d = tmp_path / "lines"
+    d.mkdir()
+    for name, data in LINE_CASES.items():
+        (d / name).write_bytes(data)
+    with gzip.open(d / "crlf.csv.gz", "wb") as g:
+        g.write(b"h1,h2\r\n" + b"".join(b"%d,%d\r\n" % (i, i) for i in range(3000)))
+    return list_stage_files(spark, str(d))
+
+
+def test_head_and_count_lines_match_text_reader(spark, line_files):
+    from ulh_etl_spark.sources.files import count_lines, head_bytes
+
+    counts = count_lines(spark, [f.path for f in line_files])
+    assert len(line_files) == len(LINE_CASES) + 1
+    for f in line_files:
+        want = [r.value for r in spark.read.text(f.path).collect()]
+        assert head_lines(spark, f.path, 11) == want[:11], f.name
+        assert counts[f.path] == len(want), f.name
+    # head_bytes reads the stored bytes: a gzip member header
+    gz = next(f for f in line_files if f.name.endswith(".gz"))
+    assert head_bytes(spark, gz.path, 2) == b"\x1f\x8b"
+
+
+def test_count_lines_keys_plain_paths(spark, tmp_path):
+    from ulh_etl_spark.sources.files import count_lines
+
+    (tmp_path / "a b.csv").write_bytes(b"1\n2\n")
+    (tmp_path / "empty.csv").write_bytes(b"")
+    paths = [str(tmp_path / "a b.csv"), str(tmp_path / "empty.csv")]
+    assert count_lines(spark, paths) == {paths[0]: 2, paths[1]: 0}
+    assert count_lines(spark, []) == {}
+
+
+@pytest.mark.parametrize(
+    "name,data,bom",
+    [
+        ("utf8.csv", b"\xef\xbb\xbfid,date\n1,2\n", "UTF-8"),
+        ("utf16le.csv", b"\xff\xfeid,date\n1,2\n", "UTF-16-LE"),
+        ("plain.csv", b"id,date\n1,2\n", None),
+    ],
+)
+def test_precheck_bom_names(spark, tmp_path, name, data, bom):
+    (tmp_path / name).write_bytes(data)
+    f = list_stage_files(spark, str(tmp_path))[0]
+    rpt = precheck_file(spark, f, PrecheckContract(expected_columns=["id", "date"]))
+    by_check = {r.check: r for r in rpt.results}
+    if bom:
+        assert (by_check["BOM_CHECK"].status, by_check["BOM_CHECK"].actual) == ("WARN", bom)
+    else:
+        assert by_check["BOM_CHECK"].status == "PASS"
+    # the header is checked as the RAW load names its columns: Spark's
+    # CSV reader drops a UTF-8 BOM and keeps a UTF-16 one in "id"
+    header, _ = strip_bom(head_lines(spark, f.path, 1)[0])
+    assert header.split(",") == csv_scan(spark, [f.path], with_file_name=False).columns
+    assert rpt.passed == (bom != "UTF-16-LE")
+
+
+def _precheck_jobs(spark, directory: str, n_files: int) -> int:
+    from ulh_etl_spark.config import IngestEntry, SourceSpec
+    from ulh_etl_spark.pipeline import stage_precheck
+
+    os.makedirs(directory)
+    for i in range(n_files):
+        with open(os.path.join(directory, f"f{i}.csv"), "w") as fh:
+            fh.write("id,v\n" + "".join(f"{j},x\n" for j in range(i + 2)))
+    entry = IngestEntry(
+        name="jobs",
+        source=SourceSpec(kind="file", directory=directory),
+        precheck=PrecheckContract(expected_columns=["id", "v"], min_row_count=1),
+    )
+    files = list_stage_files(spark, directory)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    passing, failing, _ = stage_precheck(spark, entry, files, new_run_id(), "p")
+    jobs = sched.nextJobId() - before
+    assert len(passing) == n_files and not failing
+    return jobs
+
+
+def test_precheck_jobs_do_not_grow_with_files(warehouse, tmp_path):
+    spark = warehouse
+    one = _precheck_jobs(spark, str(tmp_path / "one"), 1)
+    six = _precheck_jobs(spark, str(tmp_path / "six"), 6)
+    assert one == six
+    log = spark.table(log_table_name("PRECHECK"))
+    assert log.filter("status = 'SUCCESS'").count() == 7

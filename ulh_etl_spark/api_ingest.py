@@ -13,10 +13,10 @@ in the audit log).
 
 Spark shape: a driver-side DAG executor over config entries —
 sequential within a practice (the dependency chain), with the HTTP
-adapters doing the fetching and one ``createDataFrame`` + append per
-endpoint. Practices are independent and could run in parallel
-threads; kept sequential for rate-limit friendliness (the reference's
-choice too).
+adapters doing the fetching and one driver-built frame
+(``session.local_frame``) + append per endpoint. Practices are
+independent and could run in parallel threads; kept sequential for
+rate-limit friendliness (the reference's choice too).
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ulh_etl_spark.config import IngestEntry, Practice
@@ -147,10 +147,12 @@ def run_api_practice(
                 .withColumn("PARENT_RUN_ID", F.lit(rid))
                 .withColumn("IS_NEW", F.lit(1) if entry.refined_table else F.lit(0))
             )
+            # the row count rides the write (as in pipeline.stage_raw);
+            # re-reading RAW would scan the whole, growing table
+            obs = Observation()
+            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
             write_table(df, entry.raw_table, mode="append")
-            n = spark.table(entry.raw_table).filter(
-                F.col("PARENT_RUN_ID") == rid
-            ).count()
+            n = int(obs.get["rows"])
             rpt.endpoints.append(EndpointResult(entry.name, "SUCCESS", n))
             append_log(
                 spark, "RAW", new_run_id(), rid, practice.practice_name,

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ulh_etl_spark.functions.transforms import concat_mapping, dummy_key, value_map
 from ulh_etl_spark.resolve import ColumnResolver
+from ulh_etl_spark.session import local_frame
 
 
 @dataclass
@@ -79,8 +80,8 @@ def broadcast_value_map(
     lexicographically smallest key's value wins (deterministic).
     """
     spark = df.sparkSession
-    exact = spark.createDataFrame(
-        list(mapping.items()), "_vm_key string, _vm_val string"
+    exact = local_frame(
+        spark, list(mapping.items()), "_vm_key string, _vm_val string"
     )
     # remember the ORIGINAL value's case-fold and whether the exact
     # pass hit, so the fallback never re-maps an already-mapped value
@@ -97,7 +98,8 @@ def broadcast_value_map(
             lc = k.lower()
             if lc not in ci_pairs or k < ci_pairs[lc][0]:
                 ci_pairs[lc] = (k, v)
-        ci = spark.createDataFrame(
+        ci = local_frame(
+            spark,
             [(lc, v) for lc, (_, v) in ci_pairs.items()],
             "_vm_key_lc string, _vm_val string",
         )

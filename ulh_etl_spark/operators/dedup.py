@@ -52,6 +52,7 @@ DEFAULT_SHINGLE = 4
 # Shared under-parallelism guard (plan-metadata only, never df.rdd —
 # see operators/fanout.py for why the rdd probe is a 100 TB hazard).
 from ulh_etl_spark.operators.fanout import fan_out as _fan_out
+from ulh_etl_spark.session import local_frame
 
 
 def exact_dedup_keys(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1612,8 +1613,8 @@ def cross_group_gram_overlap(
         for i in range(len(groups))
         for j in range(i + 1, len(groups))
     ]
-    pairs = df.sparkSession.createDataFrame(
-        pair_rows, "src_a string, src_b string, _bits long"
+    pairs = local_frame(
+        df.sparkSession, pair_rows, "src_a string, src_b string, _bits long"
     )
     return (
         masks.join(
@@ -2018,7 +2019,8 @@ def greedy_max_coverage(
             checkpoint_dir,
         )
     id_type = df.schema[id_col].dataType.simpleString()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         f"pick int, doc_id {id_type}, gain bigint, covered_total bigint",
     )

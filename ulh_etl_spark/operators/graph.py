@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from ulh_etl_spark.cache import track, truncate_lineage
+from ulh_etl_spark.session import local_frame
 
 
 def _undirect(edges: DataFrame, id1: str, id2: str) -> DataFrame:
@@ -405,7 +406,8 @@ def hits(
         # to score, so hand back an empty frame with the output
         # schema instead of raising.
         node_t = edges.schema[src].dataType
-        return edges.sparkSession.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             [],
             T.StructType(
                 [

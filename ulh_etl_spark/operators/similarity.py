@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ulh_etl_spark.cache import track
+from ulh_etl_spark.session import local_frame
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -3300,8 +3301,10 @@ def kcenter_coreset(
                     _sq_dist(F.col(vec_col), _vec_lit(nxt[vec_col])),
                 ),
             )
-        return base.sparkSession.createDataFrame(
-            chosen, f"step int, {id_col} long, dist_when_chosen double"
+        return local_frame(
+            base.sparkSession,
+            chosen,
+            f"step int, {id_col} long, dist_when_chosen double",
         )
     finally:
         base.unpersist()
@@ -3520,7 +3523,8 @@ def power_iteration_pca(
     for i in range(dim):
         trace = trace + (ss[i] - n * mu[i] * mu[i])
     var_explained = round(lam / trace, 6)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, v[i], var_explained) for i in range(dim)],
         "dim_idx int, loading double, var_explained double",
     )
@@ -3668,7 +3672,8 @@ def kmeans_parallel_init(
     seeds, wmap = _kmpar_candidates(
         df, id_col, vec_col, rounds, oversample, salt
     )
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(sid, rsel, wmap.get(sid, 0)) for sid, _vec, rsel in seeds],
         "seed_id bigint, round_selected int, weight bigint",
     )
@@ -3769,7 +3774,8 @@ def kmeans_parallel_recluster(
         rows.append(
             (cid, order, cnt, round(sd / cnt, 6) if cnt else 0.0)
         )
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         rows,
         "center_id bigint, pick_order int, n_assigned bigint, "
         "mean_sqdist double",

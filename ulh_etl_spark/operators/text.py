@@ -17,6 +17,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ulh_etl_spark.cache import track
+from ulh_etl_spark.session import local_frame
 
 # 32-bit integer space for md5-derived hashes; fits products with
 # small multipliers far inside int64 (no overflow divergence between
@@ -2233,7 +2234,8 @@ def bpe_merge_steps(df, text_col: str, n_merges: int = 6):
                 ).otherwise(F.concat(acc, F.array(s))),
             )
             words = words.withColumn("syms", merged)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             merges,
             "step int, merge_left string, merge_right string, pair_count long",
         )

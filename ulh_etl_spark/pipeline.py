@@ -37,9 +37,15 @@ from ulh_etl_spark.functions.mapping import apply_mappings
 from ulh_etl_spark.functions.predicates import apply_source_filter, future_only_filter
 from ulh_etl_spark.functions.transforms import TransformSpec
 from ulh_etl_spark.resolve import ColumnResolver
-from ulh_etl_spark.sinks.logs import append_log, clean_error_message
+from ulh_etl_spark.sinks.logs import append_log, clean_error_message, log_row
 from ulh_etl_spark.sinks.tables import insert_select, table_exists, write_table
-from ulh_etl_spark.sources.files import FileInfo, csv_scan, list_stage_files, move_file
+from ulh_etl_spark.sources.files import (
+    FileInfo,
+    count_lines,
+    csv_scan,
+    list_stage_files,
+    move_file,
+)
 from ulh_etl_spark.sources.query import query_source
 from ulh_etl_spark.state import mark_consumed, new_run_id, unconsumed
 from ulh_etl_spark.validate import PrecheckReport, precheck_file
@@ -95,27 +101,35 @@ def stage_precheck(
     parent_run_id: str,
     practice: str,
 ) -> tuple[list[FileInfo], list[tuple[FileInfo, PrecheckReport]], list[PrecheckReport]]:
-    """Per-file contract validation; returns (passing, failing, reports)."""
+    """Per-file contract validation; returns (passing, failing, reports).
+    Every file's line count comes from one job, and the per-file audit
+    rows land in one append when the stage finishes."""
     passing: list[FileInfo] = []
     failing: list[tuple[FileInfo, PrecheckReport]] = []
     reports: list[PrecheckReport] = []
+    log_rows: list[tuple] = []
     contract = entry.precheck
+    line_counts = count_lines(spark, [f.path for f in files if f.size > 0])
     for f in files:
         started = _utcnow()
-        rpt = precheck_file(spark, f, contract, delimiter=entry.source.delimiter)
+        rpt = precheck_file(
+            spark, f, contract, delimiter=entry.source.delimiter,
+            line_count=line_counts.get(f.path, 0),
+        )
         reports.append(rpt)
         if rpt.passed:
             passing.append(f)
         else:
             failing.append((f, rpt))
-        append_log(
-            spark, "PRECHECK", new_run_id(), parent_run_id, practice, entry.name,
+        log_rows.append(log_row(
+            new_run_id(), parent_run_id, practice, entry.name,
             "SUCCESS" if rpt.passed else "FAILED",
             started_at=started, finished_at=_utcnow(),
             error_message="" if rpt.passed else "; ".join(
                 f"{r.check}={r.actual}" for r in rpt.results if r.status == "FAIL"
             )[:500],
-        )
+        ))
+    append_log(spark, "PRECHECK", rows=log_rows)
     return passing, failing, reports
 
 
@@ -234,8 +248,7 @@ def stage_curated(
         src = apply_source_filter(src, entry.source_filter)
     if entry.future_only_filter:
         src = future_only_filter(src, **entry.future_only_filter)
-    # consumed run ids ride whichever downstream action runs first
-    # (the RECORD_TYPE distribution) instead of a dedicated scan
+    # consumed run ids ride the curated write instead of a dedicated scan
     obs_runs = Observation()
     src = src.observe(
         obs_runs, F.collect_set("REFINED_PARENT_RUN_ID").alias("run_ids")
@@ -256,7 +269,6 @@ def stage_curated(
 
     # RECORD_TYPE: NEW vs UPDATE against existing curated keys
     # (REFINED...CURATED.py:1397-1405,1462-1474)
-    dist: dict[str, int] = {}
     sync_keys = entry.sync.get("keys") or []
     if sync_keys and table_exists(spark, entry.curated_table):
         existing = spark.table(entry.curated_table).select(*sync_keys).distinct()
@@ -268,12 +280,15 @@ def stage_curated(
         ).drop("_hit")
     else:
         marked = out.withColumn("RECORD_TYPE", F.lit("NEW"))
-    dist = {
-        r.RECORD_TYPE: r["count"]
-        for r in marked.groupBy("RECORD_TYPE").count().collect()
-    }
+    # the NEW/UPDATE tally rides the write too: a groupBy().collect()
+    # would evaluate the whole curated plan a second time
+    obs_types = Observation()
+    marked = marked.observe(obs_types, *(
+        F.count_if(F.col("RECORD_TYPE") == t).alias(t) for t in ("NEW", "UPDATE")
+    ))
 
     n = insert_select(spark, entry.curated_table, marked)
+    dist = {t: c for t, c in obs_types.get.items() if c}
     mark_consumed(spark, list(obs_runs.get["run_ids"]),
                   stage=f"CURATED:{entry.refined_table}")
     append_log(
@@ -327,13 +342,16 @@ def run_entry(
     notify: Notifier | None = None,
 ) -> RunReport:
     """Run the full stage chain for one ingest entry — the Spark shape
-    of the reference's five-job pipeline (SURVEY §3.1)."""
+    of the reference's five-job pipeline (SURVEY §3.1). A stage that
+    raises leaves one FAILED row in its ``*_ingest_log``."""
     rid = parent_run_id or new_run_id()
     rpt = RunReport(practice=practice.practice_name, entry=entry.name, parent_run_id=rid)
+    stage, started = None, _utcnow()
     try:
         files: list[FileInfo] = []
         failing: list[tuple[FileInfo, PrecheckReport]] = []
         if entry.source.kind == "file":
+            stage = "PRECHECK" if entry.precheck else "RAW"
             candidates = list_stage_files(
                 spark, entry.source.directory, entry.source.pattern
             )
@@ -351,13 +369,17 @@ def run_entry(
                     "files": rpt.files_rejected, "run_id": rid,
                 })
 
+        stage, started = "RAW", _utcnow()
         rpt.rows_raw = stage_raw(spark, entry, rid, practice.practice_name, files)
         if entry.refined_table and rpt.rows_raw:
+            stage, started = "REFINED", _utcnow()
             rpt.rows_refined = stage_refined(spark, entry, rid, practice.practice_name)
         if entry.curated_table and rpt.rows_refined:
+            stage, started = "CURATED", _utcnow()
             rpt.rows_curated, rpt.record_type_distribution = stage_curated(
                 spark, entry, rid, practice.practice_name
             )
+        stage = None  # archive moves and notifications have no audit table
         if archive and entry.source.kind == "file":
             archive_files(spark, entry, files, [f for f, _ in failing], rid)
         if notify:
@@ -368,6 +390,15 @@ def run_entry(
     except Exception as e:  # continue-on-error policy (reference per-entry)
         rpt.status = "FAILED"
         rpt.error = clean_error_message(str(e))
+        if stage:
+            try:
+                append_log(
+                    spark, stage, new_run_id(), rid, practice.practice_name,
+                    entry.name, "FAILED", started_at=started,
+                    error_message=rpt.error,
+                )
+            except Exception as log_error:  # keep continue-on-error
+                rpt.error += f"; audit row not written: {log_error}"[:300]
         if notify:
             notify("run_failed", {
                 "practice": practice.practice_name, "entry": entry.name,

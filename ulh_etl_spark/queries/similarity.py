@@ -14,7 +14,7 @@ from ulh_etl_spark.cache import track, truncate_lineage
 from ulh_etl_spark.operators import similarity as S
 from ulh_etl_spark.queries import _oracle_fragments as O
 from ulh_etl_spark.operators.fanout import fan_out as _fo
-from ulh_etl_spark.session import load_table
+from ulh_etl_spark.session import load_table, local_frame
 
 _N_QUERIES = 5
 _K = 10
@@ -1904,7 +1904,8 @@ def q204_recall_cost_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("_hits"))
     )
     tot = bf.agg(F.count("*").cast("long").alias("_total"))
-    spine = spark.createDataFrame(
+    spine = local_frame(
+        spark,
         [(i, cnp, np_) for i, (cnp, np_) in enumerate(_RVC_CONFIGS)],
         "_cfg int, coarse_nprobe int, nprobe int",
     )

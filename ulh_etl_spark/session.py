@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 # The canonical synthetic star-schema tables the driver generates
 # (TESTDATA.md). `documents`/`embeddings` serve the training-data ops.
@@ -72,6 +73,30 @@ def get_spark(app_name: str = "ulh_etl_spark", cpus: str | None = None) -> Spark
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """DataFrame over driver-held ``rows`` (tuples in ``schema`` field
+    order; ``schema`` is a DDL string or a StructType).
+
+    The rows travel as one ``pyarrow.Table`` and plan as a
+    ``LocalTableScan``. ``createDataFrame(<python list>)`` plans as
+    ``Scan ExistingRDD`` over a Python RDD instead, so every action on
+    it (even a one-row audit append) runs Python-worker tasks.
+    Timestamps are naive UTC datetimes."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def table_path(sf_dir: str, name: str) -> str:

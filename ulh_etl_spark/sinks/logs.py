@@ -2,16 +2,22 @@
 ``*_INGEST_LOG`` tables with run lineage and timings
 (RAW_ADLS_TO_RAW_SNOWFLAKE.py:316-382 and the three sibling loggers).
 
-Implemented as parameterized 1-row DataFrame appends — deliberately
-NOT string-spliced SQL (the reference escapes quotes by hand into
-INSERT VALUES; SURVEY §7.1 calls out fixing that)."""
+Implemented as parameterized DataFrame appends — deliberately NOT
+string-spliced SQL (the reference escapes quotes by hand into INSERT
+VALUES; SURVEY §7.1 calls out fixing that). One append writes any
+number of rows from a driver-built ``LocalTableScan``: PRECHECK logs
+all of a landing's files in one write, the other stages one row each
+when they finish."""
 
 from __future__ import annotations
 
 import re
+import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
+
+from ulh_etl_spark.session import local_frame
 
 LOG_SCHEMA = (
     "log_id string, stage string, run_id string, parent_run_id string, "
@@ -40,9 +46,7 @@ def log_table_name(stage: str) -> str:
     return f"{stage.lower()}_ingest_log"
 
 
-def append_log(
-    spark: SparkSession,
-    stage: str,
+def log_row(
     run_id: str,
     parent_run_id: str,
     practice: str,
@@ -53,16 +57,14 @@ def append_log(
     started_at: datetime | None = None,
     finished_at: datetime | None = None,
     error_message: str = "",
-) -> None:
-    import uuid
-
+) -> tuple:
+    """One audit row in ``LOG_SCHEMA`` order, minus ``log_id`` and
+    ``stage`` (``append_log`` fills both). Times are naive UTC and
+    default to now."""
     now = datetime.now(timezone.utc).replace(tzinfo=None)
     started = (started_at or now).replace(tzinfo=None)
     finished = (finished_at or now).replace(tzinfo=None)
-    duration = (finished - started).total_seconds()
-    row = (
-        str(uuid.uuid4()),
-        stage,
+    return (
         run_id,
         parent_run_id,
         practice,
@@ -72,9 +74,21 @@ def append_log(
         rows_written,
         started,
         finished,
-        duration,
+        (finished - started).total_seconds(),
         error_message,
     )
-    spark.createDataFrame([row], LOG_SCHEMA).write.mode("append").saveAsTable(
-        log_table_name(stage)
-    )
+
+
+def append_log(
+    spark: SparkSession, stage: str, *fields, rows: list[tuple] | None = None, **kw
+) -> None:
+    """Append audit rows to ``stage``'s log table in one write: the
+    ``log_row`` tuples in ``rows``, or else the one row whose
+    ``log_row`` arguments are ``fields``/``kw``."""
+    if rows is None:
+        rows = [log_row(*fields, **kw)]
+    if not rows:
+        return
+    local_frame(
+        spark, [(str(uuid.uuid4()), stage, *r) for r in rows], LOG_SCHEMA
+    ).write.mode("append").saveAsTable(log_table_name(stage))

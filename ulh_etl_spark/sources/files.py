@@ -5,12 +5,14 @@ The reference lists files in an external stage with
 reads with per-feed options (RAW_ADLS_TO_RAW_SNOWFLAKE.py:662-691),
 plus a raw-line file format for header/sample probing
 (ADLS_FILE_PRECHECK.py:789-824). Spark equivalents: Hadoop
-FileSystem listing + ``spark.read.csv`` / ``spark.read.text``.
+FileSystem listing + ``spark.read.csv`` / ``spark.read.text``, with
+the few header/sample lines read on the driver through a Hadoop
+stream.
 
 Scale: listing uses the JVM FileSystem API (works on HDFS/S3/ABFS
-URIs unchanged); CSV reads pass explicit file lists so per-file
-lineage survives without per-file jobs — ``input_file_name()`` tags
-every row with its source file in one distributed read.
+URIs unchanged); CSV reads and line counts pass explicit file lists so
+per-file lineage survives without per-file jobs — ``input_file_name()``
+tags every row with its source file in one distributed read.
 """
 
 from __future__ import annotations
@@ -149,35 +151,97 @@ def jsonl_scan(
 
 def raw_line_scan(spark: SparkSession, path: str) -> DataFrame:
     """Raw-line scan, no field parsing (S3: FIELD_DELIMITER=NONE +
-    ``SELECT $1 ... LIMIT n``) — the precheck suite's substrate.
-    Handles .gz transparently (Hadoop codecs)."""
+    ``SELECT $1 ... LIMIT n``). Handles .gz transparently (Hadoop
+    codecs)."""
     return spark.read.text(path)
+
+
+# Bytes head_lines reads before giving up on finding its lines.
+_HEAD_MAX_BYTES = 16 << 20
+_HEAD_CHUNK = 64 << 10
+
+
+def _open(spark: SparkSession, path: str, decompress: bool):
+    """Hadoop input stream over ``path``; with ``decompress`` it goes
+    through the codec the file's extension names, as Spark's text
+    reader does."""
+    fs, hpath, jvm = _hadoop_fs(spark, path)
+    stream = fs.open(hpath)
+    if decompress:
+        codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+            spark.sparkContext._jsc.hadoopConfiguration()
+        ).getCodec(hpath)
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+    return stream
 
 
 def head_lines(spark: SparkSession, path: str, n: int) -> list[str]:
     """First ``n`` physical lines (header + sample probing,
-    ADLS_FILE_PRECHECK.py:798-824)."""
-    return [r[0] for r in raw_line_scan(spark, path).limit(n).collect()]
+    ADLS_FILE_PRECHECK.py:798-824), read on the driver: no Spark job.
+
+    Lines split on LF, CRLF and CR, as Hadoop's ``LineRecordReader``
+    splits them for ``spark.read.text``. Unlike that reader this one
+    keeps a byte-order mark: bytes that are not UTF-8 (a UTF-16 BOM,
+    say) decode to surrogate escapes, so
+    ``line.encode("utf-8", "surrogateescape")`` gives the raw bytes
+    back. Raises ``ValueError`` when ``n`` lines are not complete
+    within the first 16 MiB."""
+    stream = _open(spark, path, decompress=True)
+    try:
+        buf = b""
+        while True:
+            chunk = bytes(stream.readNBytes(max(_HEAD_CHUNK, len(buf))))
+            buf += chunk
+            lines = buf.splitlines()
+            # a line is complete once a later one starts (a trailing
+            # CR may still be the first half of a CRLF) or at EOF
+            if not chunk or len(lines) > n:
+                break
+            if len(buf) > _HEAD_MAX_BYTES:
+                raise ValueError(
+                    f"first {n} lines not found in {_HEAD_MAX_BYTES} bytes"
+                )
+    finally:
+        stream.close()
+    return [ln.decode("utf-8", errors="surrogateescape") for ln in lines[:n]]
 
 
-def count_lines(spark: SparkSession, path: str) -> int:
-    return raw_line_scan(spark, path).count()
+def count_lines(spark: SparkSession, paths: list[str]) -> dict[str, int]:
+    """Physical line count of every file in ``paths``, from ONE
+    distributed read of them all (0 for an empty file). A file whose
+    bytes the codec cannot read counts only the lines before the fault
+    (``ignoreCorruptFiles``) instead of failing every file's count;
+    the precheck reports such a file through ``head_lines``."""
+    if not paths:
+        return {}
+    counts = (
+        spark.read.option("ignoreCorruptFiles", True)
+        .text(paths)
+        .groupBy(F.input_file_name().alias("f"))
+        .count()
+        .collect()
+    )
+    # input_file_name() is a URI string ("a%20b.csv"); Path(URI) gives
+    # the FileSystem path string FileInfo.path carries ("a b.csv")
+    jvm = spark.sparkContext._jvm
+    by_path = {
+        jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(r.f)).toString(): r["count"]
+        for r in counts
+    }
+
+    def qualified(path: str) -> str:
+        fs, hpath, _ = _hadoop_fs(spark, path)
+        return fs.makeQualified(hpath).toString()
+
+    return {p: by_path.get(qualified(p), 0) for p in paths}
 
 
 def head_bytes(spark: SparkSession, path: str, n: int = 4) -> bytes:
-    """First ``n`` raw bytes via Hadoop FS open — needed for BOM
-    detection because Spark's text/CSV readers transparently strip a
-    UTF-8 BOM before the engine ever sees it."""
-    fs, hpath, _ = _hadoop_fs(spark, path)
-    stream = fs.open(hpath)
+    """First ``n`` raw bytes, read without decompression."""
+    stream = _open(spark, path, decompress=False)
     try:
-        out = bytearray()
-        for _ in range(n):
-            b = stream.read()
-            if b < 0:
-                break
-            out.append(b)
-        return bytes(out)
+        return bytes(stream.readNBytes(n))
     finally:
         stream.close()
 

@@ -35,6 +35,8 @@ from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ulh_etl_spark.session import local_frame
+
 
 @dataclass
 class HttpResponse:
@@ -167,7 +169,7 @@ def records_to_df(spark: SparkSession, records: list[dict]) -> DataFrame:
     to JSON, matching the reference (ELLKAY...py:713-717) — callers
     wanting typed structs can parse with ``from_json`` downstream."""
     if not records:
-        return spark.createDataFrame([], "dummy string").limit(0).drop("dummy")
+        return local_frame(spark, [], "dummy string").drop("dummy")
     cols: list[str] = []
     for r in records:
         for k in r:
@@ -182,7 +184,7 @@ def records_to_df(spark: SparkSession, records: list[dict]) -> DataFrame:
         for r in records
     ]
     schema = ", ".join(f"`{c}` string" for c in cols)
-    return spark.createDataFrame(flat, schema)
+    return local_frame(spark, flat, schema)
 
 
 # ---------------------------------------------------------------- sources
@@ -395,7 +397,7 @@ def entity_fanout_source(
     ids_df = (
         ids_frame
         if ids_frame is not None
-        else spark.createDataFrame([(i,) for i in ids], "entity_id string")
+        else local_frame(spark, [(i,) for i in ids], "entity_id string")
     )
 
     delay_ms = api_delay_ms or 0

@@ -21,6 +21,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ulh_etl_spark.session import local_frame
 from ulh_etl_spark.sinks.tables import table_exists
 
 WATERMARK_TABLE = "_processed_runs"
@@ -38,7 +39,7 @@ def processed_runs(
     spark: SparkSession, stage: str, table: str = WATERMARK_TABLE
 ) -> DataFrame:
     if not table_exists(spark, table):
-        return spark.createDataFrame([], _SCHEMA).select("run_id")
+        return local_frame(spark, [], _SCHEMA).select("run_id")
     return (
         spark.table(table).filter(F.col("stage") == stage).select("run_id").distinct()
     )
@@ -71,4 +72,4 @@ def mark_consumed(
         return
     now = datetime.now(timezone.utc).replace(tzinfo=None)
     rows = [(stage, rid, now) for rid in set(run_ids)]
-    spark.createDataFrame(rows, _SCHEMA).write.mode("append").saveAsTable(table)
+    local_frame(spark, rows, _SCHEMA).write.mode("append").saveAsTable(table)

@@ -7,11 +7,13 @@ counts, delimiter consistency. Each check yields a structured
 PASS/FAIL/WARN row with expected-vs-actual (reference logs the same
 shape to PRECHECK_INGEST_LOG, :187-237).
 
-Execution model: the raw header + sample lines come off a
-``spark.read.text`` scan (distributed, any filesystem); the checks
-themselves are driver-side logic over those few lines plus one
-distributed line count — exactly the split the reference uses
-(LIMIT 1/11 probes + COUNT(*), :789-824,1050-1057).
+Execution model: the raw header + sample lines are read on the driver
+through a Hadoop stream (any filesystem, codec-aware, no Spark job);
+the checks themselves are driver-side logic over those few lines plus
+a physical line count. The line counts of a whole landing come from
+ONE distributed job (``count_lines`` over every file), not one per
+file — the reference's split of LIMIT 1/11 probes + COUNT(*)
+(:789-824,1050-1057) without its per-file scans.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from ulh_etl_spark.config import PrecheckContract
-from ulh_etl_spark.sources.files import FileInfo, count_lines, head_bytes, head_lines
+from ulh_etl_spark.sources.files import FileInfo, count_lines, head_lines
 
 # Characters forbidden in headers (reference :102-113): control chars,
 # quotes, SQL-comment introducers.
@@ -69,13 +71,18 @@ def _parse_csv_line(line: str, delimiter: str) -> list[str]:
 
 
 def strip_bom(line: str) -> tuple[str, str | None]:
+    """(``line`` as Spark's text and CSV readers load it, the name of
+    the byte-order mark it starts with or None).
+
+    ``line`` may carry raw bytes as surrogate escapes (``head_lines``).
+    The readers drop a UTF-8 BOM (Hadoop's ``LineRecordReader``) and
+    load any other as U+FFFD characters in the first field, so the
+    header is checked as the RAW load will name its columns."""
     raw = line.encode("utf-8", errors="surrogateescape")
-    for bom, name in _BOMS.items():
-        if raw.startswith(bom):
-            return raw[len(bom):].decode("utf-8", errors="replace"), name
-    if line and line[0] == "﻿":
-        return line[1:], "UTF-8"
-    return line, None
+    name = next((n for bom, n in _BOMS.items() if raw.startswith(bom)), None)
+    if name == "UTF-8":
+        raw = raw[3:]
+    return raw.decode("utf-8", errors="replace"), name
 
 
 def precheck_file(
@@ -84,8 +91,12 @@ def precheck_file(
     contract: PrecheckContract,
     delimiter: str = ",",
     sample_rows: int = 10,
+    line_count: int | None = None,
 ) -> PrecheckReport:
-    """Run the full §2.8 check suite against one staged file."""
+    """Run the full §2.8 check suite against one staged file.
+    ``line_count`` is the file's physical line count when the caller
+    already has it (``count_lines`` over a whole landing); otherwise
+    the file is counted on its own."""
     rpt = PrecheckReport(file=file.path)
 
     # FILE_SIZE (:771-780)
@@ -106,16 +117,9 @@ def precheck_file(
         return rpt
     rpt.add("FILE_READ", "PASS", f"header+{sample_rows} sample", str(len(lines)))
 
-    # BOM_CHECK (:846-872) — WARN and strip before further parsing.
-    # Spark's text reader silently strips a UTF-8 BOM, so detection
-    # probes the first raw bytes via Hadoop FS.
+    # BOM_CHECK (:846-872) — WARN; head_lines keeps the raw BOM bytes
+    # that Spark's text reader drops.
     header_line, bom = strip_bom(lines[0])
-    if bom is None:
-        first = head_bytes(spark, file.path, 4)
-        for b, name in _BOMS.items():
-            if first.startswith(b):
-                bom = name
-                break
     if bom:
         rpt.add("BOM_CHECK", "WARN", "no BOM", bom, "BOM stripped before parsing")
     else:
@@ -190,8 +194,9 @@ def precheck_file(
             rpt.add("COLUMN_ORDER", "PASS", "declared order", "matches")
 
     # MIN/MAX_ROW_COUNT (:1050-1093) — data rows = physical lines - 1
-    total = count_lines(spark, file.path)
-    data_rows = max(total - 1, 0)
+    if line_count is None:
+        line_count = count_lines(spark, [file.path])[file.path]
+    data_rows = max(line_count - 1, 0)
     if data_rows < contract.min_row_count:
         rpt.add("MIN_ROW_COUNT", "FAIL", f">= {contract.min_row_count}", str(data_rows))
     else:
