@@ -3,7 +3,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ulh_etl_spark.session import get_spark
 
@@ -19,7 +20,7 @@ def spark():
     import shutil
 
     for d in ("spark-warehouse", "metastore_db"):
-        shutil.rmtree(os.path.join("/root/repo", d), ignore_errors=True)
+        shutil.rmtree(os.path.join(ROOT, d), ignore_errors=True)
     return get_spark("ulh-etl-tests", cpus="8")
 
 

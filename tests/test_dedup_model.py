@@ -1069,20 +1069,21 @@ def test_knn_graph_two_level_multiprobe_contains_single_probe(spark):
 
 
 def test_two_level_blas_sql_kernel_parity(spark):
-    """The BLAS mapInPandas kernel and the literal-folded SQL kernel
-    compute the IDENTICAL cell function — assignment cells AND the
-    full nprobe=2 probe-cell sequence — including on exact-duplicate
-    corpus vectors (distance ties resolved by the (dist, cell)
-    tie-break either way). This is the invariant that lets the r13
-    kernel swap keep every two-level oracle unchanged."""
+    """The BLAS mapInPandas kernel computes the cell function the
+    literal-folded SQL kernel defined — the (dist, cell) argmin over
+    the union of the top-coarse_nprobe coarse groups — for the
+    assignment cells AND the full nprobe=2 probe-cell sequence,
+    including on exact-duplicate corpus vectors and a vector that IS
+    a centroid (distance ties resolved by the (dist, cell)
+    tie-break). The pure-Python two-level model is the reference, so
+    every two-level oracle keeps its meaning."""
     import numpy as np
 
-    from pyspark.sql import functions as F
-
     from ulh_etl_spark.operators.similarity import (
+        _py_sqdist,
         ivf_assign_two_level,
         two_level_cells_blas,
-        two_level_probe_expr,
+        two_level_structure,
     )
 
     rng = np.random.RandomState(7)
@@ -1099,43 +1100,47 @@ def test_two_level_blas_sql_kernel_parity(spark):
         [(j, [float(x) for x in cvecs[j]]) for j in range(len(cvecs))],
         "centroid_id long, centroid_vec array<double>",
     )
-    sql_cells = {
-        r.vec_id: r.cell
-        for r in ivf_assign_two_level(emb, cents, impl="sql").collect()
-    }
-    blas_cells = {
-        r.vec_id: r.cell
-        for r in ivf_assign_two_level(emb, cents, impl="blas").collect()
-    }
-    assert sql_cells == blas_cells
+    coarse, groups = two_level_structure(
+        [{"cell": j, "cvec": [float(x) for x in cvecs[j]]}
+         for j in range(len(cvecs))]
+    )
 
-    probe_sql = {
-        r.vec_id: r.cells
-        for r in emb.select(
-            "vec_id",
-            F.transform(
-                two_level_probe_expr(cents, "embedding", 2),
-                lambda s: s["cell"],
-            ).alias("cells"),
-        ).collect()
+    def model(v):
+        near = sorted(
+            coarse, key=lambda c: (_py_sqdist(v, c["cvec"]), c["cell"])
+        )[:2]
+        cand = [r for c in near for r in groups[c["cell"]]]
+        return [
+            r["cell"]
+            for r in sorted(
+                cand, key=lambda r: (_py_sqdist(v, r["cvec"]), r["cell"])
+            )
+        ]
+
+    cells = {
+        r.vec_id: r.cell
+        for r in ivf_assign_two_level(emb, cents).collect()
     }
-    probe_blas = {
+    probes = {
         r.vec_id: list(r._cells)
         for r in two_level_cells_blas(emb, cents, nprobe=2).collect()
     }
-    assert {k: list(v) for k, v in probe_sql.items()} == probe_blas
+    for i in range(len(vecs)):
+        want = model([float(x) for x in vecs[i]])
+        assert cells[i] == want[0], f"vec {i}"
+        assert probes[i] == want[:2], f"probe slice vec {i}"
+    assert cells[3] == cells[17] == cells[29] == 7
 
 
-def test_ivf_assign_blas_matches_sql(spark):
-    """The r16 flat-assignment kernel swap: ivf_assign(impl='blas')
-    routes through flat_cells_blas(nprobe=1), whose element 1 is the
-    SQL fold's array_min cell by the tolerance-refined contract —
-    identical cells AND an identical (id, vec, cell) schema, on a
-    corpus seeded with exact-duplicate vectors and a corpus vector
-    that IS a centroid (the distance-0 tie cases)."""
+def test_ivf_assign_matches_python_model(spark):
+    """ivf_assign (flat_cells_blas element 1) == the pure-Python flat
+    argmin over (dist, cell) — identical cells AND an (id, vec, cell)
+    schema whose cell type is the centroid id type, on a corpus
+    seeded with exact-duplicate vectors and a corpus vector that IS a
+    centroid (the distance-0 tie cases)."""
     import numpy as np
 
-    from ulh_etl_spark.operators.similarity import ivf_assign
+    from ulh_etl_spark.operators.similarity import _py_sqdist, ivf_assign
 
     rng = np.random.RandomState(11)
     vecs = rng.rand(60, 6).astype("float64")
@@ -1151,28 +1156,44 @@ def test_ivf_assign_blas_matches_sql(spark):
         [(j, [float(x) for x in cvecs[j]]) for j in range(len(cvecs))],
         "centroid_id long, centroid_vec array<double>",
     )
-    sql_df = ivf_assign(emb, cents, impl="sql")
-    blas_df = ivf_assign(emb, cents, impl="blas")
-    assert sql_df.columns == blas_df.columns == [
-        "vec_id", "embedding", "cell"
-    ]
-    assert (
-        sql_df.schema["cell"].dataType == blas_df.schema["cell"].dataType
-    )
-    sql_cells = {r.vec_id: r.cell for r in sql_df.collect()}
-    blas_cells = {r.vec_id: r.cell for r in blas_df.collect()}
-    assert sql_cells == blas_cells
+    df = ivf_assign(emb, cents)
+    assert df.columns == ["vec_id", "embedding", "cell"]
+    assert df.schema["cell"].dataType == cents.schema["centroid_id"].dataType
+    cells = {r.vec_id: r.cell for r in df.collect()}
+    for i, v in enumerate(vecs.tolist()):
+        want = min(
+            range(len(cvecs)),
+            key=lambda j: (_py_sqdist(v, cvecs[j].tolist()), j),
+        )
+        assert cells[i] == want, f"vec {i}"
     # the duplicate trio all landed on the centroid that IS their
     # vector (distance 0, lowest-cell tie-break)
-    assert sql_cells[5] == sql_cells[13] == sql_cells[41] == 4
+    assert cells[5] == cells[13] == cells[41] == 4
+
+
+def _same_cell_cosines(emb, cents):
+    """Reference for the pair kernel: ivf_assign's cells, and every
+    same-cell (id1 < id2) pair scored by the ``cosine()`` column
+    expression and rounded to 6 places like the operators."""
+    from ulh_etl_spark.operators.similarity import cosine, ivf_assign
+
+    a = ivf_assign(emb, cents)
+    x = a.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("v1"), "cell")
+    y = a.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("v2"), "cell")
+    c = F.round(cosine(F.col("v1"), F.col("v2")), 6).alias("c")
+    pairs = x.join(y, "cell").filter(F.col("id1") < F.col("id2"))
+    pairs = pairs.select("id1", "id2", c)
+    return (
+        {r.vec_id: r.cell for r in a.collect()},
+        {(r.id1, r.id2): r.c for r in pairs.collect()},
+    )
 
 
 def test_neardup_pairs_blas_matches_sql(spark):
-    """The r16 pair-scoring kernel swap: embedding_neardup_pairs
-    (impl='blas') must reproduce the SQL self-join formulation
-    bit-for-bit — same pairs, same round-6 cosines — on a corpus
-    seeded with exact-duplicate vectors (cosine exactly 1.0, the
-    threshold-boundary tie case)."""
+    """embedding_neardup_pairs' pair kernel == a same-cell SQL join
+    scored by cosine() — same pairs, same round-6 cosines — on a
+    corpus seeded with exact-duplicate vectors (cosine exactly 1.0),
+    at a threshold below 1.0 and at exactly 1.0."""
     import numpy as np
 
     from ulh_etl_spark.operators.similarity import embedding_neardup_pairs
@@ -1189,29 +1210,20 @@ def test_neardup_pairs_blas_matches_sql(spark):
         [(j, [float(x) for x in vecs[j * 9]]) for j in range(6)],
         "centroid_id long, centroid_vec array<double>",
     )
-    got_sql = sorted(
-        (r.id1, r.id2, r.cosine)
-        for r in embedding_neardup_pairs(
-            emb, cents, threshold=0.8, impl="sql"
-        ).collect()
-    )
-    got_blas = sorted(
-        (r.id1, r.id2, r.cosine)
-        for r in embedding_neardup_pairs(
-            emb, cents, threshold=0.8, impl="blas"
-        ).collect()
-    )
-    assert got_sql == got_blas
-    assert got_sql  # non-trivial: the duplicate pairs must appear
-    dup_pairs = {(a, b) for a, b, c in got_sql if c == 1.0}
-    assert (7, 31) in dup_pairs or (7, 55) in dup_pairs or (
-        31, 55
-    ) in dup_pairs
+    _, ref = _same_cell_cosines(emb, cents)
+    for t in (0.8, 1.0):
+        got = sorted(
+            (r.id1, r.id2, r.cosine)
+            for r in embedding_neardup_pairs(emb, cents, threshold=t).collect()
+        )
+        assert got == sorted((a, b, c) for (a, b), c in ref.items() if c >= t)
+        dup_pairs = {(a, b) for a, b, c in got if c == 1.0}
+        assert dup_pairs & {(7, 31), (7, 55), (31, 55)}, t
 
 
 def test_semantic_dedup_blas_matches_sql(spark):
-    """semantic_dedup(impl='blas') derives the dropped set from the
-    r16 pair kernel — kept flags must match the SQL join formulation
+    """semantic_dedup derives the dropped set from the pair kernel —
+    cells and kept flags must match the same-cell SQL join reference
     exactly, including the min-id-survives chain rule on duplicate
     vectors."""
     import numpy as np
@@ -1230,21 +1242,15 @@ def test_semantic_dedup_blas_matches_sql(spark):
         [(j, [float(x) for x in vecs[j * 11]]) for j in range(5)],
         "centroid_id long, centroid_vec array<double>",
     )
-    got_sql = {
+    cells, ref = _same_cell_cosines(emb, cents)
+    dropped = {b for (_, b), c in ref.items() if c >= 0.95}
+    got = {
         r.vec_id: (r.cell, r.kept)
-        for r in semantic_dedup(
-            emb, cents, threshold=0.95, impl="sql"
-        ).collect()
+        for r in semantic_dedup(emb, cents, threshold=0.95).collect()
     }
-    got_blas = {
-        r.vec_id: (r.cell, r.kept)
-        for r in semantic_dedup(
-            emb, cents, threshold=0.95, impl="blas"
-        ).collect()
-    }
-    assert got_sql == got_blas
-    assert got_sql[3][1] is True
-    assert got_sql[12][1] is False and got_sql[44][1] is False
+    assert got == {i: (c, i not in dropped) for i, c in cells.items()}
+    assert got[3][1] is True
+    assert got[12][1] is False and got[44][1] is False
 
 
 def test_two_level_structure_rejects_duplicate_coarse(spark):
@@ -1601,10 +1607,44 @@ def test_power_iteration_pca_rejects_ragged_vectors(spark):
         power_iteration_pca(df, "embedding", dim=3, rounds=2)
 
 
-def test_knn_score_blas_bit_exact_vs_sql(spark):
-    """The r14 fold-exact scoring kernel: knn_graph's BLAS path must
-    return the EXACT row set of the SQL-fold path — same neighbors,
-    same ranks, same rounded cosines — across flat/two-level and
+def _knn_ref(emb, cents, k, nprobe, two_level):
+    """Reference for knn_graph's scoring kernel: a SQL join of each
+    vector's probe cells to every vector's index cell (element 1),
+    scored by ``cosine()`` and ranked by (cosine desc, neighbor id)."""
+    from pyspark.sql import Window
+
+    from ulh_etl_spark.operators.similarity import (
+        cosine,
+        flat_cells_blas,
+        two_level_cells_blas,
+    )
+
+    assign = two_level_cells_blas if two_level else flat_cells_blas
+    cells = assign(emb, cents, nprobe=nprobe)
+    q = cells.select(
+        "vec_id", F.col("embedding").alias("v1"), F.explode("_cells").alias("cell")
+    )
+    n = cells.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v2"),
+        F.element_at("_cells", 1).alias("cell"),
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.col("_cos").desc(), "neighbor_id")
+    return (
+        q.join(n, "cell")
+        .filter(F.col("vec_id") != F.col("neighbor_id"))
+        .withColumn("_cos", cosine(F.col("v1"), F.col("v2")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "vec_id", "neighbor_id", F.round("_cos", 6).alias("cosine"), "rank"
+        )
+    )
+
+
+def test_knn_score_blas_bit_exact_vs_sql(spark, sf_dir):
+    """The r14 fold-exact scoring kernel: knn_graph must return the
+    EXACT row set of the SQL join reference — same neighbors, same
+    ranks, same rounded cosines — across flat/two-level and
     single/multi-probe configs. The kernel's per-dimension numpy
     accumulation replays _dot's left-to-right IEEE sequence, so this
     is equality, not tolerance."""
@@ -1612,19 +1652,13 @@ def test_knn_score_blas_bit_exact_vs_sql(spark):
     from ulh_etl_spark.queries.similarity import _adaptive_centroids
     from ulh_etl_spark.session import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = _adaptive_centroids(emb)
     for nprobe, twol in ((1, False), (2, True), (3, False)):
-        blas = knn_graph(
-            emb, cents, k=4, nprobe=nprobe, two_level=twol,
-            assign_impl="blas",
-        )
-        sql = knn_graph(
-            emb, cents, k=4, nprobe=nprobe, two_level=twol,
-            assign_impl="sql",
-        )
-        assert blas.exceptAll(sql).count() == 0, (nprobe, twol)
-        assert sql.exceptAll(blas).count() == 0, (nprobe, twol)
+        got = knn_graph(emb, cents, k=4, nprobe=nprobe, two_level=twol)
+        ref = _knn_ref(emb, cents, 4, nprobe, twol)
+        assert got.exceptAll(ref).count() == 0, (nprobe, twol)
+        assert ref.exceptAll(got).count() == 0, (nprobe, twol)
 
 
 def test_knn_score_blas_self_exclusion_small_cell(spark):
@@ -1642,10 +1676,10 @@ def test_knn_score_blas_self_exclusion_small_cell(spark):
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
         "centroid_id int, centroid_vec array<float>",
     )
-    got = knn_graph(emb, cents, k=4, assign_impl="blas").collect()
+    got = knn_graph(emb, cents, k=4).collect()
     assert all(r.vec_id != r.neighbor_id for r in got)
-    sql = knn_graph(emb, cents, k=4, assign_impl="sql").collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, sql))
+    ref = _knn_ref(emb, cents, 4, 1, False).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
 
 
 def test_prefix_filter_bloom_preverify_lossless(spark):
@@ -1733,23 +1767,22 @@ def test_prefix_filter_inline_bloom_lossless(spark):
                 assert on == off, (t, big, bits)
 
 
-def test_cosine_topk_blas_bit_exact_vs_sql(spark):
-    """The r16 brute-force kernel: cosine_topk's BLAS path must
-    return the EXACT row set of the SQL broadcast-join path — same
+def test_cosine_topk_blas_bit_exact_vs_sql(spark, sf_dir):
+    """cosine_topk's two sides of the query-set size fallback: the
+    collected-query kernel must return the EXACT row set of the
+    broadcast-join path (forced by ``max_collect_queries=0``) — same
     neighbors, same ranks, same rounded cosines — on the real
     testdata corpus at two query widths. The kernel's per-dimension
     numpy accumulation replays _dot's left-to-right IEEE sequence,
     so this is equality, not tolerance."""
-    from pyspark.sql import functions as F
-
     from ulh_etl_spark.operators.similarity import cosine_topk
     from ulh_etl_spark.session import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     for nq, k in ((5, 10), (64, 4)):
         queries = emb.filter(F.col("vec_id") < nq)
-        blas = cosine_topk(emb, queries, k=k, impl="blas")
-        sql = cosine_topk(emb, queries, k=k, impl="sql")
+        blas = cosine_topk(emb, queries, k=k)
+        sql = cosine_topk(emb, queries, k=k, max_collect_queries=0)
         assert blas.exceptAll(sql).count() == 0, (nq, k)
         assert sql.exceptAll(blas).count() == 0, (nq, k)
 
@@ -1758,12 +1791,11 @@ def test_cosine_topk_blas_edge_cases(spark):
     """Ties (duplicated vectors -> neighbor-id tie-break), negative
     cosines, corpus smaller than k, and self-exclusion — the edges
     where a pruned partial top-k could diverge from the full window.
-    BLAS rows must equal SQL rows exactly. (Zero-norm vectors are
-    checked BLAS-only below: under ANSI mode the SQL expression
-    raises DIVIDE_BY_ZERO on them, so parity is only definable on
-    nonzero-norm data — and the production corpus has none.)"""
-    from pyspark.sql import functions as F
-
+    Kernel rows must equal the broadcast-join path's rows exactly,
+    and an empty query set (which only that path can take) yields
+    no rows. (Zero-norm vectors are checked on the kernel only:
+    under ANSI mode the join path raises DIVIDE_BY_ZERO on them —
+    and the production corpus has none.)"""
     from ulh_etl_spark.operators.similarity import cosine_topk
 
     rows = [
@@ -1773,16 +1805,17 @@ def test_cosine_topk_blas_edge_cases(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     for nq, k in ((3, 4), (6, 10)):
         queries = emb.filter(F.col("vec_id") <= nq)
-        blas = cosine_topk(emb, queries, k=k, impl="blas").collect()
-        sql = cosine_topk(emb, queries, k=k, impl="sql").collect()
+        blas = cosine_topk(emb, queries, k=k).collect()
+        sql = cosine_topk(emb, queries, k=k, max_collect_queries=0).collect()
         def norm(rs):
             return sorted(
                 (r.query_id, r.neighbor_id, r.cosine, r.rank) for r in rs
             )
         assert norm(blas) == norm(sql), (nq, k)
         assert all(r.query_id != r.neighbor_id for r in blas)
+    assert cosine_topk(emb, emb.filter(F.col("vec_id") < 0)).count() == 0
 
-    # BLAS-only: a zero-norm CANDIDATE's NaN cosine crosses the
+    # kernel only: a zero-norm CANDIDATE's NaN cosine crosses the
     # Arrow boundary as NULL, which the rank window orders LAST
     # under desc() — pinned so the kernel's in-batch sort key (NaN
     # below every real cosine) stays aligned with the global window.
@@ -1790,9 +1823,7 @@ def test_cosine_topk_blas_edge_cases(spark):
     emb_z = spark.createDataFrame(
         rows_z, "vec_id long, embedding array<float>"
     )
-    out = cosine_topk(
-        emb_z, emb_z.filter(F.col("vec_id") == 1), k=3, impl="blas"
-    ).collect()
+    out = cosine_topk(emb_z, emb_z.filter(F.col("vec_id") == 1), k=3).collect()
     by_rank = {r.rank: r for r in out}
     assert [by_rank[i].neighbor_id for i in (1, 2)] == [2, 3]
     assert by_rank[3].neighbor_id == 4
@@ -1836,7 +1867,7 @@ def test_two_level_cells_prefix_slice_parity(spark):
 
 
 def test_knn_graph_cells_df_guard(spark):
-    """cells_df is only meaningful on the two-level multi-probe BLAS
+    """cells_df is only meaningful on the two-level multi-probe
     path — anywhere else it must refuse loudly, not silently ignore
     a caller-supplied probe relation."""
     import pytest as _pytest

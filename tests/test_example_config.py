@@ -30,7 +30,11 @@ def _row(appt_id, date, time, status, loc, mbi, first, last, mrn, deleted="N"):
 
 @pytest.fixture()
 def example_env(spark, tmp_path):
-    cfg = json.load(open("/root/repo/examples/practice_config.json"))
+    path = os.path.join(
+        os.path.dirname(__file__), "..", "examples", "practice_config.json"
+    )
+    with open(path) as f:
+        cfg = json.load(f)
     inbound = tmp_path / "inbound"
     inbound.mkdir()
     entry = cfg["Practices"][0]["ingest"][0]

@@ -173,6 +173,23 @@ def test_rerun_is_incremental(spark, env):
     assert spark.table("e2e_curated_appts").count() == 4
 
 
+def test_failed_archive_move_fails_the_run(spark, env, monkeypatch):
+    """A move that returns False leaves the file in the inbound
+    directory, where the next run would re-append it to RAW: the run
+    must report FAILED, name the file and send run_failed."""
+    monkeypatch.setattr("ulh_etl_spark.pipeline.move_file", lambda *a, **k: False)
+    cfg = load_config(make_config(env))
+    notifications = []
+    rpt = run_practice(
+        spark, cfg, "testprac", archive=True,
+        notify=lambda kind, payload: notifications.append((kind, payload)),
+    )[0]
+    assert rpt.status == "FAILED"
+    assert "appts_1.csv" in rpt.error and "appts_bad.csv" in rpt.error
+    kinds = [k for k, _ in notifications]
+    assert "run_failed" in kinds and "run_complete" not in kinds
+
+
 def test_query_source_ingest(spark):
     """kind='query' entries run SQL over registered views as the RAW
     source (reference S5)."""

@@ -11,13 +11,15 @@ Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ulh_etl_spark.cache import release_persisted  # noqa: E402
 from ulh_etl_spark.session import TABLES, get_spark, table_path  # noqa: E402

@@ -4,10 +4,12 @@ description (docstring first sentence), oracle status. Run after
 adding queries; the output is committed so reviewers get a single
 index without importing the package."""
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ulh_etl_spark.queries import all_oracles, all_queries  # noqa: E402
 
@@ -46,7 +48,7 @@ def main() -> None:
         check = "oracle" if name in oracles else "rows-only"
         desc = first_sentence(queries[name].__doc__)
         lines.append(f"| {name} | {check} | {desc} |")
-    with open("/root/repo/CATALOG.md", "w") as f:
+    with open(os.path.join(ROOT, "CATALOG.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote CATALOG.md ({len(queries)} queries)")
 

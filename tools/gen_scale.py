@@ -11,8 +11,8 @@ and customer names are re-derived from the offset key (fresh
 near-identical name families per replica). Only the tables the
 heavy-tail probe reads are generated.
 
-Output lives under the repo (driver testdata is read-only):
-/root/repo/.scaledata/sf1 — gitignored, regenerable.
+Output lives under the repo root (the source testdata is read-only):
+.scaledata/sf1 — gitignored, regenerable.
 
 Usage: python tools/gen_scale.py [factor] [out_name] [tables]
 e.g. `python tools/gen_scale.py 100 sf10` builds the 100x set at
@@ -26,14 +26,15 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from ulh_etl_spark.session import get_spark  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
-OUT = "/root/repo/.scaledata/sf1"
+OUT = os.path.join(ROOT, ".scaledata", "sf1")
 OFFSET = 1_000_000_000
 
 
@@ -51,7 +52,7 @@ def main() -> None:
     global OUT
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     if len(sys.argv) > 2:
-        OUT = f"/root/repo/.scaledata/{sys.argv[2]}"
+        OUT = os.path.join(ROOT, ".scaledata", sys.argv[2])
     spark = get_spark("gen_scale")
     os.makedirs(OUT, exist_ok=True)
 

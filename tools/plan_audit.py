@@ -10,9 +10,11 @@ products, missing codegen.
 """
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ulh_etl_spark.plans.inspect import formatted_plan, plan_facts  # noqa: E402
 from ulh_etl_spark.session import get_spark  # noqa: E402
@@ -440,7 +442,7 @@ def main() -> None:
             report[name] = {"error": str(e)[:200]}
             print(f"{name:32s} ERROR {str(e)[:120]}")
 
-    with open("/root/repo/PLAN_AUDIT.json", "w") as f:
+    with open(os.path.join(ROOT, "PLAN_AUDIT.json"), "w") as f:
         json.dump(report, f, indent=1)
     print("\nwrote PLAN_AUDIT.json")
 

@@ -54,9 +54,8 @@ def t(label, make_df, passes=2):
 emb = load_table(spark, sf_dir, "embeddings")
 queries = emb.filter(F.col("vec_id") < _KNN_AUDIT_Q)
 
-# -- brute-force leg alone, both impls
-t("bf sql (64q)", lambda: S.cosine_topk(emb, queries, k=_KNN_K, impl="sql"))
-t("bf blas (64q)", lambda: S.cosine_topk(emb, queries, k=_KNN_K, impl="blas"))
+# -- brute-force leg alone
+t("bf (64q)", lambda: S.cosine_topk(emb, queries, k=_KNN_K))
 
 # -- seed graphs
 t("hash_ring seed", lambda: S.hash_ring_seed_graph(emb, k=_KNN_K))

@@ -13,7 +13,7 @@ with the same params as q206: n=8, t=0.8, bloom_bits=2048):
   cand_post_bloom survivors entering the exact verify
   out_pairs       final pairs at J >= 0.8
 
-Usage: python tools/profile_q206.py /root/repo/.scaledata/sf1
+Usage: python tools/profile_q206.py .scaledata/sf1
 """
 from __future__ import annotations
 

@@ -10,8 +10,8 @@ most expensive from the r7 bench)
 
 Env overrides for other decades: SCALE_FROM / SCALE_TO point at the
 two datasets, SCALE_LABEL suffixes the SCALE_PROBE.json key — e.g.
-  SCALE_FROM=/root/repo/.scaledata/sf1 \
-  SCALE_TO=/root/repo/.scaledata/sf10 SCALE_LABEL=@sf10 \
+  SCALE_FROM=.scaledata/sf1 \
+  SCALE_TO=.scaledata/sf10 SCALE_LABEL=@sf10 \
   python tools/scale_probe.py q102_neardup_collapse
 records "q102_neardup_collapse@sf10" with the sf1 -> sf10 exponent.
 """
@@ -20,19 +20,20 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ulh_etl_spark.queries import all_queries  # noqa: E402
 from ulh_etl_spark.session import get_spark  # noqa: E402
 
-import os
-
 SF01 = os.environ.get("SCALE_FROM", "/root/testdata/sf0.1")
-SF1 = os.environ.get("SCALE_TO", "/root/repo/.scaledata/sf1")
+SF1 = os.environ.get("SCALE_TO", os.path.join(ROOT, ".scaledata", "sf1"))
 LABEL = os.environ.get("SCALE_LABEL", "")
+PROBE_JSON = os.path.join(ROOT, "SCALE_PROBE.json")
 
 HEAVY = [
     "q126_record_linkage",
@@ -67,7 +68,7 @@ def main() -> int:
     qs = all_queries()
     spark = get_spark("scale_probe")
     try:  # merge with prior probes (partial runs accumulate)
-        with open("/root/repo/SCALE_PROBE.json") as f:
+        with open(PROBE_JSON) as f:
             out = json.load(f)
     except (OSError, ValueError):
         out = {}
@@ -104,13 +105,13 @@ def main() -> int:
     # run's stale snapshot. Reloading narrows the race to the dump
     # itself (serial runs are still the rule; this is a backstop).
     try:
-        with open("/root/repo/SCALE_PROBE.json") as f:
+        with open(PROBE_JSON) as f:
             merged = json.load(f)
     except (FileNotFoundError, json.JSONDecodeError):
         merged = {}
     merged.update(out)
     out = merged
-    with open("/root/repo/SCALE_PROBE.json", "w") as f:
+    with open(PROBE_JSON, "w") as f:
         json.dump(out, f, indent=2)
     print("wrote SCALE_PROBE.json")
     return 0

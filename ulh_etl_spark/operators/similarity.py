@@ -242,37 +242,33 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    impl: str = "auto",
     max_collect_queries: int = 4096,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (self-matches excluded).
 
-    ``impl`` (r16): ``auto`` collects the query set (bounded by
-    ``max_collect_queries`` — every audit caller passes a fixed
-    <= 64-row sample) and scores the corpus in the fold-exact
-    :func:`_cosine_topk_blas` mapInPandas kernel — output
-    bit-identical to the SQL path, per-pair cost vectorized, and the
-    rank window reads per-batch top-k survivors instead of
-    |corpus| x |queries| rows. ``sql`` keeps the broadcast-join +
-    expression-cosine formulation (the parity yardstick). NOTE the
-    blas path is EAGER at DataFrame-construction time (one bounded
+    The query set is collected (bounded by ``max_collect_queries`` —
+    every audit caller passes a fixed <= 64-row sample) and the corpus
+    is scored in the fold-exact :func:`_cosine_topk_blas` mapInPandas
+    kernel: per-pair cost vectorized, and the rank window reads
+    per-batch top-k survivors instead of |corpus| x |queries| rows.
+    NOTE this is EAGER at DataFrame-construction time (one bounded
     limit+collect job for the query vectors — the centroid-collect
-    policy); a query set over the cap falls back to the lazy SQL
-    path.
+    policy). A query set that is empty or over the cap cannot ride the
+    task closure, so it takes the lazy broadcast-join path instead,
+    which scores each pair with the same :func:`_dot` / :func:`l2_norm`
+    folds and therefore ranks identically.
 
-    Scale (both paths): queries broadcast (they're the small side by
-    construction); the corpus never shuffles — the only shuffle is
-    the per-query top-k window, keyed by query_id. For huge query
+    Scale (both paths): the corpus never shuffles — the only shuffle
+    is the per-query top-k window, keyed by query_id. For huge query
     sets use ivf_topk instead.
     """
-    if _resolve_impl(impl) == "blas":
-        q_rows = (
-            queries.select(id_col, vec_col)
-            .limit(max_collect_queries + 1)
-            .collect()
-        )
-        if 0 < len(q_rows) <= max_collect_queries:
-            return _cosine_topk_blas(corpus, q_rows, id_col, vec_col, k)
+    q_rows = (
+        queries.select(id_col, vec_col)
+        .limit(max_collect_queries + 1)
+        .collect()
+    )
+    if 0 < len(q_rows) <= max_collect_queries:
+        return _cosine_topk_blas(corpus, q_rows, id_col, vec_col, k)
     # Norms precomputed per row on each side — never per pair: the
     # per-pair l2_norm would triple the interpreted HOF work across
     # |corpus| x |queries| rows. Same arithmetic, same bits.
@@ -639,61 +635,34 @@ def ivf_assign(
     vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
     centroid_vec: str = "centroid_vec",
-    impl: str = "auto",
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (squared-L2,
-    deterministic centroid-id tie-break) — the IVF build step.
+    deterministic lowest-cell tie-break) — the IVF build step.
 
-    ``impl`` (r16): ``auto`` routes through the fold-exact BLAS
-    kernel when numpy imports (it is baked into every target
-    environment) — :func:`flat_cells_blas` at nprobe=1, whose
-    element 1 IS this function's cell by the tolerance-refined
-    contract (GEMM distances, decisive boundaries re-scored with the
-    exact fold), so the output is row-identical to the SQL path and
-    every oracle stays valid unchanged. The r15 probes measured why
-    the SQL fold can't stay the default: the interpreted N·C
-    distance scan was 98 of q197's 107 s at sf10 (exp +1.72, worst
-    in the probe table) while the BLAS twin computes the same cells
-    ~100x cheaper per distance. ``sql`` forces the pure-expression
-    fold (the parity yardstick and the no-numpy fallback).
+    The cell is element 1 of :func:`flat_cells_blas` at nprobe=1: GEMM
+    distances with every decisive boundary re-scored by the exact
+    left-to-right fold, so each cell equals the (dist, cell) argmin of
+    the sequential fold the DuckDB oracles replay. The r15 probes
+    measured why the interpreted fold could not stay: the N·C distance
+    scan was 98 of q197's 107 s at sf10 (exp +1.72, worst in the probe
+    table), and the BLAS kernel computes the same cells ~100x cheaper
+    per distance.
 
-    Scale (both paths): the centroid set is driver-small (C cells)
-    so it is collected once and folded into the kernel (array
-    literal for SQL, dgemm operand for BLAS); assignment is then a
+    Scale: the centroid set is driver-small (C cells) so it is
+    collected once and becomes the dgemm operand; assignment is then a
     pure narrow map — ZERO shuffles and no |corpus| x C row
     amplification (the original crossJoin + row_number formulation
     pushed every (vector, centroid) pair through an Exchange — 256x
     shuffle amplification at C=256). The output is what you'd
     ``write.partitionBy("cell")`` so probes prune partitions.
-
-    SQL path detail: the argmin is ``array_min`` over
-    ``transform(cells, c -> struct(dist, cell))``, where the
-    struct's lexicographic ordering (dist first, then cell)
-    reproduces the deterministic lowest-cell tie-break.
     """
-    if _resolve_impl(impl) == "blas":
-        return flat_cells_blas(
-            corpus, centroids, id_col, vec_col,
-            centroid_id, centroid_vec, nprobe=1,
-        ).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.element_at(F.col("_cells"), 1).alias("cell"),
-        )
-    cell_type = centroids.schema[centroid_id].dataType.simpleString()
-    cells = _centroid_literal(centroids, centroid_id, centroid_vec)
-    scored = F.transform(
-        cells,
-        lambda c: F.struct(
-            _sq_dist_to(vec_col, c["cvec"]).alias("dist"),
-            c["cell"].alias("cell"),
-        ),
-    )
-    best = F.array_min(scored)
-    return corpus.select(
+    return flat_cells_blas(
+        corpus, centroids, id_col, vec_col,
+        centroid_id, centroid_vec, nprobe=1,
+    ).select(
         F.col(id_col),
         F.col(vec_col),
-        best["cell"].cast(cell_type).alias("cell"),
+        F.element_at(F.col("_cells"), 1).alias("cell"),
     )
 
 
@@ -765,22 +734,6 @@ def two_level_structure(rows) -> tuple:
     return coarse, groups
 
 
-def _resolve_impl(impl: str) -> str:
-    """Resolve the two-level distance-kernel choice: ``auto`` means
-    BLAS when numpy imports (it is baked into every target
-    environment), else the pure-SQL fold."""
-    if impl not in ("auto", "blas", "sql"):
-        raise ValueError("impl must be one of auto/blas/sql")
-    if impl == "auto":
-        try:
-            import numpy  # noqa: F401
-
-            return "blas"
-        except ImportError:  # pragma: no cover — numpy is baked in
-            return "sql"
-    return impl
-
-
 def ivf_assign_two_level(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -789,7 +742,6 @@ def ivf_assign_two_level(
     centroid_id: str = "centroid_id",
     centroid_vec: str = "centroid_vec",
     coarse_nprobe: int = 2,
-    impl: str = "auto",
 ) -> DataFrame:
     """Two-level IVF assignment — the next-decade replacement for
     :func:`ivf_assign`'s flat argmin. The flat form pays N·C centroid
@@ -811,134 +763,34 @@ def ivf_assign_two_level(
     coarse groups costs ~N·3·sqrt(C) distances — still ~sqrt(C)/3
     cheaper than flat (measured 12x at sf10 for the assignment
     scan) — and restores a near-flat cell histogram. Fully
-    deterministic (hash coarse pick + id tie-breaks), so the
-    identical two-level rule in SQL is an exact oracle.
+    deterministic (hash coarse pick + (dist, cell) tie-breaks), so
+    the identical two-level rule in SQL is an exact oracle.
 
-    Plan shape: still ZERO shuffles — one coarse literal scoring
-    (sqrt(C) structs), a sorted slice of the top coarse_nprobe
-    groups, ``element_at`` into a literal map<coarse, array<fine
-    struct>>, and a fine argmin over the flattened union (a fine
-    cell lives in exactly ONE group, so the union has no
-    duplicates). Everything narrow, whole-stage-codegen'd,
-    partition-prunable on the output ``cell`` exactly like
-    ivf_assign.
-
-    ``impl`` selects the distance kernel — the CELL FUNCTION is
-    identical either way (tie-break-exact, pinned by pytest parity):
-
-    - ``"blas"`` — :func:`two_level_cells_blas`, one dgemm per coarse
-      group per Arrow batch (~100× cheaper per distance than the
-      interpreted fold; the r13 fix for the residual sf1→sf10
-      exponent).
-    - ``"sql"`` — the original literal-folded HOF expression; zero
-      Python, useful as the kernel baseline and where Arrow workers
-      are unavailable.
-    - ``"auto"`` (default) — ``"blas"`` when numpy imports, else
-      ``"sql"``.
+    The cell is element 1 of :func:`two_level_cells_blas` at
+    nprobe=1 — one dgemm per coarse group per Arrow batch (~100x
+    cheaper per distance than the interpreted fold; the r13 fix for
+    the residual sf1→sf10 exponent). Plan shape: one mapInPandas
+    over a 2-column projection — ZERO shuffles, partition-prunable
+    on the output ``cell`` exactly like ivf_assign.
 
     Output: (id_col, vec_col, cell) — same schema as ivf_assign."""
     if coarse_nprobe < 1:
         raise ValueError("coarse_nprobe must be >= 1")
-    impl = _resolve_impl(impl)
-    if impl == "blas":
-        cell_type = centroids.schema[centroid_id].dataType.simpleString()
-        return two_level_cells_blas(
-            corpus,
-            centroids,
-            id_col,
-            vec_col,
-            centroid_id,
-            centroid_vec,
-            nprobe=1,
-            coarse_nprobe=coarse_nprobe,
-        ).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.element_at(F.col("_cells"), 1).cast(cell_type).alias("cell"),
-        )
     cell_type = centroids.schema[centroid_id].dataType.simpleString()
-    rows = _centroid_rows(centroids, centroid_id, centroid_vec)
-    coarse, groups = two_level_structure(rows)
-
-    coarse_lit = F.expr(_rows_struct_sql(coarse))
-    entries = ", ".join(
-        f"{_cell_sql(co)}, {_rows_struct_sql(fines)}"
-        for co, fines in groups.items()
-    )
-    group_map = F.expr(f"map({entries})")
-
-    co_scored = F.transform(
-        coarse_lit,
-        lambda c: F.struct(
-            _sq_dist_to(vec_col, c["cvec"]).alias("dist"),
-            c["cell"].alias("cell"),
-        ),
-    )
-    probed = F.slice(F.array_sort(co_scored), 1, coarse_nprobe)
-    fines = F.flatten(
-        F.transform(probed, lambda s: F.element_at(group_map, s["cell"]))
-    )
-    fine_scored = F.transform(
-        fines,
-        lambda c: F.struct(
-            _sq_dist_to(vec_col, c["cvec"]).alias("dist"),
-            c["cell"].alias("cell"),
-        ),
-    )
-    best = F.array_min(fine_scored)
-    return corpus.select(
+    return two_level_cells_blas(
+        corpus,
+        centroids,
+        id_col,
+        vec_col,
+        centroid_id,
+        centroid_vec,
+        nprobe=1,
+        coarse_nprobe=coarse_nprobe,
+    ).select(
         F.col(id_col),
         F.col(vec_col),
-        best["cell"].cast(cell_type).alias("cell"),
+        F.element_at(F.col("_cells"), 1).cast(cell_type).alias("cell"),
     )
-
-
-def two_level_probe_expr(
-    centroids: DataFrame,
-    vec_col: str,
-    nprobe: int,
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "centroid_vec",
-    coarse_nprobe: int = 2,
-) -> Column:
-    """The two-level analogue of ivf_assign_queries' sorted-slice
-    expansion: per row, the top-``nprobe`` (dist, cell) structs among
-    the fine centroids of the row's ``coarse_nprobe`` nearest coarse
-    groups — ~N·3·sqrt(C) distances instead of N·C, same narrow
-    zero-shuffle shape. Element 1 of the returned array is exactly
-    ivf_assign_two_level's cell (same tie-breaks), so one evaluation
-    serves both the index side (element_at 1) and the probe side
-    (explode) — the single-pass persist pattern the r11 bench
-    forced."""
-    rows = _centroid_rows(centroids, centroid_id, centroid_vec)
-    coarse, groups = two_level_structure(rows)
-    coarse_lit = F.expr(_rows_struct_sql(coarse))
-    entries = ", ".join(
-        f"{_cell_sql(co)}, {_rows_struct_sql(fines)}"
-        for co, fines in groups.items()
-    )
-    group_map = F.expr(f"map({entries})")
-    co_scored = F.transform(
-        coarse_lit,
-        lambda c: F.struct(
-            _sq_dist_to(vec_col, c["cvec"]).alias("dist"),
-            c["cell"].alias("cell"),
-        ),
-    )
-    probed_coarse = F.slice(F.array_sort(co_scored), 1, coarse_nprobe)
-    fines = F.flatten(
-        F.transform(
-            probed_coarse, lambda s: F.element_at(group_map, s["cell"])
-        )
-    )
-    fine_scored = F.transform(
-        fines,
-        lambda c: F.struct(
-            _sq_dist_to(vec_col, c["cvec"]).alias("dist"),
-            c["cell"].alias("cell"),
-        ),
-    )
-    return F.slice(F.array_sort(fine_scored), 1, nprobe)
 
 
 def _two_level_blas_payload(rows, coarse_nprobe: int) -> dict:
@@ -948,8 +800,8 @@ def _two_level_blas_payload(rows, coarse_nprobe: int) -> dict:
     one GEMM per coarse group instead of an interpreted HOF fold per
     (vector, centroid) pair. Fine cells are addressed by CODE = index
     into the cell-id-sorted row list, so (dist, code) ordering is
-    (dist, cell) ordering — the exact tie-break the SQL rule and the
-    DuckDB oracle use."""
+    (dist, cell) ordering — the exact tie-break the DuckDB oracle
+    uses."""
     import numpy as np
 
     coarse, groups = two_level_structure(rows)
@@ -1084,12 +936,13 @@ def two_level_cells_blas(
     coarse_nprobe: int = 2,
 ) -> DataFrame:
     """BLAS-batched two-level assignment: (id, vec, ``_cells``) where
-    ``_cells`` is each vector's top-``nprobe`` fine cells — element 1
-    is exactly :func:`ivf_assign_two_level`'s cell, the full array is
-    exactly the cell sequence of :func:`two_level_probe_expr`'s
-    sorted slice (same structure, same tie-breaks, proven by the
-    tolerance-refined kernel), so every existing two-level oracle
-    stays valid unchanged.
+    ``_cells`` is each vector's top-``nprobe`` fine cells among the
+    fine centroids of its ``coarse_nprobe`` nearest coarse groups, in
+    exact (dist, cell) order of the sequential fold (every prefix is
+    exact, by the tolerance-refined kernel). Element 1 is
+    :func:`ivf_assign_two_level`'s cell, so one evaluation serves
+    both the index side (element 1) and the probe side (explode) —
+    the single-pass persist pattern the r11 bench forced.
 
     Why this exists (r12 SCALE.md): the interpreted-HOF fold pays
     ~1 µs per (vector, centroid) distance, and with adaptive sizing
@@ -1159,15 +1012,14 @@ def flat_cells_blas(
     """BLAS-batched FLAT multiprobe assignment: (id, vec, ``_cells``)
     where ``_cells`` is each vector's top-``nprobe`` cells over the
     WHOLE centroid set in exact (dist, cell) order — the flat twin of
-    :func:`two_level_cells_blas`, with the same output contract as
-    the SQL ``slice(array_sort(transform(...)), 1, nprobe)`` probe
-    expression (element 1 == :func:`ivf_assign`'s cell).
+    :func:`two_level_cells_blas` (element 1 == :func:`ivf_assign`'s
+    cell).
 
-    Why it exists (r14): the SQL flat-multiprobe probe expression
-    pays an interpreted array_sort over C (dist, cell) structs PER
-    ROW on top of the N·C interpreted distances — measured 108 s of
-    q186's 123 s at sf10 (C=802) once everything downstream had gone
-    BLAS. One dgemm per Arrow batch computes the same distances
+    Why it exists (r14): the interpreted flat-multiprobe expression
+    (``slice(array_sort(transform(...)), 1, nprobe)``) paid an
+    array_sort over C (dist, cell) structs PER ROW on top of the N·C
+    interpreted distances — measured 108 s of q186's 123 s at sf10
+    (C=802) once everything downstream had gone BLAS. One dgemm per Arrow batch computes the same distances
     ~100x cheaper and a stable argsort (columns pre-ordered by cell
     id) reproduces the (dist, cell) tie-break.
 
@@ -1299,10 +1151,10 @@ def knn_score_topk_blas(
     Ordering parity notes: a NaN cosine (zero-norm vector) sorts
     FIRST under Spark's descending double order (NaN > +Inf), so the
     sort key maps NaN -> +Inf; self-pairs (qid == nid) are excluded
-    exactly as the SQL path's filter does.
+    as a same-cell join's ``_qid != _nid`` filter would.
 
     Scale: the cogroup is ONE exchange per side on the uniformly
-    hashed ``cell`` key — the same shuffle the SQL join paid — and
+    hashed ``cell`` key — the same shuffle a same-cell join pays — and
     each Arrow group is O(cell·nprobe) rows; query blocks of
     ``batch_rows`` cap the per-task score matrix at
     batch_rows × cell_size doubles."""
@@ -1401,7 +1253,7 @@ def neardup_pairs_blas(
     every double, so a NaN cosine passes the SQL ``>=`` and must
     reach the JVM filter here too). The caller applies the exact
     ``round(cos, 6) >= threshold`` JVM filter on the survivors, so
-    the OUTPUT is bit-identical to the SQL join formulation: any
+    the OUTPUT is bit-identical to a same-cell ``cosine()`` join: any
     pair with round-6 cosine >= t has raw cosine >= t - 5e-7, inside
     the 1e-6 margin — the margin only ever ADMITS extra candidates
     for the exact filter to kill.
@@ -1535,7 +1387,6 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    impl: str = "auto",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, IVF-cell blocked: the
     corpus is assigned to centroid cells, candidate pairs are
@@ -1545,52 +1396,24 @@ def embedding_neardup_pairs(
     missed; raise the centroid count or probe adjacent cells to
     tighten.
 
-    ``impl`` (r16): ``auto`` scores the same-cell pairs in the
-    fold-exact :func:`neardup_pairs_blas` kernel (one grouped
-    applyInPandas — ONE exchange, conservative in-kernel prefilter,
-    exact JVM round+threshold on survivors; output bit-identical to
-    the join formulation) — the pair stage was 41 of q46's 41 s at
-    sf10 on the interpreted HOF fold. ``sql`` keeps the equality
-    self-join + expression cosine (the parity yardstick).
+    The same-cell pairs are scored in the fold-exact
+    :func:`neardup_pairs_blas` kernel (one grouped applyInPandas, a
+    conservative in-kernel prefilter, then the exact JVM
+    round+threshold on the survivors) — the pair stage was 41 of
+    q46's 41 s at sf10 on the interpreted HOF fold.
 
-    Scale (both paths): one shuffle keyed on ``cell``; cells are the
-    skew knob (more centroids = smaller buckets). Emits each pair
-    once (id1 < id2)."""
-    if _resolve_impl(impl) == "blas":
-        assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-        pairs = neardup_pairs_blas(
-            assigned, threshold, id_col=id_col, vec_col=vec_col
-        )
-        return pairs.select(
-            "id1",
-            "id2",
-            F.round(F.col("_cos"), 6).alias("cosine"),
-        ).filter(F.col("cosine") >= threshold)
-    from pyspark.storagelevel import StorageLevel
-
-    # persist: the self-join would otherwise re-scan the corpus and
-    # recompute the C-distance assignment map once per side. Norm
-    # precomputed per vector, not per pair (see semantic_dedup).
-    assigned = (
-        ivf_assign(corpus, centroids, id_col, vec_col, impl="sql")
-        .withColumn("_norm", l2_norm(F.col(vec_col)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    Scale: one shuffle keyed on ``cell``; cells are the skew knob
+    (more centroids = smaller buckets). Emits each pair once
+    (id1 < id2)."""
+    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
+    pairs = neardup_pairs_blas(
+        assigned, threshold, id_col=id_col, vec_col=vec_col
     )
-    track(assigned)
-    a = assigned.select(
-        F.col(id_col).alias("id1"), F.col(vec_col).alias("v1"),
-        F.col("_norm").alias("_n1"), "cell",
-    )
-    b = assigned.select(
-        F.col(id_col).alias("id2"), F.col(vec_col).alias("v2"),
-        F.col("_norm").alias("_n2"), "cell",
-    )
-    pairs = a.join(b, "cell").filter(F.col("id1") < F.col("id2"))
-    cos = _dot(F.col("v1"), F.col("v2")) / (F.col("_n1") * F.col("_n2"))
-    return (
-        pairs.select("id1", "id2", F.round(cos, 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    return pairs.select(
+        "id1",
+        "id2",
+        F.round(F.col("_cos"), 6).alias("cosine"),
+    ).filter(F.col("cosine") >= threshold)
 
 
 def knn_graph(
@@ -1601,7 +1424,6 @@ def knn_graph(
     k: int = 4,
     nprobe: int = 1,
     two_level: bool = False,
-    assign_impl: str = "auto",
     coarse_nprobe: int = 2,
     cells_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -1614,8 +1436,8 @@ def knn_graph(
     ``nprobe=1`` is the classic single-probe blocking (same recall
     trade as :func:`embedding_neardup_pairs`: neighbors across a cell
     boundary are missed). ``nprobe>1`` probes each vector's next-
-    nearest cells too (the :func:`ivf_assign_queries` sorted-slice
-    expansion — zero extra shuffles on the probe side), recovering
+    nearest cells too (the top-``nprobe`` cell slice of one narrow
+    assignment pass — zero extra shuffles on the probe side), recovering
     exactly the boundary-straddling neighbors single-probe drops;
     recall is monotone in nprobe because the probe set always
     contains the own cell. A candidate pair is never duplicated:
@@ -1626,15 +1448,15 @@ def knn_graph(
     sum(cell²)``-bounded, never the O(n²) cross product, and the
     adaptive-centroid convention keeps cell size bounded, so
     candidates stay ~``N·nprobe·cell_size``. One shuffle on ``cell``
-    for the join, one on ``id1`` for the per-vector rank window
-    (both uniformly hashed keys) — identical plan shape at any
-    nprobe.
+    for the :func:`knn_score_topk_blas` cogroup, one on the query id
+    for the per-vector rank window (both uniformly hashed keys) —
+    identical plan shape at any nprobe.
 
     ``cells_df`` (r16): a PRECOMPUTED (and typically caller-persisted)
     :func:`two_level_cells_blas` relation to use instead of running
     the assignment pass again — for sweep callers (q204) that already
     materialized the probe slice for their own bookkeeping. Only
-    valid on the two-level multi-probe BLAS path; the `_cells` array
+    valid on the two-level multi-probe path; the `_cells` array
     must be in the kernel's (dist, cell) slice order (a prefix slice
     of a wider-nprobe pass is exactly that, because for a fixed
     coarse union top-n is a prefix of top-m, n <= m, under the
@@ -1648,142 +1470,69 @@ def knn_graph(
 
     from pyspark.storagelevel import StorageLevel
 
-    if cells_df is not None and not (
-        two_level and nprobe > 1 and _resolve_impl(assign_impl) == "blas"
-    ):
-        raise ValueError(
-            "cells_df requires the two-level multi-probe BLAS path"
-        )
+    if cells_df is not None and not (two_level and nprobe > 1):
+        raise ValueError("cells_df requires the two-level multi-probe path")
     if nprobe == 1:
         # two_level routes the cell assignment through the
         # ivf_assign_two_level quantizer (N·2·sqrt(C) distances
-        # instead of N·C; assign_impl picks the BLAS or SQL kernel —
-        # identical cells either way) — the join/rank plan downstream
-        # is identical; only the cell labels differ.
+        # instead of N·C) — the scoring downstream is identical; only
+        # the cell labels differ.
         if two_level:
             assigned = ivf_assign_two_level(
                 corpus, centroids, id_col, vec_col,
-                coarse_nprobe=coarse_nprobe, impl=assign_impl,
+                coarse_nprobe=coarse_nprobe,
             )
         else:
-            assigned = ivf_assign(
-                corpus, centroids, id_col, vec_col, impl=assign_impl
-            )
-        assigned = (
-            assigned
-            .withColumn("_norm", l2_norm(F.col(vec_col)))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+            assigned = ivf_assign(corpus, centroids, id_col, vec_col)
+        assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
         track(assigned)
         a = assigned.select(
-            F.col(id_col).alias("_qid"), F.col(vec_col).alias("v1"),
-            F.col("_norm").alias("_n1"), "cell",
+            F.col(id_col).alias("_qid"), F.col(vec_col).alias("_v"), "cell"
         )
         b = assigned.select(
-            F.col(id_col).alias("_nid"), F.col(vec_col).alias("v2"),
-            F.col("_norm").alias("_n2"), "cell",
+            F.col(id_col).alias("_nid"), F.col(vec_col).alias("_v"), "cell"
         )
     else:
         # ONE narrow pass computes each vector's top-nprobe cell list
-        # (sorted (dist, cell) slice — the ivf_assign_queries
-        # expansion) and BOTH join sides read the persisted result:
-        # the index side takes element 1 (== ivf_assign's array_min,
-        # same tie-break), the probe side explodes the list. The
-        # r11 bench caught the naive form paying the C-distance
-        # transform twice (separate ivf_assign + ivf_assign_queries
-        # scans): 9.9 s -> this single-pass shape at sf0.1.
+        # in exact (dist, cell) order and BOTH join sides read the
+        # persisted result: the index side takes element 1 (== the
+        # single-probe assignment, same tie-break), the probe side
+        # explodes the list. The r11 bench caught the naive form
+        # paying the C-distance scan twice (separate assignment and
+        # probe scans): 9.9 s -> this single-pass shape at sf0.1.
         cid, cvec = (
             ("cell", "cell_vec")
             if "cell" in centroids.columns
             else ("centroid_id", "centroid_vec")
         )
-        cell_type = centroids.schema[cid].dataType.simpleString()
-        if two_level and _resolve_impl(assign_impl) == "blas":
-            # BLAS kernel: _cells is already the bare cell array in
-            # exact (dist, cell) slice order — same contract as the
-            # SQL probe expr (element 1 == ivf_assign_two_level's
-            # cell), ~100x cheaper per distance. _norm stays a JVM
-            # l2_norm so the cosine arithmetic downstream is
-            # bit-identical to every other kNN path.
-            assigned = (
-                cells_df
-                if cells_df is not None
-                else two_level_cells_blas(
-                    corpus, centroids, id_col, vec_col, cid, cvec,
-                    nprobe=nprobe, coarse_nprobe=coarse_nprobe,
-                )
-            ).withColumn("_norm", l2_norm(F.col(vec_col)))
-            probe_cell = lambda c: c  # noqa: E731 — bare cells
-        elif _resolve_impl(assign_impl) == "blas":
-            # FLAT multiprobe on the BLAS kernel (r14): the SQL probe
-            # expression's per-row array_sort over C structs was 108
-            # of q186's 123 s at sf10 — flat_cells_blas keeps the
-            # identical (dist, cell) slice contract.
+        if cells_df is not None:
+            assigned = cells_df
+        elif two_level:
+            assigned = two_level_cells_blas(
+                corpus, centroids, id_col, vec_col, cid, cvec,
+                nprobe=nprobe, coarse_nprobe=coarse_nprobe,
+            )
+        else:
             assigned = flat_cells_blas(
                 corpus, centroids, id_col, vec_col, cid, cvec,
                 nprobe=nprobe,
-            ).withColumn("_norm", l2_norm(F.col(vec_col)))
-            probe_cell = lambda c: c  # noqa: E731 — bare cells
-        else:
-            if two_level:
-                # same sorted-slice contract, fine candidates drawn
-                # from the coarse_nprobe=2 nearest coarse groups'
-                # union — element 1 still equals
-                # ivf_assign_two_level's cell.
-                probed = two_level_probe_expr(
-                    centroids, vec_col, nprobe, cid, cvec,
-                    coarse_nprobe=coarse_nprobe,
-                )
-            else:
-                cells = _centroid_literal(centroids, cid, cvec)
-                scored = F.transform(
-                    cells,
-                    lambda c: F.struct(
-                        _sq_dist_to(vec_col, c["cvec"]).alias("dist"),
-                        c["cell"].alias("cell"),
-                    ),
-                )
-                probed = F.slice(F.array_sort(scored), 1, nprobe)
-            assigned = corpus.select(
-                F.col(id_col),
-                F.col(vec_col),
-                l2_norm(F.col(vec_col)).alias("_norm"),
-                probed.alias("_cells"),
             )
-            probe_cell = lambda c: c["cell"]  # noqa: E731 — structs
         if cells_df is None:
             assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
             track(assigned)
         b = assigned.select(
-            F.col(id_col).alias("_nid"), F.col(vec_col).alias("v2"),
-            F.col("_norm").alias("_n2"),
-            probe_cell(F.element_at(F.col("_cells"), 1))
-            .cast(cell_type)
-            .alias("cell"),
+            F.col(id_col).alias("_nid"), F.col(vec_col).alias("_v"),
+            F.element_at(F.col("_cells"), 1).alias("cell"),
         )
         a = assigned.select(
-            F.col(id_col).alias("_qid"), F.col(vec_col).alias("v1"),
-            F.col("_norm").alias("_n1"),
-            F.explode_outer(F.col("_cells")).alias("_p"),
-        ).select(
-            "_qid", "v1", "_n1",
-            probe_cell(F.col("_p")).cast(cell_type).alias("cell"),
+            F.col(id_col).alias("_qid"), F.col(vec_col).alias("_v"),
+            F.explode_outer(F.col("_cells")).alias("cell"),
         )
-    if _resolve_impl(assign_impl) == "blas":
-        # fold-exact numpy scoring + per-cell top-k: the global rank
-        # window below sees N·nprobe·k rows instead of the full
-        # candidate relation, and every _cos is bit-identical to the
-        # SQL expression (knn_score_topk_blas docstring), so the
-        # ranks — and every downstream oracle — are unchanged.
-        scored = knn_score_topk_blas(
-            a.select("_qid", F.col("v1").alias("_v"), "cell"),
-            b.select("_nid", F.col("v2").alias("_v"), "cell"),
-            k=k,
-        )
-    else:
-        pairs = a.join(b, "cell").filter(F.col("_qid") != F.col("_nid"))
-        cos = _dot(F.col("v1"), F.col("v2")) / (F.col("_n1") * F.col("_n2"))
-        scored = pairs.select("_qid", "_nid", cos.alias("_cos"))
+    # fold-exact numpy scoring + per-cell top-k: the global rank
+    # window below sees N·nprobe·k rows instead of the full candidate
+    # relation, and every _cos is bit-identical to the _dot / l2_norm
+    # expression (knn_score_topk_blas docstring).
+    scored = knn_score_topk_blas(a, b, k=k)
     w = Window.partitionBy("_qid").orderBy(
         F.col("_cos").desc(), F.col("_nid")
     )
@@ -1808,7 +1557,6 @@ def knn_flat_probe_legs(
     vec_col: str = "embedding",
     k: int = 4,
     nprobe: int = 6,
-    assign_impl: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Both legs of the FLAT-family recall audit (single-probe and
     ``nprobe``-multiprobe top-k for the vectors matching
@@ -1838,37 +1586,19 @@ def knn_flat_probe_legs(
         if "cell" in centroids.columns
         else ("centroid_id", "centroid_vec")
     )
-    cell_type = centroids.schema[cid].dataType.simpleString()
-    if _resolve_impl(assign_impl) == "blas":
-        assigned = flat_cells_blas(
+    assigned = (
+        flat_cells_blas(
             corpus, centroids, id_col, vec_col, cid, cvec, nprobe=nprobe
-        ).withColumn("_norm", l2_norm(F.col(vec_col)))
-        probe_cell = lambda c: c  # noqa: E731 — bare cells
-    else:
-        cells = _centroid_literal(centroids, cid, cvec)
-        scored = F.transform(
-            cells,
-            lambda c: F.struct(
-                _sq_dist_to(vec_col, c["cvec"]).alias("dist"),
-                c["cell"].alias("cell"),
-            ),
         )
-        assigned = corpus.select(
-            F.col(id_col),
-            F.col(vec_col),
-            l2_norm(F.col(vec_col)).alias("_norm"),
-            F.slice(F.array_sort(scored), 1, nprobe).alias("_cells"),
-        )
-        probe_cell = lambda c: c["cell"]  # noqa: E731 — structs
-    assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("_norm", l2_norm(F.col(vec_col)))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     track(assigned)
     b = assigned.select(
         F.col(id_col).alias("_nid"),
         F.col(vec_col).alias("v2"),
         F.col("_norm").alias("_n2"),
-        probe_cell(F.element_at(F.col("_cells"), 1))
-        .cast(cell_type)
-        .alias("cell"),
+        F.element_at(F.col("_cells"), 1).alias("cell"),
     )
     qa = assigned.filter(query_pred)
 
@@ -1895,9 +1625,7 @@ def knn_flat_probe_legs(
             F.col(id_col).alias("_qid"),
             F.col(vec_col).alias("v1"),
             F.col("_norm").alias("_n1"),
-            probe_cell(F.element_at(F.col("_cells"), 1))
-            .cast(cell_type)
-            .alias("cell"),
+            F.element_at(F.col("_cells"), 1).alias("cell"),
         )
     )
     multi = _leg(
@@ -1905,10 +1633,7 @@ def knn_flat_probe_legs(
             F.col(id_col).alias("_qid"),
             F.col(vec_col).alias("v1"),
             F.col("_norm").alias("_n1"),
-            F.explode_outer(F.col("_cells")).alias("_p"),
-        ).select(
-            "_qid", "v1", "_n1",
-            probe_cell(F.col("_p")).cast(cell_type).alias("cell"),
+            F.explode_outer(F.col("_cells")).alias("cell"),
         )
     )
     return single, multi
@@ -2194,7 +1919,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    impl: str = "auto",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): cluster embeddings,
@@ -2209,78 +1933,28 @@ def semantic_dedup(
     exactly reproducible by the SQL oracle.
 
     Scale: identical shape to ``embedding_neardup_pairs`` — narrow
-    centroid-literal assignment, ONE shuffle on ``cell`` for the
-    self-join (cells bound the pair fan-out; centroid count is the
-    skew knob), then a distinct on the dropped-id column and a
+    assignment, then the same-cell pairs are scored in the fold-exact
+    :func:`neardup_pairs_blas` kernel on ONE shuffle keyed by
+    ``cell`` (cells bound the pair fan-out; centroid count is the
+    skew knob), and the dropped set is derived from its survivors
+    (exact JVM round+threshold after the kernel's conservative
+    margin), followed by a distinct on the dropped-id column and a
     same-key anti-join-style flag join. Never all-pairs.
-
-    ``impl`` (r16): ``auto`` scores the same-cell pairs in the
-    fold-exact :func:`neardup_pairs_blas` kernel and derives the
-    dropped set from its survivors (exact JVM round+threshold after
-    the kernel's conservative margin — output bit-identical to the
-    join formulation, same contract as ``embedding_neardup_pairs``);
-    ``sql`` keeps the expression-cosine self-join as the parity
-    yardstick.
 
     Returns (id_col, cell, kept) for every input vector.
     """
     from pyspark.storagelevel import StorageLevel
 
-    if _resolve_impl(impl) == "blas":
-        assigned = ivf_assign(corpus, centroids, id_col, vec_col).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        track(assigned)
-        dropped = (
-            neardup_pairs_blas(
-                assigned, threshold, id_col=id_col, vec_col=vec_col
-            )
-            .filter(F.round(F.col("_cos"), 6) >= threshold)
-            .select(F.col("id2").alias(id_col))
-            .distinct()
-            .withColumn("_dropped", F.lit(True))
-        )
-        return (
-            assigned.select(id_col, "cell")
-            .join(dropped, id_col, "left")
-            .select(
-                id_col,
-                "cell",
-                F.col("_dropped").isNull().alias("kept"),
-            )
-        )
-
-    # Per-vector norm computed ONCE before the self-join (the naive
-    # per-pair l2_norm doubles the interpreted HOF work on every one
-    # of the O(sum cell^2) candidate pairs; dividing by the product of
-    # the precomputed doubles is bit-identical arithmetic).
-    assigned = (
-        ivf_assign(corpus, centroids, id_col, vec_col, impl="sql")
-        .withColumn("_norm", l2_norm(F.col(vec_col)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    assigned = ivf_assign(corpus, centroids, id_col, vec_col).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     track(assigned)
-    a = assigned.select(
-        F.col(id_col).alias("_id1"),
-        F.col(vec_col).alias("_v1"),
-        F.col("_norm").alias("_n1"),
-        "cell",
-    )
-    b = assigned.select(
-        F.col(id_col).alias("_id2"),
-        F.col(vec_col).alias("_v2"),
-        F.col("_norm").alias("_n2"),
-        "cell",
-    )
-    cos = _dot(F.col("_v1"), F.col("_v2")) / (F.col("_n1") * F.col("_n2"))
     dropped = (
-        a.join(b, "cell")
-        .filter(F.col("_id1") < F.col("_id2"))
-        # round BEFORE thresholding, like embedding_neardup_pairs: the
-        # oracle compares rounded cosines, and a vector sitting exactly
-        # on the boundary must fall on the same side in both engines.
-        .filter(F.round(cos, 6) >= threshold)
-        .select(F.col("_id2").alias(id_col))
+        neardup_pairs_blas(
+            assigned, threshold, id_col=id_col, vec_col=vec_col
+        )
+        .filter(F.round(F.col("_cos"), 6) >= threshold)
+        .select(F.col("id2").alias(id_col))
         .distinct()
         .withColumn("_dropped", F.lit(True))
     )

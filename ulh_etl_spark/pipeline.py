@@ -311,7 +311,9 @@ def archive_files(
     the run id embedded in the archived name (the reference's ADF
     rename expression, archive_inbound_files.json:91). Moves run on a
     driver thread pool — the ADF ForEach ``batchCount: 10`` analog
-    (:15-16); renames are metadata ops, so threads, not tasks."""
+    (:15-16); renames are metadata ops, so threads, not tasks. A move
+    that fails raises, naming the files left in place: an unarchived
+    file is re-listed and re-appended to RAW by the next run."""
     from concurrent.futures import ThreadPoolExecutor
 
     base = entry.source.directory.rstrip("/")
@@ -327,7 +329,10 @@ def archive_files(
     if not jobs:
         return
     with ThreadPoolExecutor(max_workers=min(parallelism, len(jobs))) as pool:
-        list(pool.map(_move, jobs))
+        moved = list(pool.map(_move, jobs))
+    stuck = [f.name for (f, _), ok in zip(jobs, moved) if not ok]
+    if stuck:
+        raise RuntimeError(f"archive move failed for: {', '.join(stuck)}")
 
 
 # ------------------------------------------------------------- entrypoints
