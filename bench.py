@@ -4,15 +4,23 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
 Each query is forced end-to-end with a noop sink (full materialization
 — count() would let Catalyst prune the measured work away).
+
+The timing core below (``min_wall`` and its helpers) is the one pass
+loop of the repo: tools/bench_subset.py, tools/probe_fanout.py and
+tools/scale_probe.py import it, so every tool measures by the same
+rule — min of N consecutive passes, each from an empty cache.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import sys
 import time
+from functools import partial
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -517,9 +525,9 @@ ANCHOR = {
     "q138_kcenter_coreset": 0.944,
     # q139 re-anchored r15 to the MEDIAN of the three quiet-host
     # floor-1.00 readings (0.301 r12, 0.336 r13, 0.362 r14) per
-    # ADVICE r14, after a root-cause pass (tools/profile_q139.py,
-    # SCALE.md "q139 creep adjudication"): the final stages AQE-
-    # coalesce to 1 partition, so wall time is fixed scheduler+JIT
+    # ADVICE r14, after a root-cause pass (SCALE.md "q139 creep
+    # adjudication"): the final stages AQE-coalesce to 1
+    # partition, so wall time is fixed scheduler+JIT
     # overhead, not data work — an idle-host aged-session min-of-5
     # read 0.338 (vs 0.586 fresh-JVM, JIT still converging; GC delta
     # 15 ms), i.e. the "creep" is the +/-0.03 s scheduler band, not
@@ -545,32 +553,69 @@ ANCHOR = {
 FLOOR_ANCHOR_S = 0.27
 
 
-def _measure_floor(spark, sf_dir: str) -> float:
-    """Min-of-3 warm wall time of a fully materialized raw lineitem
-    scan — pure I/O + row shipping, no query logic, the yardstick
-    every anchor ratio is normalized by."""
-    path = os.path.join(sf_dir, "lineitem.parquet")
-    best = None
-    for _pass in range(4):  # pass 0 = warm-up (page cache, codegen)
-        t0 = time.time()
-        spark.read.parquet(path).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = time.time() - t0
-        if _pass and (best is None or dt < best):
-            best = dt
-    return round(best, 3)
+# --- timing core: the one pass loop bench.py and tools/*.py share ---
 
 
-def main() -> None:
-    # Bench-scoped (NOT a library default): shuffle/spill on tmpfs to
-    # shed this host's sporadic multi-second disk stalls (BASELINE.md
-    # host note). sf0.1 shuffle volumes are far below /dev/shm
-    # capacity; arbitrary workloads keep the disk default.
+def use_shm_local_dir() -> None:
+    """Bench-scoped (NOT a library default): shuffle/spill on tmpfs to
+    shed this host's sporadic multi-second disk stalls (BASELINE.md
+    host note). sf0.1 shuffle volumes are far below /dev/shm
+    capacity; arbitrary workloads keep the disk default. Call before
+    the session starts."""
     if "SPARK_GRAFT_LOCAL_DIR" not in os.environ and os.path.isdir("/dev/shm"):
         os.makedirs("/dev/shm/spark-local", exist_ok=True)
         os.environ["SPARK_GRAFT_LOCAL_DIR"] = "/dev/shm/spark-local"
 
+
+def release(spark) -> None:
+    """Drop every persisted intermediate: the ones the engine
+    track()ed and anything else in the session's cache."""
+    release_persisted()
+    spark.catalog.clearCache()
+
+
+def noop_write(df) -> None:
+    """Force full materialization — count() would let Catalyst prune
+    the measured work away."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def min_wall(spark, build: Callable, passes: int = 3) -> float:
+    """Min wall seconds of ``passes`` consecutive timed passes of
+    ``noop_write(build())``. Construction stays inside the window:
+    iterative operators run their driver loop eagerly when the query
+    function is called.
+
+    Every pass starts from an empty cache, so a pass pays for its own
+    persisted intermediates instead of reading the blocks an earlier
+    pass cached (q206 at sf0.1 on a 4-vCPU VM: 1.0-1.2 s reusing vs
+    2.6-2.8 s paying). The cache is released again on the way out —
+    also when the build or the write raises — because catalog queries
+    never unpersist, and stale blocks squeeze execution memory for
+    whatever runs next (q38: 6.5 s late in a suite vs 1.1 s alone)."""
+    best = math.inf
+    try:
+        for _pass in range(passes):
+            release(spark)
+            t0 = time.perf_counter()
+            noop_write(build())
+            best = min(best, time.perf_counter() - t0)
+    finally:
+        release(spark)
+    return best
+
+
+def _measure_floor(spark, sf_dir: str) -> float:
+    """Min-of-3 warm wall time of a fully materialized raw lineitem
+    scan — pure I/O + row shipping, no query logic, the yardstick
+    every anchor ratio is normalized by."""
+    scan = partial(spark.read.parquet, os.path.join(sf_dir, "lineitem.parquet"))
+    noop_write(scan())  # warm-up (page cache, codegen)
+    return round(min_wall(spark, scan), 3)
+
+
+def main() -> None:
+    use_shm_local_dir()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
@@ -590,17 +635,9 @@ def main() -> None:
     errors: dict[str, str] = {}
     for name in HEADLINE:
         try:
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            noop_write(qs[name](spark, sf_dir))
         except Exception as ex:  # noqa: BLE001 — record and keep going
             errors[name] = str(ex).splitlines()[0][:300]
-
-    # Each catalog query persists its own intermediates (gram sets,
-    # band tables) and never unpersists — after 14 queries the stale
-    # blocks fill storage memory and squeeze execution memory for
-    # later queries (measured: q38 6.5 s late in the suite vs 1.1 s
-    # alone). Clear between queries so each pays only its own cache.
-    release_persisted()
-    spark.catalog.clearCache()
 
     # Three CONSECUTIVE measured passes per query, keep the MIN:
     # (a) the host shows sporadic multi-second I/O stalls (BASELINE.md
@@ -617,23 +654,10 @@ def main() -> None:
     for name in HEADLINE:
         if name in errors:
             continue
-        best = None
         try:
-            for _pass in range(3):
-                t0 = time.time()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = round(time.time() - t0, 3)
-                best = dt if best is None or dt < best else best
+            timings[name] = round(min_wall(spark, partial(qs[name], spark, sf_dir)), 3)
         except Exception as ex:  # noqa: BLE001
             errors[name] = str(ex).splitlines()[0][:300]
-            continue
-        finally:
-            # finally, not after the loop: a throwing query must not
-            # leak its cached intermediates into the next query's
-            # timed passes.
-            release_persisted()
-            spark.catalog.clearCache()
-        timings[name] = best
 
     total = round(sum(timings.values()), 3)
     floor_s = _measure_floor(spark, sf_dir)
@@ -734,25 +758,13 @@ def main() -> None:
         for fl in flags[:12]:
             name = fl["q"]
             base = ANCHOR[name]
-            release_persisted()
-            spark.catalog.clearCache()
-            best = None
             try:
-                for _pass in range(3):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    dt = time.time() - t0
-                    best = dt if best is None or dt < best else best
+                best = min_wall(spark, partial(qs[name], spark, sf_dir))
             except Exception as ex:  # noqa: BLE001
                 adjudications.append(
                     {"q": name, "verdict": "error",
                      "err": str(ex).splitlines()[0][:120]})
                 continue
-            finally:
-                release_persisted()
-                spark.catalog.clearCache()
             net2 = (best / base) / fr2
             adjudications.append({
                 "q": name,

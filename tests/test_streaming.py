@@ -149,12 +149,12 @@ def test_streaming_sliding_windows(spark, tmp_path):
     }
 
 
-def test_dedup_within_watermark_stream(spark, tmp_path):
+def test_dedup_within_watermark_drops_in_batch_duplicate(spark, tmp_path):
     """Duplicate keys within the watermark horizon are dropped;
     state is watermark-bounded (the production streaming dedup)."""
     import os
 
-    from ulh_etl_spark.streaming.stateful import dedup_within_watermark
+    from ulh_etl_spark.streaming.windows import dedup_within_watermark
 
     src = tmp_path / "dups"
     src.mkdir()

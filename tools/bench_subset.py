@@ -1,8 +1,8 @@
 """Dedicated min-of-N noop-sink timing for a subset of catalog
-queries — the adjudication harness for optimization work: same
-methodology as bench.py's measured passes (warmup pass, consecutive
-min-of-N, release_persisted between queries, /dev/shm shuffle dirs)
-without dragging the whole 169-query suite along.
+queries — the adjudication harness for optimization work. It times
+with bench.py's own core (``min_wall``: consecutive passes, each from
+an empty cache, /dev/shm shuffle dirs) after one warm-up pass per
+query, without dragging the whole 169-query suite along.
 
 Usage: python tools/bench_subset.py [--passes N] <query> [...]
 """
@@ -10,17 +10,13 @@ from __future__ import annotations
 
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ulh_etl_spark.cache import release_persisted
+from bench import min_wall, noop_write, use_shm_local_dir
 from ulh_etl_spark.queries import all_queries
 from ulh_etl_spark.session import get_spark
-
-if "SPARK_GRAFT_LOCAL_DIR" not in os.environ and os.path.isdir("/dev/shm"):
-    os.makedirs("/dev/shm/spark-local", exist_ok=True)
-    os.environ["SPARK_GRAFT_LOCAL_DIR"] = "/dev/shm/spark-local"
 
 args = sys.argv[1:]
 passes = 3
@@ -28,23 +24,15 @@ if args and args[0] == "--passes":
     passes = int(args[1])
     args = args[2:]
 
+use_shm_local_dir()
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_spark("bench-subset")
 qs = all_queries()
 
 for name in args:
-    fn = qs[name]
+    build = partial(qs[name], spark, sf_dir)
     spark.sparkContext.setJobDescription(f"warmup {name}")
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    release_persisted()
-    spark.catalog.clearCache()
-    best = None
-    for p in range(passes):
-        spark.sparkContext.setJobDescription(f"{name} pass {p}")
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-        release_persisted()
-        spark.catalog.clearCache()
+    noop_write(build())
+    spark.sparkContext.setJobDescription(name)
+    best = min_wall(spark, build, passes)
     print(f"{name:42s} {best:7.3f}s", flush=True)

@@ -12,16 +12,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-if "SPARK_GRAFT_LOCAL_DIR" not in os.environ and os.path.isdir("/dev/shm"):
-    os.makedirs("/dev/shm/spark-local", exist_ok=True)
-    os.environ["SPARK_GRAFT_LOCAL_DIR"] = "/dev/shm/spark-local"
-
+from bench import min_wall, noop_write, release, use_shm_local_dir
 from ulh_etl_spark import session as S
-from ulh_etl_spark.cache import release_persisted
 from ulh_etl_spark.queries import all_queries
 from ulh_etl_spark.session import get_spark
 
@@ -31,6 +27,7 @@ if args and args[0] == "--passes":
     passes = int(args[1])
     args = args[2:]
 
+use_shm_local_dir()
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_spark("probe-fanout")
 qs = all_queries()
@@ -57,30 +54,17 @@ for m in pkgutil.iter_modules(QP.__path__):
         mod.load_table = _patched
 
 
-def timed(fn):
-    best = None
-    for p in range(passes):
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-        release_persisted()
-        spark.catalog.clearCache()
-    return best
-
-
 print(f"{'query':42s} {'stock':>8s} {'spread':>8s} {'ratio':>6s}")
 for name in args:
-    fn = qs[name]
+    build = partial(qs[name], spark, sf_dir)
     # warmup both shapes
     for on in (False, True):
         _spread["on"] = on
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        release_persisted()
-        spark.catalog.clearCache()
+        noop_write(build())
+        release(spark)
     _spread["on"] = False
-    a = timed(fn)
+    a = min_wall(spark, build, passes)
     _spread["on"] = True
-    b = timed(fn)
+    b = min_wall(spark, build, passes)
     _spread["on"] = False
     print(f"{name:42s} {a:8.3f} {b:8.3f} {b/a:6.2f}", flush=True)

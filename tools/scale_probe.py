@@ -22,11 +22,15 @@ import json
 import math
 import os
 import sys
-import time
+from functools import partial
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from pyspark.sql import Observation  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from bench import min_wall, noop_write  # noqa: E402
 from ulh_etl_spark.queries import all_queries  # noqa: E402
 from ulh_etl_spark.session import get_spark  # noqa: E402
 
@@ -49,20 +53,6 @@ HEAVY = [
 ]
 
 
-def timed(fn, spark, sf_dir) -> tuple[float, int]:
-    # noop sink, not count(): count lets Catalyst prune projection
-    # work out of the measurement (bench.py's rationale — q142's
-    # clean_text rebuild is 4x the pruned plan). Query CONSTRUCTION
-    # stays inside the window: iterative operators (components
-    # fixpoint, kmeans, BPE) run their driver loop eagerly when the
-    # query function is called.
-    t0 = time.time()
-    df = fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    return dt, df.count()
-
-
 def main() -> int:
     names = sys.argv[1:] or HEAVY
     qs = all_queries()
@@ -73,21 +63,23 @@ def main() -> int:
     except (OSError, ValueError):
         out = {}
     for name in names:
-        fn = qs[name]
-        # isolate queries like bench.py does: without this, queries
-        # sharing a persisted subplan (the graph family's kNN build)
-        # read the PREVIOUS query's cache via CacheManager plan
-        # matching — the r12 sf10 run measured q186 at 0.74 s because
-        # q160 had just cached the same multiprobe kNN (real cold
-        # cost ~10x). Each probe should pay its own full plan.
-        from ulh_etl_spark.cache import release_persisted
-
-        release_persisted()
-        spark.catalog.clearCache()
+        # min_wall starts every pass from an empty cache: without
+        # that, queries sharing a persisted subplan (the graph
+        # family's kNN build) read the PREVIOUS query's cache via
+        # CacheManager plan matching — the r12 sf10 run measured q186
+        # at 0.74 s because q160 had just cached the same multiprobe
+        # kNN (real cold cost ~10x). Each probe pays its own full plan.
+        # The sf1 row count rides the timed write via observe().
+        rows = Observation()
         try:
-            timed(fn, spark, SF01)  # warm (codegen + page cache)
-            t01 = min(timed(fn, spark, SF01)[0], timed(fn, spark, SF01)[0])
-            t1, n1 = timed(fn, spark, SF1)
+            noop_write(qs[name](spark, SF01))  # warm (codegen + page cache)
+            t01 = min_wall(spark, partial(qs[name], spark, SF01), passes=2)
+            t1 = min_wall(
+                spark,
+                lambda: qs[name](spark, SF1).observe(rows, F.count(F.lit(1)).alias("n")),
+                passes=1,
+            )
+            n1 = rows.get["n"]
         except Exception as e:  # missing sf1 table etc.: skip, keep rest
             print(f"{name:34s} ERROR {e}")
             continue

@@ -25,12 +25,11 @@ from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ulh_etl_spark.config import IngestEntry, Practice
+from ulh_etl_spark.pipeline import write_raw
 from ulh_etl_spark.sinks.logs import append_log
-from ulh_etl_spark.sinks.tables import write_table
 from ulh_etl_spark.sources.http import (
     Transport,
     entity_fanout_source,
@@ -142,17 +141,7 @@ def run_api_practice(
             if df.isEmpty():
                 rpt.endpoints.append(EndpointResult(entry.name, "SUCCESS", 0))
                 continue
-            df = (
-                df.withColumn("file_load_time", F.current_timestamp())
-                .withColumn("PARENT_RUN_ID", F.lit(rid))
-                .withColumn("IS_NEW", F.lit(1) if entry.refined_table else F.lit(0))
-            )
-            # the row count rides the write (as in pipeline.stage_raw);
-            # re-reading RAW would scan the whole, growing table
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            write_table(df, entry.raw_table, mode="append")
-            n = int(obs.get["rows"])
+            n = write_raw(df, entry, rid)
             rpt.endpoints.append(EndpointResult(entry.name, "SUCCESS", n))
             append_log(
                 spark, "RAW", new_run_id(), rid, practice.practice_name,

@@ -612,13 +612,13 @@ def _centroid_literal(
     )
 
 
-def _sq_dist_to(vec_col: str, cvec: Column) -> Column:
-    """Squared L2 distance from ``vec_col`` to a (literal) centroid
-    vector — identical double-arithmetic order to the previous join
-    formulation and to the DuckDB oracle, so hashes are bit-stable."""
+def _sq_dist(vec: Column, cvec: Column) -> Column:
+    """Squared L2 between two array columns/literals — one sequential
+    left-to-right double fold, the same arithmetic order as DuckDB's
+    ``list_sum`` oracle, so hashes are bit-stable."""
     return F.aggregate(
         F.zip_with(
-            F.col(vec_col),
+            vec,
             cvec,
             lambda x, y: (x.cast("double") - y.cast("double"))
             * (x.cast("double") - y.cast("double")),
@@ -675,7 +675,7 @@ def _py_md5h32(s: str) -> int:
 
 
 def _py_sqdist(a, b) -> float:
-    """Driver-side twin of _sq_dist_to: sequential left-to-right
+    """Driver-side twin of _sq_dist: sequential left-to-right
     double fold in index order, bit-identical to the Spark
     F.aggregate and the DuckDB list_sum over generate_series."""
     acc = 0.0
@@ -2164,7 +2164,7 @@ def ivf_assign_queries(
     scored = F.transform(
         cells,
         lambda c: F.struct(
-            _sq_dist_to(vec_col, c["cvec"]).alias("dist"),
+            _sq_dist(F.col(vec_col), c["cvec"]).alias("dist"),
             c["cell"].alias("cell"),
         ),
     )
@@ -2226,22 +2226,6 @@ def ivf_probe_pruned(
 
 
 # ---------------------------------------------------- product quantization
-
-
-def _sq_dist(vec: Column, cvec: Column) -> Column:
-    """Squared L2 between two array columns/literals — same sequential
-    double fold as ``_sq_dist_to`` so DuckDB's ``list_sum`` oracle
-    reproduces it bit-for-bit."""
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            cvec,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def pq_codebook(
@@ -2549,13 +2533,8 @@ def _adc_luts(lits, queries: DataFrame, id_col: str, vec_col: str):
         qv = r["q_vec"]
         lut = []
         for s, (_, cws) in enumerate(lits):
-            sub = [float(x) for x in qv[s * dsub : (s + 1) * dsub]]
-            lut.append(
-                [
-                    _py_sq_dist(sub, [float(v) for v in cw["cvec"]])
-                    for cw in cws
-                ]
-            )
+            sub = qv[s * dsub : (s + 1) * dsub]
+            lut.append([_py_sqdist(sub, cw["cvec"]) for cw in cws])
         out.append((int(r["query_id"]), lut))
     return out
 
@@ -2570,16 +2549,6 @@ def _lut_sql(lut) -> str:
             for row in lut
         )
     )
-
-
-def _py_sq_dist(a: list, b: list) -> float:
-    """Driver-side squared L2 with the identical sequential fold as
-    the _sq_dist Column expression and DuckDB's list_sum — all three
-    must agree bitwise for the ADC oracle hash to be stable."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + (x - y) * (x - y)
-    return acc
 
 
 def l2_topk(
@@ -3018,7 +2987,7 @@ def cell_distance_outliers(
     scored = F.transform(
         cells,
         lambda c: F.struct(
-            _sq_dist_to(vec_col, c["cvec"]).alias("dist"),
+            _sq_dist(F.col(vec_col), c["cvec"]).alias("dist"),
             c["cell"].alias("cell"),
         ),
     )
@@ -3255,7 +3224,7 @@ def _kmpar_candidates(
             )
         )
         d2 = F.array_min(
-            F.transform(carr, lambda c: _sq_dist_to("_v", c["cvec"]))
+            F.transform(carr, lambda c: _sq_dist(F.col("_v"), c["cvec"]))
         )
         scored = emb.select(id_col, "_v", d2.alias("_d2")).persist(
             StorageLevel.MEMORY_AND_DISK
@@ -3284,7 +3253,7 @@ def _kmpar_candidates(
         F.transform(
             warr,
             lambda c: F.struct(
-                _sq_dist_to("_v", c["cvec"]).alias("dist"),
+                _sq_dist(F.col("_v"), c["cvec"]).alias("dist"),
                 c["cell"].alias("cell"),
             ),
         )
@@ -3425,7 +3394,7 @@ def kmeans_parallel_recluster(
         F.transform(
             carr,
             lambda c: F.struct(
-                _sq_dist_to("_v", c["cvec"]).alias("dist"),
+                _sq_dist(F.col("_v"), c["cvec"]).alias("dist"),
                 c["cell"].alias("cell"),
             ),
         )

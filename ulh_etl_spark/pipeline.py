@@ -133,6 +133,25 @@ def stage_precheck(
     return passing, failing, reports
 
 
+def write_raw(df: DataFrame, entry: IngestEntry, parent_run_id: str) -> int:
+    """Append one RAW landing with the reference's metadata columns
+    (RAW_ADLS_TO_RAW_SNOWFLAKE.py:1224-1231) and return the rows
+    written — the one RAW write of both the file/query chain
+    (:func:`stage_raw`) and the API chain (``api_ingest``). The count
+    rides the write job via observe(): a post-write re-read of the
+    target can't prune on PARENT_RUN_ID and pays a full-table scan
+    per run at scale."""
+    obs = Observation()
+    df = (
+        df.withColumn("file_load_time", F.current_timestamp())
+        .withColumn("PARENT_RUN_ID", F.lit(parent_run_id))
+        .withColumn("IS_NEW", F.lit(1 if entry.refined_table else 0))
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
+    )
+    write_table(df, entry.raw_table, mode="append")
+    return int(obs.get["rows"])
+
+
 def stage_raw(
     spark: SparkSession,
     entry: IngestEntry,
@@ -156,20 +175,9 @@ def stage_raw(
     else:
         raise ValueError(f"stage_raw cannot ingest source kind {src.kind!r}")
 
-    df = (
-        df.withColumn("file_load_time", F.current_timestamp())
-        .withColumn("PARENT_RUN_ID", F.lit(parent_run_id))
-        .withColumn("IS_NEW", F.lit(1) if entry.refined_table else F.lit(0))
-    )
     if df.isEmpty():  # zero-row short-circuit (reference :1013-1019)
         return 0
-    # rows-written verification rides the write job via observe() — a
-    # post-write re-read of the target can't prune on PARENT_RUN_ID
-    # and pays a full-table scan per run at scale.
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    write_table(df, entry.raw_table, mode="append")
-    n = int(obs.get["rows"])
+    n = write_raw(df, entry, parent_run_id)
     append_log(
         spark, "RAW", new_run_id(), parent_run_id, practice, entry.name, "SUCCESS",
         rows_read=n, rows_written=n, started_at=started, finished_at=_utcnow(),

@@ -2302,7 +2302,7 @@ _Q159_SQL = f"""
 
 def _sqd(a: str, b: str) -> str:
     """Squared-L2 between two array expressions — the same
-    sequential index-order fold as the engine's _sq_dist_to and the
+    sequential index-order fold as the engine's _sq_dist and the
     driver-side _py_sqdist, so all three agree bit-for-bit."""
     return (
         f"list_sum(list_transform(generate_series(1, len({a})), "

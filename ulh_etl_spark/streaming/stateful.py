@@ -86,24 +86,6 @@ def seen_keys_dedup_stream(
     )
 
 
-def dedup_within_watermark(
-    df: DataFrame,
-    key_cols: tuple[str, ...],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Built-in bounded-state streaming dedup: duplicates of a key
-    arriving within the watermark horizon are dropped, and the key's
-    state is evicted once the watermark passes — the production
-    default when duplicates cluster in time (at-least-once sources,
-    retried producers). Contrast seen_keys_dedup_stream, which
-    remembers keys forever (unbounded state) for true global
-    exactly-once-by-key."""
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )
-
-
 def running_zscore_stream(
     df: DataFrame,
     key_col: str = "user_id",

@@ -138,7 +138,9 @@ def dedup_within_watermark(
     at ANY stream length — and, the flip side every consumer must
     know, a duplicate arriving LATER than the watermark delay is
     re-admitted (exactly-once needs an idempotent sink keyed
-    downstream, e.g. tables.merge_upsert).
+    downstream, e.g. tables.merge_upsert). Contrast
+    stateful.seen_keys_dedup_stream, which remembers keys forever
+    (unbounded state) for true global exactly-once-by-key.
 
     Works on a streaming df (state in the checkpoint, survives
     restarts) — batch callers should use plain dropDuplicates, which
