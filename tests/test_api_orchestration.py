@@ -1,5 +1,5 @@
-"""Tests for the daily API-ingest orchestrator (§3.2), the JSON
-config flatten source (S6), and the notification sink (K9)."""
+"""Tests for the daily API-ingest orchestrator (§3.2) and the
+notification sink (K9)."""
 
 import json
 
@@ -12,11 +12,6 @@ from ulh_etl_spark.api_ingest import (
 from ulh_etl_spark.config import load_config
 from ulh_etl_spark.sinks.notify import post_notification, webhook_notifier
 from ulh_etl_spark.sources.http import HttpResponse
-from ulh_etl_spark.sources.json_config import (
-    flatten_ingest_entries,
-    read_config_df,
-    select_entry_fields,
-)
 
 
 class FakeTransport:
@@ -49,7 +44,6 @@ API_CONFIG = {
                     "name": "UpdatedPatients",
                     "source": {
                         "kind": "http",
-                        "adapter": "ellkay",
                         "options": {"pattern": "paginated",
                                     "begin_url": "https://lk/begin",
                                     "next_url": "https://lk/next"},
@@ -143,6 +137,42 @@ def test_auth_failure_skips_practice(spark, api_cleanup):
     assert len(rpt.endpoints) == 3  # the file entry is not counted
 
 
+def test_api_audit_failure_keeps_continue_on_error(spark, monkeypatch):
+    """An audit append that raises fails only its own endpoint: every
+    endpoint is reported once, with the audit error appended, and the
+    next endpoint still runs."""
+    import ulh_etl_spark.api_ingest as api_ingest
+
+    def broken_log(*args, **kwargs):
+        raise OSError("log table unavailable")
+
+    monkeypatch.setattr(api_ingest, "append_log", broken_log)
+    t = FakeTransport()
+    t.route("POST", "https://lk/a", ok([{"v": "1"}]))
+    t.route("POST", "https://lk/b", ok([{"v": "2"}]))
+    cfg = load_config({"Practices": [{"practice_name": "p", "ingest": [
+        {"name": name, "raw_table": f"api_raw_{name}",
+         "source": {"kind": "http", "options": {
+             "pattern": "single", "url": f"https://lk/{name}"}}}
+        for name in ("a", "b")
+    ]}]})
+    try:
+        rpt = run_api_practice(spark, cfg.practice("p"), t)
+        assert [(e.entry, e.status) for e in rpt.endpoints] == [
+            ("a", "FAILED"), ("b", "FAILED")
+        ]
+        for e in rpt.endpoints:
+            assert e.error == (
+                "log table unavailable; audit row not written: "
+                "log table unavailable"
+            )
+        assert [url for _, url, _ in t.calls] == ["https://lk/a", "https://lk/b"]
+        assert spark.table("api_raw_b").count() == 1
+    finally:
+        for name in ("a", "b"):
+            spark.sql(f"DROP TABLE IF EXISTS api_raw_{name}")
+
+
 def test_lookback_window_clock_skew():
     from datetime import datetime, timezone
 
@@ -150,19 +180,6 @@ def test_lookback_window_clock_skew():
     start, end = lookback_window(hours_back=24, clock_skew_hours=6, now=now)
     assert end == now
     assert (end - start).total_seconds() == (24 + 6) * 3600
-
-
-def test_json_config_flatten(spark, tmp_path):
-    p = tmp_path / "cfg.json"
-    p.write_text(json.dumps(API_CONFIG))
-    cfg = read_config_df(spark, str(p))
-    entries = flatten_ingest_entries(cfg)
-    assert entries.count() == 4
-    fields = select_entry_fields(entries, "name", "source.kind", "raw_table")
-    rows = {r.name: r for r in fields.collect()}
-    assert rows["UpdatedPatients"].source_kind == "http"
-    assert rows["UpdatedPatients"].practice_name == "ellkay_prac"
-    assert rows["file_entry_ignored"].source_kind == "file"
 
 
 def test_post_notification_retry():

@@ -343,6 +343,20 @@ def test_batch_upsert_http(spark, tmp_path):
     assert "contacts(mbi='MBI0')" in urls  # alternate-key addressing
 
 
+def test_batch_upsert_http_escapes_key_quotes(spark, tmp_path):
+    """An alternate-key value holding a single quote is addressed as
+    an OData string literal, with the quote doubled."""
+    rows = spark.createDataFrame([("O'Brien", "v")], "mbi string, val string")
+    transport = make_spool_transport(tmp_path)
+    res = batch_upsert_http(
+        rows, "https://dv/$batch", "contacts", ["mbi"],
+        transport_factory=lambda: transport,
+    )
+    assert res.succeeded == 1
+    [[op]] = read_spool(tmp_path)
+    assert op["url"] == "contacts(mbi='O''Brien')"
+
+
 def test_batch_upsert_http_create_update_split(spark, tmp_path):
     rows = spark.createDataFrame([("k1", "x"), ("k2", "y")], "k string, v string")
     key_map = spark.createDataFrame([("k1", "G-1")], "k string, guid string")

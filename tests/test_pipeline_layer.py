@@ -12,7 +12,6 @@ from ulh_etl_spark.sinks.tables import (
     merge_upsert,
     table_exists,
     truncate_table,
-    update_flag,
     write_table,
 )
 from ulh_etl_spark.sources.files import csv_scan, head_lines, list_stage_files, move_file
@@ -181,39 +180,6 @@ def test_merge_upsert(warehouse):
     assert out == {(1, "a"): "old", (2, "b"): "new", (3, "c"): "new"}
 
 
-def test_merge_upsert_delta_mode(warehouse):
-    """Native Delta MERGE path: same semantics and tallies as the
-    parquet staging-swap. Skips cleanly where delta-spark is absent
-    (this sandbox) — the dispatch itself is exercised either way via
-    _delta_handle returning None on parquet targets."""
-    import pytest
-
-    pytest.importorskip("delta")
-    spark = warehouse
-    tgt = spark.createDataFrame(
-        [(1, "a", "old"), (2, "b", "old")], "k1 int, k2 string, v string"
-    )
-    tgt.write.format("delta").mode("overwrite").saveAsTable("t_merge_delta")
-    src = spark.createDataFrame(
-        [(2, "b", "new"), (3, "c", "new")], "k1 int, k2 string, v string"
-    )
-    stats = merge_upsert(spark, "t_merge_delta", src, keys=["k1", "k2"])
-    assert stats == {"updated": 1, "inserted": 1}
-    out = {(r.k1, r.k2): r.v for r in spark.table("t_merge_delta").collect()}
-    assert out == {(1, "a"): "old", (2, "b"): "new", (3, "c"): "new"}
-    assert update_flag(spark, "t_merge_delta", "v", "new", "seen") == 2
-
-
-def test_delta_handle_none_on_parquet(warehouse):
-    """On a parquet table the Delta dispatch must return None whether
-    or not delta-spark is installed — parquet mode stays the default."""
-    from ulh_etl_spark.sinks.tables import _delta_handle
-
-    spark = warehouse
-    write_table(spark.range(3).toDF("n"), "t_plainpq", mode="overwrite")
-    assert _delta_handle(spark, "t_plainpq") is None
-
-
 def test_insert_select_single_job(warehouse):
     """The rows-written count must ride the write job (observe), not a
     second evaluation of the source plan."""
@@ -308,15 +274,6 @@ def test_merge_upsert_partition_mover_guard(warehouse):
         partition_cols=["part"], check_partition_stability=True,
     )
     assert stats == {"updated": 1, "inserted": 0}
-
-
-def test_update_flag(warehouse):
-    spark = warehouse
-    df = spark.createDataFrame([(1, 1), (2, 1), (3, 0)], "id int, IS_NEW int")
-    write_table(df, "t_flags", mode="overwrite")
-    assert update_flag(spark, "t_flags", "IS_NEW", 1, 0) == 2
-    assert spark.table("t_flags").filter("IS_NEW = 1").count() == 0
-    assert update_flag(spark, "t_flags", "IS_NEW", 1, 0) == 0
 
 
 def test_watermark_anti_join(warehouse):

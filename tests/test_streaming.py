@@ -71,6 +71,39 @@ def test_available_now_with_transform(spark, stream_env):
     assert spark.table("stream_target").collect()[0].name == "x"
 
 
+def test_batch_and_stream_parse_csv_alike(spark, stream_env):
+    """csv_scan and the streaming file source read a file with the
+    same options: a quoted delimiter, doubled-quote escapes, padded
+    fields and a short row come out the same either way."""
+    import os
+
+    from ulh_etl_spark.sources.files import csv_scan
+
+    inbound, ckpt = stream_env
+    path = os.path.join(inbound, "f1.csv")
+    with open(path, "w") as f:
+        f.write(
+            "id,name,note\n"
+            '1,"Smith, Jane","said ""hi"""\n'
+            "  2 ,  Lee  ,  padded  \n"
+            "3,Short\n"
+        )
+    stream_ingest_available_now(
+        spark, inbound, "id STRING, name STRING, note STRING",
+        "stream_target", ckpt,
+    )
+    streamed = spark.table("stream_target").drop("file_load_time")
+    batch = csv_scan(spark, [path])
+    assert streamed.columns == batch.columns
+    rows = sorted(tuple(r) for r in batch.collect())
+    assert sorted(tuple(r) for r in streamed.collect()) == rows
+    assert [r[:3] for r in rows] == [
+        ("1", "Smith, Jane", 'said "hi"'),
+        ("2", "Lee", "padded"),
+        ("3", "Short", None),
+    ]
+
+
 def test_streaming_windowed_counts(spark, tmp_path):
     """Watermarked tumbling-window agg over a rate-free file stream,
     drained with AvailableNow into a memory sink."""

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ulh_etl_spark.config import IngestEntry, Practice
 from ulh_etl_spark.pipeline import write_raw
-from ulh_etl_spark.sinks.logs import append_log
+from ulh_etl_spark.sinks.logs import append_log, clean_error_message
 from ulh_etl_spark.sources.http import (
     Transport,
     entity_fanout_source,
@@ -116,9 +116,11 @@ def run_api_practice(
     parent_run_id: str | None = None,
 ) -> ApiRunReport:
     """Run all API ingest entries for one practice, in config order,
-    continue-on-error per endpoint. ``auth_headers_fn`` runs ONCE per
-    practice (the reference authenticates once then reuses the token,
-    :318-347)."""
+    continue-on-error per endpoint: each endpoint is reported exactly
+    once, and an endpoint whose audit row cannot be written is reported
+    FAILED with the audit error appended while the next one still
+    runs. ``auth_headers_fn`` runs ONCE per practice (the reference
+    authenticates once then reuses the token, :318-347)."""
     rid = parent_run_id or new_run_id()
     rpt = ApiRunReport(practice=practice.practice_name, parent_run_id=rid)
 
@@ -138,23 +140,24 @@ def run_api_practice(
         started = datetime.now(timezone.utc).replace(tzinfo=None)
         try:
             df = _fetch(spark, entry, transport, headers)
-            if df.isEmpty():
-                rpt.endpoints.append(EndpointResult(entry.name, "SUCCESS", 0))
-                continue
-            n = write_raw(df, entry, rid)
+            n = 0
+            if not df.isEmpty():
+                n = write_raw(df, entry, rid)
+                append_log(
+                    spark, "RAW", new_run_id(), rid, practice.practice_name,
+                    entry.name, "SUCCESS", rows_read=n, rows_written=n,
+                    started_at=started,
+                )
             rpt.endpoints.append(EndpointResult(entry.name, "SUCCESS", n))
-            append_log(
-                spark, "RAW", new_run_id(), rid, practice.practice_name,
-                entry.name, "SUCCESS", rows_read=n, rows_written=n,
-                started_at=started,
-            )
         except Exception as e:  # continue-on-error per endpoint
-            rpt.endpoints.append(
-                EndpointResult(entry.name, "FAILED", error=str(e)[:300])
-            )
-            append_log(
-                spark, "RAW", new_run_id(), rid, practice.practice_name,
-                entry.name, "FAILED", started_at=started,
-                error_message=str(e)[:500],
-            )
+            error = clean_error_message(str(e))
+            try:
+                append_log(
+                    spark, "RAW", new_run_id(), rid, practice.practice_name,
+                    entry.name, "FAILED", started_at=started,
+                    error_message=error,
+                )
+            except Exception as log_error:  # keep continue-on-error
+                error += f"; audit row not written: {log_error}"[:300]
+            rpt.endpoints.append(EndpointResult(entry.name, "FAILED", error=error))
     return rpt

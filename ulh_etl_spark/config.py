@@ -12,8 +12,7 @@ Configs are small (~100s of KB): parsed with ``json.load`` on the
 driver. (The reference parses them *inside the warehouse* with
 LATERAL FLATTEN — RAW_ADLS_TO_RAW_SNOWFLAKE.py:551-609 — purely
 because Snowpark made that convenient; a driver-side parse is the
-honest Spark equivalent and ``spark.read.json`` + ``explode`` remains
-available for truly large configs.)
+honest Spark equivalent and the engine's only config parser.)
 
 Secrets are modeled as named aliases resolved from the environment at
 runtime — never inline values (the config declares *which* secret,
@@ -45,18 +44,17 @@ class SourceSpec:
     """Where a feed's data comes from.
 
     kind='file': CSV/TXT(.gz) under ``directory`` matching ``pattern``
-    (regex), parsed with ``delimiter``. kind='query': ``query`` SQL
-    over registered views. kind='http': adapter named by ``adapter``
-    with adapter-specific ``options``.
+    (regex), parsed with ``delimiter``; the codec follows the file
+    extension. kind='query': ``query`` SQL over registered views.
+    kind='http': the fetch pattern ``options["pattern"]`` names, with
+    its pattern-specific ``options``.
     """
 
     kind: str = "file"  # file | query | http
     directory: str | None = None
     pattern: str | None = None
     delimiter: str = ","
-    compression: str | None = None
     query: str | None = None
-    adapter: str | None = None
     options: dict[str, Any] = field(default_factory=dict)
 
 

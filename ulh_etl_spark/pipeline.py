@@ -11,8 +11,7 @@ propagated ``PARENT_RUN_ID`` column plus per-stage audit-log rows.
 Incremental consumption uses the watermark anti-join from
 ``ulh_etl_spark.state`` (race-free replacement for the reference's
 IS_NEW/IS_VALID flag flips — SURVEY §7.4); the flag columns are still
-written for schema parity, and ``sinks.tables.update_flag`` offers
-the mutable-flag mode for behavioral compatibility.
+written for schema parity but never flipped.
 
 Scale: each stage is one narrow projection + one append write — no
 shuffle anywhere in the ingest path except the curated lookup join,
@@ -51,6 +50,10 @@ from ulh_etl_spark.state import mark_consumed, new_run_id, unconsumed
 from ulh_etl_spark.validate import PrecheckReport, precheck_file
 
 Notifier = Callable[[str, dict], None]
+
+# Concurrent archive moves: the reference's ADF ForEach ``batchCount``
+# (archive_inbound_files.json:15-16).
+_ARCHIVE_THREADS = 10
 
 
 @dataclass
@@ -313,15 +316,15 @@ def archive_files(
     loaded: list[FileInfo],
     rejected: list[FileInfo],
     run_id: str,
-    parallelism: int = 10,
 ) -> None:
     """K8: move processed files to archive/, failed to error/, with
     the run id embedded in the archived name (the reference's ADF
     rename expression, archive_inbound_files.json:91). Moves run on a
-    driver thread pool — the ADF ForEach ``batchCount: 10`` analog
-    (:15-16); renames are metadata ops, so threads, not tasks. A move
-    that fails raises, naming the files left in place: an unarchived
-    file is re-listed and re-appended to RAW by the next run."""
+    driver thread pool of ``_ARCHIVE_THREADS`` — the ADF ForEach
+    ``batchCount`` analog; renames are metadata ops, so threads, not
+    tasks. A move that fails raises, naming the files left in place:
+    an unarchived file is re-listed and re-appended to RAW by the next
+    run."""
     from concurrent.futures import ThreadPoolExecutor
 
     base = entry.source.directory.rstrip("/")
@@ -336,7 +339,7 @@ def archive_files(
 
     if not jobs:
         return
-    with ThreadPoolExecutor(max_workers=min(parallelism, len(jobs))) as pool:
+    with ThreadPoolExecutor(max_workers=min(_ARCHIVE_THREADS, len(jobs))) as pool:
         moved = list(pool.map(_move, jobs))
     stuck = [f.name for (f, _), ok in zip(jobs, moved) if not ok]
     if stuck:

@@ -1,6 +1,8 @@
 """Sinks: catalog table writes (append/overwrite/truncate/
-insert-select), MERGE upsert, audit logs, entity-store upsert
-(Dataverse-like $batch semantics), archive file moves."""
+insert-select), parquet MERGE upsert, small-file compaction, audit
+logs, entity-store upsert (Dataverse-like $batch semantics) and
+webhook notifications. Zone-to-zone consumption is the watermark in
+``ulh_etl_spark.state``; no sink flips flag columns."""
 
 from ulh_etl_spark.sinks.entity import (  # noqa: F401
     batch_upsert_http,

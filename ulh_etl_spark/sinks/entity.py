@@ -33,6 +33,13 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from ulh_etl_spark.sinks.tables import _swap_staging, merge_upsert, table_exists
 
+# classify_create_update's output columns, which batch_upsert_http reads.
+OP_COL = "_op"
+GUID_COL = "_guid"
+
+# Linear backoff step between retries of one $batch request.
+_BACKOFF_S = 0.5
+
 
 @dataclass
 class BatchResult:
@@ -107,8 +114,9 @@ def classify_create_update(
     delete_when: Column | None = None,
 ) -> DataFrame:
     """Key-map update-vs-create split (J4 as a broadcast join): rows
-    gaining a ``_op`` column ('update' with the snapshot GUID, else
-    'create'). The reference probes a collected dict per row
+    gaining an ``OP_COL`` column ('update' with the snapshot GUID in
+    ``GUID_COL``, else 'create'). ``guid_col`` names the GUID column of
+    ``key_map``. The reference probes a collected dict per row
     (:767-801); a broadcast left join is the distributed equivalent.
 
     ``delete_when`` (e.g. ``F.col("status") == "canceled"``) marks
@@ -127,18 +135,17 @@ def classify_create_update(
     way, and runs that must not race take a fresh key_map read."""
     from pyspark.sql import functions as F
 
-    km = key_map.select(*keys, F.col(guid_col).alias("_guid")).distinct()
+    km = key_map.select(*keys, F.col(guid_col).alias(GUID_COL)).distinct()
     joined = rows.join(F.broadcast(km), keys, "left")
-    op = F.when(F.col("_guid").isNotNull(), F.lit("update")).otherwise(
-        F.lit("create")
-    )
+    known = F.col(GUID_COL).isNotNull()
+    op = F.when(known, F.lit("update")).otherwise(F.lit("create"))
     if delete_when is not None:
         op = (
-            F.when(delete_when & F.col("_guid").isNotNull(), F.lit("delete"))
+            F.when(delete_when & known, F.lit("delete"))
             .when(delete_when, F.lit("skip"))
             .otherwise(op)
         )
-    return joined.withColumn("_op", op)
+    return joined.withColumn(OP_COL, op)
 
 
 def build_batch_payload(ops: list[dict]) -> str:
@@ -178,18 +185,17 @@ def batch_upsert_http(
     transport_factory: Callable[[], Callable],
     batch_size: int = 500,
     headers: dict | None = None,
-    op_col: str = "_op",
-    guid_col: str = "_guid",
     max_inflight_batches: int | None = None,
     retries: int = 1,
-    backoff_s: float = 0.5,
     sleeper: Callable[[float], None] | None = None,
 ) -> BatchResult:
     """Stream rows to the entity store in ``$batch`` chunks via
-    ``foreachPartition``. Rows carrying ``_op``/``_guid`` (from
-    ``classify_create_update``) become GUID-PATCH or POST; otherwise
-    every row is an alternate-key PATCH upsert. Per-batch results are
-    aggregated through a Spark accumulator (driver never holds rows).
+    ``foreachPartition``. Rows carrying ``OP_COL``/``GUID_COL`` (from
+    ``classify_create_update``) become GUID-PATCH, DELETE or POST;
+    otherwise every row is an alternate-key PATCH upsert, addressed by
+    OData string literals (a quote inside a value is doubled).
+    Per-batch results are aggregated through a Spark accumulator
+    (driver never holds rows).
 
     ``max_inflight_batches`` caps CONCURRENT requests against the
     entity store: each partition is one serial HTTP stream, so
@@ -200,8 +206,8 @@ def batch_upsert_http(
     keeps its natural parallelism (a ``coalesce`` would drag the
     whole upstream plan down to n tasks).
 
-    ``retries`` is the per-batch retry budget (linear backoff via the
-    injectable ``sleeper``). HTTP 429 retries any batch — the server
+    ``retries`` is the per-batch retry budget (linear 0.5 s backoff via
+    the injectable ``sleeper``). HTTP 429 retries any batch — the server
     rejected it before processing. A transport exception or 5xx is
     AMBIGUOUS (the batch may have been applied before the response was
     lost), so those retry only batches composed entirely of keyed
@@ -225,10 +231,14 @@ def batch_upsert_http(
     acc_batches = spark.sparkContext.accumulator(0)
     acc_retried = spark.sparkContext.accumulator(0)
     hdrs = {"Prefer": "odata.continue-on-error", **(headers or {})}
-    has_op = op_col in rows.columns
+    has_op = OP_COL in rows.columns
 
     def key_filter(row) -> str:
-        return ",".join(f"{k}='{row[k]}'" for k in alternate_key)
+        # OData string literals escape a quote by doubling it
+        return ",".join(
+            "{}='{}'".format(k, str(row[k]).replace("'", "''"))
+            for k in alternate_key
+        )
 
     def send(partition) -> None:
         import time as _time
@@ -264,7 +274,7 @@ def batch_upsert_http(
             for attempt in range(retries + 1):
                 if attempt:
                     acc_retried.add(1)
-                    wait(backoff_s * attempt)
+                    wait(_BACKOFF_S * attempt)
                 try:
                     resp = attempt_once(payload)
                 except Exception:
@@ -289,8 +299,8 @@ def batch_upsert_http(
 
         for row in partition:
             d = row.asDict()
-            guid = d.pop(guid_col, None) if has_op else None
-            op = d.pop(op_col, None) if has_op else None
+            guid = d.pop(GUID_COL, None) if has_op else None
+            op = d.pop(OP_COL, None) if has_op else None
             if op == "skip":  # canceled + never synced: nothing to do
                 continue
             if op == "delete" and guid:

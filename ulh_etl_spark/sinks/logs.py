@@ -36,10 +36,14 @@ _ERROR_PREFIX = re.compile(
 )
 
 
-def clean_error_message(msg: str, max_len: int = 500) -> str:
+# Longest error message an audit row or notification carries.
+_MAX_ERROR_LEN = 500
+
+
+def clean_error_message(msg: str) -> str:
     """Strip engine-internal error prefixes so logs/notifications
-    carry the human-relevant message."""
-    return _ERROR_PREFIX.sub("", (msg or "").strip())[:max_len]
+    carry the human-relevant message, cut to 500 characters."""
+    return _ERROR_PREFIX.sub("", (msg or "").strip())[:_MAX_ERROR_LEN]
 
 
 def log_table_name(stage: str) -> str:

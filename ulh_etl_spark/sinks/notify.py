@@ -19,29 +19,31 @@ from typing import Callable
 
 from ulh_etl_spark.sources.http import HttpResponse, Sleeper, Transport
 
+# The reference's delivery policy (:283-284,844-845).
+_ATTEMPTS = 3
+_BACKOFF_S = 2.0
+_TIMEOUT_S = 30.0
+
 
 def post_notification(
     transport: Transport,
     url: str,
     payload: dict,
-    retries: int = 3,
-    backoff_s: float = 2.0,
-    timeout: float = 30.0,
     sleeper: Sleeper = time.sleep,
 ) -> bool:
-    """POST ``payload`` with the reference's retry policy (3 attempts,
-    ``backoff_s * attempt`` linear backoff, :283-284,844-845).
-    Returns success; never raises."""
-    for attempt in range(1, retries + 1):
+    """POST ``payload`` with the reference's retry policy (3 attempts
+    of 30 s each, ``2 s * attempt`` linear backoff). Returns success;
+    never raises."""
+    for attempt in range(1, _ATTEMPTS + 1):
         try:
             resp = transport("POST", url, headers={"Content-Type": "application/json"},
-                             json_body=payload, timeout=timeout)
+                             json_body=payload, timeout=_TIMEOUT_S)
         except Exception:
             resp = HttpResponse(status=599)
         if 200 <= resp.status < 300:
             return True
-        if attempt < retries:
-            sleeper(backoff_s * attempt)
+        if attempt < _ATTEMPTS:
+            sleeper(_BACKOFF_S * attempt)
     return False
 
 

@@ -1,17 +1,15 @@
-"""Catalog-table sinks (reference K1-K5).
+"""Catalog-table sinks (reference K1-K4).
 
-Storage model: managed Spark catalog tables (parquet). MERGE and
-UPDATE (which Snowflake gave the reference for free) are implemented
-storage-agnostically via staging-table swap; when delta-spark is
-importable AND the target is a Delta table, the same signatures
-dispatch to native ``MERGE INTO`` / in-place ``UPDATE`` automatically
-(SURVEY §7.3) — no caller change between modes.
+Storage model: managed Spark catalog tables (parquet). MERGE (which
+Snowflake gave the reference for free) is implemented over plain
+parquet via a staging-table swap or, for partitioned targets, a
+dynamic partition overwrite.
 
 Scale notes: merge_upsert shuffles once on the merge keys and keeps
 map-side dedup via row_number; the staging swap is a metadata
-operation, not a data copy. The anti-join watermark design in
-ulh_etl_spark.state avoids mutable flags entirely and is the
-preferred incremental mechanism.
+operation, not a data copy. The reference's K5, the IS_NEW/IS_VALID
+flag-flip UPDATE, has no sink: incremental consumption between zones
+is ulh_etl_spark.state's watermark anti-join.
 """
 
 from __future__ import annotations
@@ -143,34 +141,6 @@ def _swap_staging(spark: SparkSession, target: str, staging: str) -> None:
     spark.sql(f"ALTER TABLE {staging} RENAME TO {target}")
 
 
-def _delta_handle(spark: SparkSession, target: str):
-    """DeltaTable handle when delta-spark is importable AND ``target``
-    is a Delta table; else None (parquet staging-swap mode). The
-    import gate keeps the engine dependency-free — on a Delta
-    deployment the native MERGE/UPDATE path lights up with no code
-    change (SURVEY §7.3)."""
-    try:
-        from delta.tables import DeltaTable  # optional dependency
-    except ImportError:
-        return None
-    ddl = spark.sql(f"SHOW CREATE TABLE {target}").collect()[0][0].lower()
-    if "using delta" not in ddl:
-        return None
-    return DeltaTable.forName(spark, target)
-
-
-def _last_merge_metrics(spark: SparkSession, target: str) -> dict[str, int]:
-    """updated/inserted tallies of the most recent Delta operation,
-    from the table history (execute() does not return metrics in OSS
-    delta-spark)."""
-    hist = spark.sql(f"DESCRIBE HISTORY {target} LIMIT 1").collect()[0]
-    m = hist["operationMetrics"] or {}
-    return {
-        "updated": int(m.get("numTargetRowsUpdated", 0)),
-        "inserted": int(m.get("numTargetRowsInserted", 0)),
-    }
-
-
 def merge_upsert(
     spark: SparkSession,
     target: str,
@@ -184,8 +154,8 @@ def merge_upsert(
     MATCHED INSERT (reference Rater8_Reviews.ipynb ``run_merge`` on
     (SURVEY_ID, QUESTION_ID)).
 
-    Parquet-mode implementation: union target+source with a priority
-    column, keep-latest per key via row_number (source wins). One
+    Implementation: union target+source with a priority column,
+    keep-latest per key via row_number (source wins). One
     shuffle on the merge keys; the updated/inserted tallies ride the
     SAME job via ``observe()`` on the merged frame (no pre-counts, no
     extra scans). Returns {"updated": ..., "inserted": ...} counted
@@ -200,8 +170,7 @@ def merge_upsert(
     columns, the merge only reads + rewrites the partitions the source
     touches (dynamic partition overwrite) instead of the whole table —
     the rewrite is bounded by the source's partition footprint, which
-    is what keeps parquet-mode MERGE viable at 100 TB. On Delta you'd
-    swap this body for ``MERGE INTO`` and keep the signature.
+    is what keeps a parquet MERGE viable at 100 TB.
 
     PRECONDITION (partitioned mode): a key's partition value must be
     STABLE — if a source row moves a key to a different partition, the
@@ -220,31 +189,6 @@ def merge_upsert(
             writer = writer.partitionBy(*partition_cols)
         writer.saveAsTable(target)
         return {"updated": 0, "inserted": int(obs.get["rows"])}
-
-    dt = _delta_handle(spark, target)
-    if dt is not None:
-        # Native MERGE INTO: Delta requires at most one source row per
-        # key, so apply the keep-latest tiebreak first (same rule as
-        # the parquet path's row_number).
-        src = source_df
-        if tiebreak_cols:
-            ww = Window.partitionBy(*keys).orderBy(
-                *[F.col(c).desc() for c in tiebreak_cols]
-            )
-            src = (
-                src.withColumn("_rn", F.row_number().over(ww))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        (
-            dt.alias("t")
-            .merge(src.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return _last_merge_metrics(spark, target)
 
     tgt = spark.table(target)
     if partition_cols:
@@ -319,35 +263,6 @@ def merge_upsert(
         _swap_staging(spark, target, staging)
     m = obs.get
     return {"updated": int(m["updated"]), "inserted": int(m["inserted"])}
-
-
-def update_flag(
-    spark: SparkSession, target: str, flag_col: str, from_val, to_val
-) -> int:
-    """K5: the reference's flag-flip ``UPDATE t SET f=0 WHERE f=1``
-    (RAW_SNOWFLAKE_TO_REFINED_SNOWFLAKE.py:717-718). Parquet-mode:
-    rewrite via staging swap. NOTE the reference semantics flip ALL
-    matching rows, including rows another concurrent run landed
-    mid-flight (race documented in SURVEY §7.4) — reproduced
-    faithfully here; prefer ulh_etl_spark.state's watermark anti-join
-    which has no such race. Returns rows flipped."""
-    tgt = spark.table(target)
-    n = tgt.filter(F.col(flag_col) == from_val).count()
-    if n == 0:
-        return 0
-    dt = _delta_handle(spark, target)
-    if dt is not None:
-        # native in-place UPDATE — no full-table staging rewrite
-        dt.update(F.col(flag_col) == from_val, {flag_col: F.lit(to_val)})
-        return n
-    flipped = tgt.withColumn(
-        flag_col,
-        F.when(F.col(flag_col) == from_val, F.lit(to_val)).otherwise(F.col(flag_col)),
-    )
-    staging = f"{target}__staging"
-    flipped.write.mode("overwrite").saveAsTable(staging)
-    _swap_staging(spark, target, staging)
-    return n
 
 
 def compact_table(

@@ -1,13 +1,14 @@
-"""Source adapters: staged files (CSV/TXT/gz), raw-line scans, SQL
-query sources, and HTTP APIs (refresh-handshake, OAuth2+retry, token
-pagination, per-entity fan-out, OData paging) behind one
-``Source -> DataFrame`` protocol."""
+"""Source adapters: staged files (listing, CSV/TXT/gz scans with one
+shared option set, driver-side header probes, line counts), SQL query
+sources, and HTTP APIs (refresh-handshake, OAuth2+retry, token
+pagination, per-entity fan-out, OData paging, hierarchy walk) behind
+one ``Source -> DataFrame`` protocol. The ingest config is parsed on
+the driver by ``ulh_etl_spark.config.load_config``, not by a source."""
 
 from ulh_etl_spark.sources.files import (  # noqa: F401
     FileInfo,
     csv_scan,
     list_stage_files,
-    raw_line_scan,
 )
 from ulh_etl_spark.sources.http import (  # noqa: F401
     HttpResponse,

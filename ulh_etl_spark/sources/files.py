@@ -5,9 +5,9 @@ The reference lists files in an external stage with
 reads with per-feed options (RAW_ADLS_TO_RAW_SNOWFLAKE.py:662-691),
 plus a raw-line file format for header/sample probing
 (ADLS_FILE_PRECHECK.py:789-824). Spark equivalents: Hadoop
-FileSystem listing + ``spark.read.csv`` / ``spark.read.text``, with
-the few header/sample lines read on the driver through a Hadoop
-stream.
+FileSystem listing + ``spark.read.csv``, with the few header/sample
+lines read on the driver through a Hadoop stream and line counts from
+one ``spark.read.text`` job.
 
 Scale: listing uses the JVM FileSystem API (works on HDFS/S3/ABFS
 URIs unchanged); CSV reads and line counts pass explicit file lists so
@@ -35,6 +35,21 @@ class FileInfo:
     modification_time: int
 
 
+# The reference's CSV option set (S2, RAW_ADLS_TO_RAW_SNOWFLAKE.py:
+# 675-691), minus the per-feed delimiter: quoted fields, header, trim
+# surrounding whitespace, tolerate malformed rows. ``csv_scan`` and the
+# streaming file source both read with it, so a file parses the same
+# way batch or streamed.
+CSV_OPTIONS = {
+    "quote": '"',
+    "escape": '"',
+    "header": True,
+    "ignoreLeadingWhiteSpace": True,
+    "ignoreTrailingWhiteSpace": True,
+    "mode": "PERMISSIVE",
+}
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -46,7 +61,6 @@ def list_stage_files(
     spark: SparkSession,
     directory: str,
     pattern: str | None = None,
-    case_insensitive: bool = True,
 ) -> list[FileInfo]:
     """List files under ``directory``, client-side regex filter on the
     file name (reference S1: LIST + ``re.search`` with IGNORECASE,
@@ -55,7 +69,7 @@ def list_stage_files(
     fs, hpath, _ = _hadoop_fs(spark, directory)
     if not fs.exists(hpath):
         return []
-    rx = re.compile(pattern, re.IGNORECASE if case_insensitive else 0) if pattern else None
+    rx = re.compile(pattern, re.IGNORECASE) if pattern else None
     out: list[FileInfo] = []
     for status in fs.listStatus(hpath):
         if not status.isFile():
@@ -78,26 +92,14 @@ def csv_scan(
     spark: SparkSession,
     paths: list[str] | str,
     delimiter: str = ",",
-    header: bool = True,
-    infer_schema: bool = False,
     with_file_name: bool = True,
 ) -> DataFrame:
-    """CSV scan with the reference's option set (S2,
-    RAW_ADLS_TO_RAW_SNOWFLAKE.py:675-691): config delimiter, quoted
-    fields, header, trim surrounding whitespace, tolerate malformed
-    rows (PERMISSIVE). ``with_file_name`` adds per-row provenance via
-    ``input_file_name()`` — replacing the reference's per-file read
-    loop with one distributed scan (SURVEY §4)."""
-    reader = (
-        spark.read.option("sep", delimiter)
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("header", header)
-        .option("ignoreLeadingWhiteSpace", True)
-        .option("ignoreTrailingWhiteSpace", True)
-        .option("mode", "PERMISSIVE")
-        .option("inferSchema", infer_schema)
-    )
+    """CSV scan with ``CSV_OPTIONS`` and the config delimiter; every
+    column is a string (no inference job). ``with_file_name`` adds
+    per-row provenance via ``input_file_name()`` — replacing the
+    reference's per-file read loop with one distributed scan
+    (SURVEY §4)."""
+    reader = spark.read.options(**CSV_OPTIONS).option("sep", delimiter)
     df = reader.csv(paths if isinstance(paths, list) else [paths])
     if with_file_name:
         df = df.withColumn("file_name", F.input_file_name())
@@ -147,13 +149,6 @@ def jsonl_scan(
         F.col("value").alias("raw_line"), *prov
     )
     return good, quarantine
-
-
-def raw_line_scan(spark: SparkSession, path: str) -> DataFrame:
-    """Raw-line scan, no field parsing (S3: FIELD_DELIMITER=NONE +
-    ``SELECT $1 ... LIMIT n``). Handles .gz transparently (Hadoop
-    codecs)."""
-    return spark.read.text(path)
 
 
 # Bytes head_lines reads before giving up on finding its lines.
@@ -246,13 +241,14 @@ def head_bytes(spark: SparkSession, path: str, n: int = 4) -> bytes:
         stream.close()
 
 
-def move_file(spark: SparkSession, src: str, dst: str, overwrite: bool = True) -> bool:
+def move_file(spark: SparkSession, src: str, dst: str) -> bool:
     """Archive/error file move (K8 — the reference's ADF binary
     copy+delete, archive_inbound_files.json). Uses FileSystem.rename
-    when src/dst share a filesystem; creates parent dirs."""
+    when src/dst share a filesystem; creates parent dirs and replaces
+    an existing ``dst``."""
     fs, src_path, jvm = _hadoop_fs(spark, src)
     dst_path = jvm.org.apache.hadoop.fs.Path(dst)
     fs.mkdirs(dst_path.getParent())
-    if overwrite and fs.exists(dst_path):
+    if fs.exists(dst_path):
         fs.delete(dst_path, False)
     return bool(fs.rename(src_path, dst_path))

@@ -69,6 +69,11 @@ def default_transport() -> Transport:
 
 # ------------------------------------------------------------------ retry
 
+# The reference's request policy (ELLKAY_API_TO_RAW_SNOWFLAKE.py:331-389).
+_TIMEOUT_S = 60.0
+_BACKOFF_S = 5.0
+_RATE_LIMIT_WAIT_S = 30.0
+
 
 def retry_call(
     transport: Transport,
@@ -76,34 +81,32 @@ def retry_call(
     url: str,
     headers: dict | None = None,
     json_body: Any = None,
-    timeout: float = 60.0,
     retries: int = 3,
-    backoff_s: float = 5.0,
-    rate_limit_wait_s: float = 30.0,
     sleeper: Sleeper = time.sleep,
 ) -> HttpResponse:
     """Retry wrapper with the reference's policy (ELLKAY_API_TO_RAW_
-    SNOWFLAKE.py:331-389): N attempts, linear backoff on errors,
-    longer fixed waits on HTTP 429 / rate-limit bodies."""
+    SNOWFLAKE.py:331-389): ``retries`` attempts of 60 s each, linear
+    5 s backoff on errors, a fixed 30 s wait on HTTP 429 / rate-limit
+    bodies."""
     last: HttpResponse | None = None
     for attempt in range(1, retries + 1):
         try:
             resp = transport(method, url, headers=headers, json_body=json_body,
-                             timeout=timeout)
-        except Exception as e:
+                             timeout=_TIMEOUT_S)
+        except Exception:
             if attempt == retries:
                 raise
-            sleeper(backoff_s * attempt)
+            sleeper(_BACKOFF_S * attempt)
             continue
         if resp.status == 429 or "rate limit" in resp.body[:200].lower():
             last = resp
             if attempt < retries:
-                sleeper(rate_limit_wait_s)
+                sleeper(_RATE_LIMIT_WAIT_S)
             continue
         if resp.status >= 500:
             last = resp
             if attempt < retries:
-                sleeper(backoff_s * attempt)
+                sleeper(_BACKOFF_S * attempt)
             continue
         return resp
     return last if last is not None else HttpResponse(status=599)
@@ -302,16 +305,15 @@ def entity_fanout_source(
     ids: list[str] | DataFrame,
     url_for_id: Callable[[str], str],
     headers: dict | None = None,
-    json_body_for_id: Callable[[str], Any] | None = None,
-    id_tag_column: str = "_source_patient_id",
     api_delay_ms: int | None = None,
     sleeper: Sleeper = time.sleep,
     distribute: bool | None = None,
     distribute_threshold: int = 500,
     spool_path: str | None = None,
 ) -> DataFrame:
-    """S10 ("patient loop"): one API call per entity id, tagging every
-    result row with its source id; continue on per-id failure; paced
+    """S10 ("patient loop"): one bodiless POST per entity id, tagging
+    every result row with its source id in ``_source_patient_id``;
+    continue on per-id failure; paced
     by ``api_delay_ms`` (ELLKAY_API_TO_RAW_SNOWFLAKE.py:548-623).
     ``api_delay_ms=None`` (default) = the reference's 2 s pacing in
     the sequential loop, no pacing on executors.
@@ -365,14 +367,13 @@ def entity_fanout_source(
         distribute = not api_delay_ms and len(ids) >= distribute_threshold
 
     def fetch_one(transport: Transport, eid: str) -> list[dict]:
-        body = json_body_for_id(eid) if json_body_for_id else None
         resp = retry_call(transport, "POST", url_for_id(eid), headers=headers,
-                          json_body=body, sleeper=sleeper)
+                          sleeper=sleeper)
         if resp.status >= 400:
             return []  # continue-on-error per id (reference :607-614)
         recs = extract_records(resp.json())
         for r in recs:
-            r[id_tag_column] = eid
+            r["_source_patient_id"] = eid
         return recs
 
     if not distribute:

@@ -9,8 +9,9 @@ rows a concurrent load added mid-run — SURVEY §7.4).
 Idiomatic replacement: an append-only **watermark table** of consumed
 run ids per (stage, source); the next stage LEFT ANTI joins its input
 against it. No mutation, no race, and the anti-join broadcasts
-because the watermark side is tiny. The flag-parity mode lives in
-sinks.tables.update_flag for behavioral compatibility.
+because the watermark side is tiny. It is the only consumption
+mechanism: the pipeline still writes the flag columns for schema
+parity but never flips them.
 """
 
 from __future__ import annotations

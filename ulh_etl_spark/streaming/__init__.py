@@ -7,11 +7,11 @@ Streaming's file source with ``Trigger.AvailableNow`` reproduces that
 model exactly (new files become exactly-once micro-batches; the
 checkpoint replaces the IS_NEW flags), so the engine offers it as the
 idiomatic upgrade path, plus watermarked event-time analytics the
-reference never had.
+reference never had. File streams parse CSV with the batch scan's
+option set and always drain with ``Trigger.AvailableNow``.
 """
 
 from ulh_etl_spark.streaming.file_stream import (  # noqa: F401
-    start_csv_ingest_stream,
     stream_ingest_available_now,
 )
 from ulh_etl_spark.streaming.stateful import (  # noqa: F401

@@ -9,18 +9,18 @@ approximated, and ``Trigger.AvailableNow`` gives "process everything
 that has arrived, then stop" — the same semantics as the reference's
 per-event runs, but transactional.
 
-Scale: the file source lists incrementally (maxFilesPerTrigger bounds
-micro-batch size), state lives in the checkpoint not the table, and
-the same code runs continuous (`trigger(processingTime=...)`) on a
-real cluster.
+Scale: the file source lists incrementally and state lives in the
+checkpoint, not the table. Every stream here drains with
+``Trigger.AvailableNow``, the one trigger the reference's model needs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+
+from ulh_etl_spark.sources.files import CSV_OPTIONS
 
 
 def _csv_stream(
@@ -28,63 +28,22 @@ def _csv_stream(
     directory: str,
     schema: StructType | str,
     delimiter: str = ",",
-    header: bool = True,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    reader = (
+    """Streaming read of ``directory``'s CSV files, parsed with the
+    batch ``csv_scan``'s ``CSV_OPTIONS``."""
+    df = (
         spark.readStream.format("csv")
         .schema(schema)  # streams require an explicit schema (no inference race)
+        .options(**CSV_OPTIONS)
         .option("sep", delimiter)
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("header", header)
-        .option("ignoreLeadingWhiteSpace", True)
-        .option("ignoreTrailingWhiteSpace", True)
-        .option("mode", "PERMISSIVE")
+        .load(directory)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.load(directory)
     # same provenance/lineage columns as the batch RAW stage
     # (RAW_ADLS_TO_RAW_SNOWFLAKE.py:1224-1231)
     return (
         df.withColumn("file_name", F.input_file_name())
         .withColumn("file_load_time", F.current_timestamp())
     )
-
-
-def start_csv_ingest_stream(
-    spark: SparkSession,
-    directory: str,
-    schema: StructType | str,
-    target_table: str,
-    checkpoint_dir: str,
-    delimiter: str = ",",
-    available_now: bool = True,
-    processing_time: str | None = None,
-    max_files_per_trigger: int | None = None,
-    transform=None,
-) -> StreamingQuery:
-    """Start the ingest stream into ``target_table``.
-
-    ``available_now=True`` = the reference's event-driven batch (drain
-    what's there, then stop); ``processing_time`` switches to a
-    continuous micro-batch cadence. ``transform`` optionally applies
-    the refined-stage column logic inside the stream (transforms are
-    narrow, so they stream as-is).
-    """
-    df = _csv_stream(spark, directory, schema, delimiter,
-                     max_files_per_trigger=max_files_per_trigger)
-    if transform is not None:
-        df = transform(df)
-    stream = df.writeStream.option("checkpointLocation", checkpoint_dir).outputMode(
-        "append"
-    )
-    if available_now:
-        stream = stream.trigger(availableNow=True)
-    elif processing_time:
-        stream = stream.trigger(processingTime=processing_time)
-    return stream.toTable(target_table)
 
 
 def stream_ingest_available_now(
@@ -97,14 +56,21 @@ def stream_ingest_available_now(
     transform=None,
     timeout_s: float = 120.0,
 ) -> int:
-    """Run one drain-everything cycle and wait for completion — the
-    exact shape of one reference pipeline run. Returns rows in the
-    target table afterwards. Re-invoking after new files land
-    processes ONLY the new files (checkpoint = the IS_NEW flags,
-    without the race)."""
-    q = start_csv_ingest_stream(
-        spark, directory, schema, target_table, checkpoint_dir,
-        delimiter=delimiter, available_now=True, transform=transform,
+    """Run one drain-everything cycle into ``target_table`` and wait
+    for completion — the exact shape of one reference pipeline run.
+    ``transform`` optionally applies the refined-stage column logic
+    inside the stream (transforms are narrow, so they stream as-is).
+    Returns rows in the target table afterwards. Re-invoking after new
+    files land processes ONLY the new files (checkpoint = the IS_NEW
+    flags, without the race)."""
+    df = _csv_stream(spark, directory, schema, delimiter)
+    if transform is not None:
+        df = transform(df)
+    q = (
+        df.writeStream.option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .toTable(target_table)
     )
     q.awaitTermination(timeout_s)
     if q.isActive:

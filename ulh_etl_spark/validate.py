@@ -32,6 +32,8 @@ from ulh_etl_spark.sources.files import FileInfo, count_lines, head_lines
 _FORBIDDEN_HEADER_CHARS = ("\x00", "\r", "\n", "\t", '"', "'", ";")
 _FORBIDDEN_HEADER_SEQS = ("--", "/*")
 _MAX_HEADER_LEN = 128
+# Data lines read after the header (reference LIMIT 11, :798-824).
+_SAMPLE_ROWS = 10
 
 _BOMS = {
     b"\xef\xbb\xbf": "UTF-8",
@@ -90,7 +92,6 @@ def precheck_file(
     file: FileInfo,
     contract: PrecheckContract,
     delimiter: str = ",",
-    sample_rows: int = 10,
     line_count: int | None = None,
 ) -> PrecheckReport:
     """Run the full §2.8 check suite against one staged file.
@@ -108,14 +109,14 @@ def precheck_file(
 
     # FILE_READ (:785-831) — header + sample must be readable
     try:
-        lines = head_lines(spark, file.path, sample_rows + 1)
+        lines = head_lines(spark, file.path, _SAMPLE_ROWS + 1)
     except Exception as e:  # unreadable/corrupt
         rpt.add("FILE_READ", "FAIL", "readable", "error", str(e)[:200])
         return rpt
     if not lines:
         rpt.add("FILE_READ", "FAIL", ">= 1 line", "0", "no lines")
         return rpt
-    rpt.add("FILE_READ", "PASS", f"header+{sample_rows} sample", str(len(lines)))
+    rpt.add("FILE_READ", "PASS", f"header+{_SAMPLE_ROWS} sample", str(len(lines)))
 
     # BOM_CHECK (:846-872) — WARN; head_lines keeps the raw BOM bytes
     # that Spark's text reader drops.
