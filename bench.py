@@ -313,9 +313,8 @@ ANCHOR = {
     # honest O(sum block²) cost of ER candidate verification; see
     # SCALE.md for why PassJoin segment blocking degenerates on this
     # corpus (constant 9-char name prefix) and when it would help.
-    # q125's cost is the exact countDistinct Expand (documented
-    # exact=False HLL knob). q121 re-runs the LSH + components
-    # pipeline (q102's cost class).
+    # q125's cost is the exact per-column distinct count. q121
+    # re-runs the LSH + components pipeline (q102's cost class).
     "q121_cluster_size_histogram": 3.586,
     "q122_split_leakage": 0.824,
     "q123_zipf_slope": 0.261,

@@ -206,11 +206,13 @@ def test_cross_group_gram_overlap_model(spark):
     assert fb == out
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir mode: identical labels, and the rounds actually
-    checkpoint RELIABLY (files appear under the directory) — the
-    cluster-scale path where a lost executor must not abort the
-    iteration."""
+def test_connected_components_reliable_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    """$SPARK_GRAFT_CHECKPOINT_DIR set: identical labels, and the
+    rounds actually checkpoint RELIABLY (files appear under the
+    directory) — the cluster-scale path where a lost executor must
+    not abort the iteration."""
     import os
 
     from ulh_etl_spark.operators.dedup import connected_components
@@ -219,9 +221,10 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id1 long, id2 long"
     )
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckpt)
     out = {
         r["node"]: r["component"]
-        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
+        for r in connected_components(pairs).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     found = [f for _root, _d, files in os.walk(ckpt) for f in files]
@@ -1525,6 +1528,51 @@ def test_kmeans_parallel_recluster_matches_python_replica(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_kmeans_parallel_identical_vectors_stop_at_phi_zero(spark):
+    """Every vector coincides with the first seed, so phi == 0 in
+    round 1: the rounds stop (the l * d^2 / phi threshold would be an
+    ANSI divide-by-zero) and the one seed carries every point."""
+    from ulh_etl_spark.operators.similarity import (
+        kmeans_parallel_init,
+        kmeans_parallel_recluster,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [1.0, 2.0]) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    init = kmeans_parallel_init(df).collect()
+    assert [(r.round_selected, r.weight) for r in init] == [(0, 4)]
+    centers = kmeans_parallel_recluster(df, k=1).collect()
+    assert len(centers) == 1
+    assert (centers[0].n_assigned, centers[0].mean_sqdist) == (4, 0.0)
+
+
+def test_kmeans_and_kcenter_empty_corpus(spark):
+    """An empty corpus yields an empty frame with the declared output
+    schema instead of an IndexError on the first-seed collect."""
+    from ulh_etl_spark.operators.similarity import (
+        kcenter_coreset,
+        kmeans_parallel_init,
+        kmeans_parallel_recluster,
+    )
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0])], "vec_id long, embedding array<double>"
+    ).limit(0)
+    cases = [
+        (kcenter_coreset(df, k=3), ["step", "vec_id", "dist_when_chosen"]),
+        (kmeans_parallel_init(df), ["seed_id", "round_selected", "weight"]),
+        (
+            kmeans_parallel_recluster(df),
+            ["center_id", "pick_order", "n_assigned", "mean_sqdist"],
+        ),
+    ]
+    for out, cols in cases:
+        assert out.columns == cols
+        assert out.collect() == []
 
 
 def test_prefix_filter_alpha_boundary_pair_survives(spark):

@@ -630,9 +630,7 @@ def test_ivfpq_equals_pq_adc_when_probing_all_cells(spark):
 
     q_cell = {
         r.query_id: r.cell
-        for r in ivf_assign_queries(
-            queries, cents, "vec_id", "embedding", nprobe=1
-        ).collect()
+        for r in ivf_assign_queries(queries, cents, nprobe=1).collect()
     }
     members = {
         c: {r.vec_id for r in rows_df.collect()}

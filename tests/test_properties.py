@@ -157,36 +157,6 @@ def test_ensure_zones_idempotent(spark):
     assert {"raw_zone", "refined_zone", "curated_zone"} <= dbs
 
 
-def test_broadcast_value_map_matches_case_form(spark):
-    from ulh_etl_spark.functions.mapping import broadcast_value_map
-    from ulh_etl_spark.functions.transforms import value_map
-
-    data = [("Y",), ("y",), ("N",), ("maybe",), (None,), ("x",)]
-    mapping = {"Y": "yes", "N": "no"}
-    df = spark.createDataFrame(data, "v string")
-    case_form = [r.out for r in df.select(
-        value_map(F.col("v"), mapping).alias("out")).collect()]
-    join_form = [r.v for r in broadcast_value_map(df, "v", mapping)
-                 .orderBy(F.monotonically_increasing_id()).collect()]
-    # same multiset of outputs and same cardinality as input
-    assert sorted(x or "" for x in case_form) == sorted(x or "" for x in join_form)
-    assert len(join_form) == len(data)
-
-
-def test_broadcast_value_map_no_double_mapping(spark):
-    """A mapped RESULT that collides case-insensitively with another
-    key must not be re-mapped (chained-CASE applies exactly once)."""
-    from ulh_etl_spark.functions.mapping import broadcast_value_map
-
-    df = spark.createDataFrame([("A",), ("X",)], "v string")
-    out = {r_orig: r.v for r_orig, r in zip(
-        ["A", "X"],
-        broadcast_value_map(df, "v", {"A": "x", "X": "z"})
-        .orderBy(F.monotonically_increasing_id()).collect(),
-    )}
-    assert out == {"A": "x", "X": "z"}
-
-
 def test_resolve_secret():
     from ulh_etl_spark.secrets import SecretNotFound, resolve_secret
 

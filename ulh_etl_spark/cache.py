@@ -47,7 +47,7 @@ def track(df):
     return df
 
 
-def release_persisted(blocking: bool = False) -> int:
+def release_persisted() -> int:
     """Unpersist every tracked frame; returns how many were
     released. Safe to call at any time — frames still referenced by
     un-executed lazy plans simply recompute on next use. The drain
@@ -59,30 +59,27 @@ def release_persisted(blocking: bool = False) -> int:
     n = 0
     for df in drained:
         try:
-            df.unpersist(blocking)
+            df.unpersist()
             n += 1
         except Exception:  # session already stopped — nothing to free
             pass
     return n
 
 
-def truncate_lineage(df, checkpoint_dir: str | None = None, eager: bool = True):
+def truncate_lineage(df, eager: bool = True):
     """Cut a DataFrame's lineage at this point: reliable
-    ``.checkpoint()`` when a checkpoint directory is configured (the
-    ``checkpoint_dir`` argument, else ``$SPARK_GRAFT_CHECKPOINT_DIR``),
-    ``localCheckpoint`` otherwise.
+    ``.checkpoint()`` when ``$SPARK_GRAFT_CHECKPOINT_DIR`` names a
+    checkpoint directory, ``localCheckpoint`` otherwise.
 
-    The iterative loops (CC, NN-Descent, PageRank/HITS, coverage)
-    truncate per-round lineage so plans stay bounded — correct and
-    free locally, but localCheckpoint blocks live on executors, so on
-    a real cluster one lost executor aborts a long fixpoint job
-    mid-loop. ``connected_components`` threads a ``checkpoint_dir``
-    option into reliable ``.checkpoint()`` for exactly that case
-    (operators/dedup.py); this helper is the same convention for
-    every other lineage-truncation site (VERDICT r16 item 3). The
-    default stays local: no extra I/O, identical rows either way.
+    The iterative loops (CC, NN-Descent, PageRank/HITS, k-core,
+    coverage) truncate per-round lineage so plans stay bounded —
+    correct and free locally, but localCheckpoint blocks live on
+    executors, so on a real cluster one lost executor aborts a long
+    fixpoint job mid-loop. The environment variable is the one switch
+    to reliable checkpoints for every truncation site. The default
+    stays local: no extra I/O, identical rows either way.
     """
-    cdir = checkpoint_dir or os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    cdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if cdir:
         df.sparkSession.sparkContext.setCheckpointDir(cdir)
         return df.checkpoint(eager=eager)

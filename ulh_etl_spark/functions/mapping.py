@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from ulh_etl_spark.functions.transforms import concat_mapping, dummy_key, value_map
 from ulh_etl_spark.resolve import ColumnResolver
-from ulh_etl_spark.session import local_frame
 
 
 @dataclass
@@ -61,57 +60,6 @@ class ColumnMapping:
             fb = F.col(resolver.resolve_or_raise(self.fallback))
             return dummy_key(key, fb, self.marker).alias(self.target)
         raise ValueError(f"unknown mapping kind {self.kind!r}")
-
-
-def broadcast_value_map(
-    df: DataFrame,
-    column: str,
-    mapping: dict[str, str],
-    case_insensitive_fallback: bool = True,
-) -> DataFrame:
-    """Value-map via broadcast join — the scale path for large maps
-    where the chained-CASE form (transforms.value_map) would compile a
-    thousand-branch expression. Same semantics: exact match wins, then
-    case-insensitive, else pass-through.
-
-    Two broadcast left joins (exact, then case-insensitive) keep
-    output cardinality identical to the input even when a value
-    matches multiple keys; on a case-insensitive collision the
-    lexicographically smallest key's value wins (deterministic).
-    """
-    spark = df.sparkSession
-    exact = local_frame(
-        spark, list(mapping.items()), "_vm_key string, _vm_val string"
-    )
-    # remember the ORIGINAL value's case-fold and whether the exact
-    # pass hit, so the fallback never re-maps an already-mapped value
-    out = (
-        df.withColumn("_vm_lc", F.lower(F.col(column)))
-        .join(F.broadcast(exact), F.col(column) == F.col("_vm_key"), "left")
-        .withColumn("_vm_hit", F.col("_vm_val").isNotNull())
-        .withColumn(column, F.coalesce(F.col("_vm_val"), F.col(column)))
-        .drop("_vm_key", "_vm_val")
-    )
-    if case_insensitive_fallback:
-        ci_pairs: dict[str, tuple[str, str]] = {}
-        for k, v in mapping.items():
-            lc = k.lower()
-            if lc not in ci_pairs or k < ci_pairs[lc][0]:
-                ci_pairs[lc] = (k, v)
-        ci = local_frame(
-            spark,
-            [(lc, v) for lc, (_, v) in ci_pairs.items()],
-            "_vm_key_lc string, _vm_val string",
-        )
-        out = out.join(
-            F.broadcast(ci), F.col("_vm_lc") == F.col("_vm_key_lc"), "left"
-        ).withColumn(
-            column,
-            F.when(
-                ~F.col("_vm_hit") & F.col("_vm_val").isNotNull(), F.col("_vm_val")
-            ).otherwise(F.col(column)),
-        ).drop("_vm_key_lc", "_vm_val")
-    return out.drop("_vm_lc", "_vm_hit")
 
 
 def apply_mappings(df: DataFrame, mappings: list[ColumnMapping | dict]) -> DataFrame:

@@ -96,21 +96,18 @@ def value_map(
     mapping: dict[str, str],
     prefix: str = "",
     suffix: str = "",
-    case_insensitive_fallback: bool = True,
 ) -> Column:
     """Dict remap of a column's value, then prefix/suffix concat.
 
-    Exact-match lookup first; optionally a lowercased fallback (the
-    reference probes the dict with the raw value then value.lower()).
-    Unmapped values pass through unchanged (still prefixed/suffixed).
-    Compiled as a chained CASE — for very large maps prefer the
-    broadcast map-join (functions.mapping.broadcast_value_map).
+    Exact match or a lowercased match (the reference probes the dict
+    with the raw value, then value.lower()); the first key in mapping
+    order that matches wins. Unmapped values pass through unchanged
+    (still prefixed/suffixed). Compiled as one chained CASE, so the
+    whole map stays inside the curated projection's codegen.
     """
     expr: Column | None = None
     for k, v in mapping.items():
-        cond = col == F.lit(k)
-        if case_insensitive_fallback:
-            cond = cond | (F.lower(col) == F.lit(k.lower()))
+        cond = (col == F.lit(k)) | (F.lower(col) == F.lit(k.lower()))
         expr = F.when(cond, F.lit(v)) if expr is None else expr.when(cond, F.lit(v))
     mapped = col if expr is None else expr.otherwise(col)
     if prefix or suffix:

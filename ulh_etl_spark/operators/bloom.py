@@ -24,8 +24,8 @@ Build topology: one pass over the member set — each partition fills
 a local bitmap (mapInPandas), the driver ORs the per-partition
 bitmaps. The collect volume is ``n_partitions * n_bits/8`` bytes;
 the member relation keeps its natural parallelism UNLESS that volume
-would exceed ``max_collect_bytes`` (default 1 GiB), in which case it
-is coalesced down to the largest partition count that fits — small
+would exceed 1 GiB, in which case it is coalesced down to the
+largest partition count that fits — small
 blooms build fully parallel (32 tasks x 128 KiB = 4 MiB collected),
 and only GiB-scale bitmaps trade scan parallelism for driver safety.
 """
@@ -46,17 +46,20 @@ def _split_key(h):
     return h1, h2
 
 
+# Driver intake bound for build_bloom's per-partition bitmap collect.
+_MAX_COLLECT_BYTES = 1 << 30
+
+
 def build_bloom(
     df: DataFrame,
     col: str,
     n_bits: int = 1 << 20,
     n_hashes: int = 5,
-    max_collect_bytes: int = 1 << 30,
 ):
     """Build the bitmap (numpy uint8 array of n_bits/8 bytes) from a
     DataFrame's 64-bit hash column. Runs ONE Spark job (the bitmap
     collect) — eager, like the IVF centroid collect; driver intake is
-    bounded by ``max_collect_bytes`` (partitions coalesce only when a
+    bounded by ``_MAX_COLLECT_BYTES`` (partitions coalesce only when a
     GiB-scale bitmap would otherwise multiply past it — the common
     sub-MiB bloom builds at full scan parallelism). NULL keys are
     ignored — filtered OUT BEFORE the Arrow hop: a single NULL in a
@@ -90,7 +93,7 @@ def build_bloom(
 
     # null filter BEFORE mapInPandas: batches must stay pure int64
     members = df.select(col).where(F.col(col).isNotNull())
-    cap = max(1, max_collect_bytes // nbytes)
+    cap = max(1, _MAX_COLLECT_BYTES // nbytes)
     # partition-count estimate from PLAN METADATA (file listing /
     # cluster parallelism), never df.rdd — the rdd probe executes
     # upstream stages under AQE (operators/fanout.py docstring)

@@ -1,5 +1,5 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram
-Jaccard.
+"""Deduplication operators: exact, MinHash+LSH, SimHash, blocked
+n-gram Jaccard.
 
 Scale design (the point of each algorithm):
 
@@ -15,7 +15,7 @@ Scale design (the point of each algorithm):
   distance. Bit-split blocking gives the same join-not-crossjoin
   property.
 - **n-gram Jaccard** — exact verifier for candidate pairs produced by
-  the approximate methods (never run it all-pairs at scale).
+  blocking (never run it all-pairs at scale).
 
 Hash policy (text.gram_hash64 docstring has the numbers): operators
 whose OUTPUT carries hash values (minhash signatures, LSH band keys,
@@ -1243,15 +1243,6 @@ def prefix_filter_jaccard_pairs(
     )
 
 
-def ngram_jaccard(text1: Column, text2: Column, n: int = 3) -> Column:
-    """Exact Jaccard similarity of distinct character n-gram sets."""
-    g1 = F.array_distinct(char_ngrams(text1, n))
-    g2 = F.array_distinct(char_ngrams(text2, n))
-    inter = F.size(F.array_intersect(g1, g2)).cast("double")
-    union = F.size(g1) + F.size(g2) - F.size(F.array_intersect(g1, g2))
-    return F.round(inter / union.cast("double"), 6)
-
-
 # The two star-contraction phases and the convergence test of
 # connected_components, each as ONE SQL statement (see the loop-body
 # comment in connected_components for why SQL instead of chained
@@ -1299,13 +1290,7 @@ SELECT n FROM (
 """
 
 
-def connected_components(
-    pairs: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iter: int = 20,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over an undirected pair relation via
     alternating large-star / small-star contraction (Kiveris,
     Lattanzi, Mirrokni, Rastogi & Vassilvitskii, SoCC'14 "Connected
@@ -1347,22 +1332,20 @@ def connected_components(
 
     Output: (node, component) — component = min node id reachable.
 
-    ``checkpoint_dir``: when set, rounds checkpoint RELIABLY to that
-    (fault-tolerant, shared at cluster scale) directory instead of
-    ``localCheckpoint`` — local checkpoint blocks live on executors,
-    so one lost executor aborts a long iterative job; reliable
-    checkpoint survives it. Default stays local (no extra I/O) for
-    short local runs. Checkpointing per phase also cuts the doubling
-    lineage (each phase reads its predecessor twice: the undirected
-    union)."""
+    Each phase's edge set goes through ``cache.truncate_lineage``:
+    ``localCheckpoint`` by default, a RELIABLE checkpoint when
+    ``$SPARK_GRAFT_CHECKPOINT_DIR`` is set — local checkpoint blocks
+    live on executors, so one lost executor aborts a long iterative
+    job; reliable checkpoint survives it. Checkpointing per phase
+    also cuts the doubling lineage (each phase reads its predecessor
+    twice: the undirected union)."""
     spark = pairs.sparkSession
 
     def _ckpt(df: DataFrame) -> DataFrame:
         # lazy (eager=False): each round's checkpoint materializes
         # inside that round's convergence-test job, not as an extra
-        # job here. truncate_lineage also honors the
-        # SPARK_GRAFT_CHECKPOINT_DIR env default (r17 item 3).
-        return truncate_lineage(df, checkpoint_dir, eager=False)
+        # job here.
+        return truncate_lineage(df, eager=False)
 
     # The pair relation is consumed TWICE — the initial edge set here
     # and the node universe for the final label join — and callers
@@ -1372,7 +1355,7 @@ def connected_components(
     # build was ~39 s of the probe's 83 s — HALF the query, dwarfing
     # the contraction rounds themselves.
     ids = track(
-        pairs.select(F.col(id1).alias("_i1"), F.col(id2).alias("_i2"))
+        pairs.select(F.col("id1").alias("_i1"), F.col("id2").alias("_i2"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
@@ -1626,44 +1609,22 @@ def cross_group_gram_overlap(
     )
 
 
-def simhash(text: Column, bits: int = 16) -> Column:
-    """SimHash fingerprint over whitespace tokens.
-
-    For each bit b: sum +1/-1 over tokens by the token-hash's bit b;
-    fingerprint bit b is set iff the sum is strictly positive. 16 bits
-    keeps the closed-form oracle tractable; the library accepts up to
-    32 (md5_hash32 width).
-    """
-    toks = whitespace_tokens(text)
-    hashes = F.transform(toks, md5_hash32)
-
-    def _bit_merge(b: int):
-        return lambda s, h: s + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-        ).otherwise(F.lit(-1))
-
-    acc = F.lit(0).cast("long")
-    for b in range(bits):
-        contrib = F.aggregate(hashes, F.lit(0).cast("long"), _bit_merge(b))
-        acc = acc + F.when(contrib > 0, F.lit(1 << b)).otherwise(F.lit(0))
-    return acc
-
-
 def simhash_table(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
     """SimHash via explode -> hash-once -> one aggregation.
 
-    Same rationale as minhash_signatures: the expression form
-    (simhash) re-hashes the token array once per bit. Exploding
-    tokens hashes each token once; all ``bits`` signed sums compute in
-    a single partial-aggregated groupBy, then one projection packs the
+    For each bit b: sum +1/-1 over tokens by the token-hash's bit b;
+    fingerprint bit b is set iff the sum is strictly positive.
+    Same rationale as minhash_signatures: exploding tokens hashes each
+    token once (an expression form re-hashes the token array once per
+    bit); all ``bits`` signed sums compute in a single
+    partial-aggregated groupBy, then one projection packs the
     fingerprint. Output column: ``simhash{bits}``.
     """
     toks = whitespace_tokens(F.col(text_col))
     # explode_outer, not explode: a token-less document (empty or
     # whitespace-only text) must survive as a null-token row so its
     # per-bit sums come out negative and it lands at simhash=0 —
-    # matching both the expression form (aggregate over empty array
-    # -> 0 -> bit unset) and the SQL oracle (NULL sum -> bit unset).
+    # matching the SQL oracle (NULL sum -> bit unset).
     # Plain explode would silently drop such documents.
     exploded = df.select(F.col(id_col), F.explode_outer(toks).alias("_tok"))
     hashed = exploded.select(F.col(id_col), md5_hash32(F.col("_tok")).alias("_h"))
@@ -1887,7 +1848,6 @@ def greedy_max_coverage(
     id_col: str,
     k: int = 5,
     n: int = 8,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Greedy maximum-coverage data selection (the classic (1-1/e)
     submodular greedy — Nemhauser, Wolsey & Fisher 1978): pick k
@@ -1942,8 +1902,7 @@ def greedy_max_coverage(
     )
     track(g)
     gains = truncate_lineage(
-        g.groupBy("_id").agg(F.count("*").alias("_gain")),
-        checkpoint_dir,
+        g.groupBy("_id").agg(F.count("*").alias("_gain"))
     )
     covered = None  # running union, <= k x |doc grams| rows
     chosen: list = []
@@ -1996,7 +1955,7 @@ def greedy_max_coverage(
         # doc-read + anti-join plan inside each broadcast build
         # (measured 3.5 vs 4.1 s at sf0.1). covered is then a flat
         # union of materialized blocks — no further checkpoint.
-        new_cov = truncate_lineage(new_cov, checkpoint_dir)
+        new_cov = truncate_lineage(new_cov)
         covered = (
             new_cov if covered is None else covered.union(new_cov)
         )
@@ -2015,8 +1974,7 @@ def greedy_max_coverage(
                 (
                     F.col("_gain") - F.coalesce(F.col("_d"), F.lit(0))
                 ).alias("_gain"),
-            ),
-            checkpoint_dir,
+            )
         )
     id_type = df.schema[id_col].dataType.simpleString()
     return local_frame(

@@ -48,11 +48,8 @@ def _undirect(edges: DataFrame, id1: str, id2: str) -> DataFrame:
 
 def pagerank(
     edges: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """PageRank restricted to the nodes of an undirected edge
     relation. Every endpoint has degree >= 1 by construction, so
@@ -71,10 +68,9 @@ def pagerank(
     # Eager checkpoint, not persist (r16, the hits() lesson): the
     # loop re-analyzes adj's upstream plan once per round — for kNN
     # producers that subplan embeds the folded centroid literals and
-    # analysis dominates the node-count-sized joins. Local by
-    # default; ``checkpoint_dir`` switches to reliable checkpoint
-    # (the connected_components convention — VERDICT r16 item 3).
-    adj = truncate_lineage(_undirect(edges, id1, id2), checkpoint_dir)
+    # analysis dominates the node-count-sized joins. Local unless
+    # $SPARK_GRAFT_CHECKPOINT_DIR is set (cache.truncate_lineage).
+    adj = truncate_lineage(_undirect(edges, "id1", "id2"))
     deg = adj.groupBy("src").agg(F.count("*").alias("deg"))
     n = deg.count()
     base = F.lit((1.0 - damping) / n)
@@ -110,12 +106,7 @@ def pagerank(
     )
 
 
-def triangle_stats(
-    edges: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Per-node triangle count and local clustering coefficient over
     an undirected (id1 < id2) edge relation.
 
@@ -131,10 +122,10 @@ def triangle_stats(
     """
     # Eager checkpoint of the edge projection (r16, the hits()
     # lesson): deg and oriented each re-analyzed the producer's full
-    # subplan; one leaf feeds both. Local unless checkpoint_dir.
+    # subplan; one leaf feeds both. Local unless
+    # $SPARK_GRAFT_CHECKPOINT_DIR is set.
     e = truncate_lineage(
-        edges.select(F.col(id1).alias("_a"), F.col(id2).alias("_b")),
-        checkpoint_dir,
+        edges.select(F.col("id1").alias("_a"), F.col("id2").alias("_b"))
     )
     adj = _undirect(e, "_a", "_b")
     deg = adj.groupBy("src").agg(F.count("*").alias("deg")).select(
@@ -197,10 +188,7 @@ def triangle_stats(
 def label_propagation(
     edges: DataFrame,
     seeds: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
     rounds: int = 2,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Semi-supervised label propagation (Zhu & Ghahramani 2002 shape,
     synchronous updates): seed nodes carry a fixed label; each round,
@@ -226,8 +214,8 @@ def label_propagation(
         raise ValueError("rounds must be >= 1")
     # Eager checkpoint, not persist (r16, the hits() lesson — adj and
     # the adj-derived nodes relation are re-analyzed every round).
-    # Local unless checkpoint_dir (the CC convention).
-    adj = truncate_lineage(_undirect(edges, id1, id2), checkpoint_dir)
+    # Local unless $SPARK_GRAFT_CHECKPOINT_DIR is set.
+    adj = truncate_lineage(_undirect(edges, "id1", "id2"))
     nodes = adj.select("src").distinct().withColumnRenamed("src", "node")
     seed = F.broadcast(
         seeds.select(F.col("node"), F.col("label").alias("_seed_label"))
@@ -273,14 +261,7 @@ def label_propagation(
     )
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int = 3,
-    rounds: int = 3,
-    id1: str = "id1",
-    id2: str = "id2",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     """``rounds`` synchronous peel rounds toward the k-core
     (Matula & Beck 1983 / Seidman 1983): each round drops every node
     whose CURRENT degree is < k, then discards edges touching a
@@ -311,10 +292,7 @@ def kcore_peel(
     # inside that action: measured 121 s at sf10 vs ~40 s for the
     # build itself (exp +1.39). Eager materialization runs the build
     # exactly once, at construction time.
-    e = truncate_lineage(
-        edges.select(F.col(id1).alias("id1"), F.col(id2).alias("id2")),
-        checkpoint_dir,
-    )
+    e = truncate_lineage(edges.select("id1", "id2"))
     counts = []
 
     def _snapshot(rnd: int, ecur: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -342,8 +320,7 @@ def kcore_peel(
         e = truncate_lineage(
             e.join(alive.withColumnRenamed("node", "id1"), "id1", "left_semi")
             .join(alive.withColumnRenamed("node", "id2"), "id2", "left_semi")
-            .select("id1", "id2"),
-            checkpoint_dir,
+            .select("id1", "id2")
         )
         counts.append(_snapshot(r, e, alive))
     out = counts[0]
@@ -352,13 +329,7 @@ def kcore_peel(
     return out
 
 
-def hits(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 3,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """HITS hubs & authorities (Kleinberg, JACM 1999) over a DIRECTED
     edge relation — on a kNN graph the asymmetry is the interesting
     part: a high-AUTHORITY vector is one many other vectors choose as
@@ -396,8 +367,7 @@ def hits(
     # collapses the input to a leaf once; blocks are node-count-sized
     # and die with the session (the CC/NN-Descent lineage rule).
     e = truncate_lineage(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")),
-        checkpoint_dir,
+        edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
     )
     if e.isEmpty():
         # empty-in / empty-out (r15 ADVICE): without the guard the
@@ -405,7 +375,7 @@ def hits(
         # raises mid-iteration; an empty graph simply has no nodes
         # to score, so hand back an empty frame with the output
         # schema instead of raising.
-        node_t = edges.schema[src].dataType
+        node_t = edges.schema["src"].dataType
         return local_frame(
             edges.sparkSession,
             [],
@@ -456,8 +426,8 @@ def hits(
             (F.col("_hr") / F.lit(float(hmax))).alias("_h"),
         )
         if (_it + 1) % _CKPT_EVERY == 0 and _it + 1 < iterations:
-            a = truncate_lineage(a, checkpoint_dir)
-            h = truncate_lineage(h, checkpoint_dir)
+            a = truncate_lineage(a)
+            h = truncate_lineage(h)
     return (
         nodes.join(h, "node", "left")
         .join(a, "node", "left")

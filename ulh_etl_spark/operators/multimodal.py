@@ -293,12 +293,14 @@ def decode_wav_pcm16(content: bytes) -> dict:
         }
 
 
-def audio_energy_fingerprint(
-    content: bytes, n_bits: int = 60, threshold: float = 8000.0
-) -> int:
+# Mean |amplitude| (PCM16) at or above which an envelope frame is loud.
+_ENERGY_THRESHOLD = 8000.0
+
+
+def audio_energy_fingerprint(content: bytes, n_bits: int = 60) -> int:
     """Energy-envelope audio fingerprint over REAL WAV bytes: the
     stream splits into ``n_bits`` equal frames; bit i is set iff
-    frame i's mean |amplitude| >= ``threshold``. The chromaprint-
+    frame i's mean |amplitude| >= 8000. The chromaprint-
     style loud/quiet envelope at its simplest — deterministic,
     codec-real (stdlib decode), and band-joinable exactly like an
     image phash (:func:`phash_neardup_pairs` is hash-agnostic).
@@ -340,7 +342,7 @@ def audio_energy_fingerprint(
     frame = max(1, n // n_bits)
     for i in range(n_bits):
         seg = s[i * frame : (i + 1) * frame]
-        if seg.size and seg.sum() / seg.size >= threshold:
+        if seg.size and seg.sum() / seg.size >= _ENERGY_THRESHOLD:
             fp |= 1 << i
     return fp
 
@@ -382,8 +384,6 @@ def decode_media(
     df: DataFrame,
     decoder: Callable[[bytes], dict],
     out_fields: str,
-    id_col: str = "media_id",
-    content_col: str = "content",
 ) -> DataFrame:
     """Decode each media blob into typed metadata fields via
     ``mapInPandas``: Arrow ships (id, bytes) batches to Python, the
@@ -399,51 +399,44 @@ def decode_media(
 
     def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            decoded = [decoder(b) for b in pdf[content_col]]
-            out = {id_col: pdf[id_col].values}
+            decoded = [decoder(b) for b in pdf["content"]]
+            out = {"media_id": pdf["media_id"].values}
             for n in names:
                 out[n] = [d[n] for d in decoded]
             yield pd.DataFrame(out)
 
-    return _spread(df.select(id_col, content_col)).mapInPandas(
-        _run, schema=f"{id_col} long, {out_fields}"
+    return _spread(df.select("media_id", "content")).mapInPandas(
+        _run, schema=f"media_id long, {out_fields}"
     )
 
 
-def resize_images(
-    df: DataFrame,
-    target_w: int,
-    target_h: int,
-    resizer: Callable[[bytes, int, int], bytes] | None = None,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
-    """Image resize as a binary->binary mapInPandas stage. The default
-    ``resizer`` is the deterministic fake (md5-stamped header +
-    truncation) standing in for a real codec; the Spark plumbing —
-    Arrow binary round-trip, schema, batching — is the real article.
+def _fake_resize(content: bytes, w: int, h: int) -> bytes:
+    stamp = f"RSZ:{w}x{h}:".encode() + hashlib.md5(content).digest()[:4]
+    return stamp + content[: max(0, 256 - len(stamp))]
+
+
+def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
+    """Image resize as a binary->binary mapInPandas stage. The kernel
+    is a deterministic fake (md5-stamped header + truncation)
+    standing in for a real codec; the Spark plumbing — Arrow binary
+    round-trip, schema, batching — is the real article.
     """
     import pandas as pd
-
-    if resizer is None:
-        def resizer(content: bytes, w: int, h: int) -> bytes:  # fake kernel
-            stamp = f"RSZ:{w}x{h}:".encode() + hashlib.md5(content).digest()[:4]
-            return stamp + content[: max(0, 256 - len(stamp))]
 
     def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
-                    "content": [resizer(b, target_w, target_h)
-                                for b in pdf[content_col]],
+                    "media_id": pdf["media_id"].values,
+                    "content": [_fake_resize(b, target_w, target_h)
+                                for b in pdf["content"]],
                     "width": target_w,
                     "height": target_h,
                 }
             )
 
-    return _spread(df.select(id_col, content_col)).mapInPandas(
-        _run, schema=f"{id_col} long, content binary, width int, height int"
+    return _spread(df.select("media_id", "content")).mapInPandas(
+        _run, schema="media_id long, content binary, width int, height int"
     )
 
 
@@ -452,8 +445,6 @@ def sample_frames(
     every_nth: int = 30,
     max_frames: int = 8,
     frame_extractor: Callable[[bytes, int], bytes] | None = None,
-    id_col: str = "media_id",
-    content_col: str = "content",
 ) -> DataFrame:
     """Video frame sampling: one output row per sampled frame
     (media_id, frame_idx, frame bytes) — the explode-shaped
@@ -468,16 +459,18 @@ def sample_frames(
     def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for mid, content in zip(pdf[id_col], pdf[content_col]):
+            for mid, content in zip(pdf["media_id"], pdf["content"]):
                 n = min(max_frames, max(1, len(content) // every_nth))
                 for k in range(n):
                     ids.append(mid)
                     idxs.append(k * every_nth)
                     frames.append(frame_extractor(content, k * every_nth))
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
+            yield pd.DataFrame(
+                {"media_id": ids, "frame_idx": idxs, "frame": frames}
+            )
 
-    return _spread(df.select(id_col, content_col)).mapInPandas(
-        _run, schema=f"{id_col} long, frame_idx int, frame binary"
+    return _spread(df.select("media_id", "content")).mapInPandas(
+        _run, schema="media_id long, frame_idx int, frame binary"
     )
 
 
@@ -485,8 +478,6 @@ def embed_media(
     df: DataFrame,
     dim: int = 8,
     embedder: Callable[[bytes], list] | None = None,
-    id_col: str = "media_id",
-    content_col: str = "content",
     vec_type: str = "float",
 ) -> DataFrame:
     """Media -> embedding vector (array<``vec_type``>): the
@@ -510,22 +501,26 @@ def embed_media(
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
-                    "embedding": [embedder(b) for b in pdf[content_col]],
+                    "media_id": pdf["media_id"].values,
+                    "embedding": [embedder(b) for b in pdf["content"]],
                 }
             )
 
-    return _spread(df.select(id_col, content_col)).mapInPandas(
-        _run, schema=f"{id_col} long, embedding array<{vec_type}>"
+    return _spread(df.select("media_id", "content")).mapInPandas(
+        _run, schema=f"media_id long, embedding array<{vec_type}>"
     )
 
 
 # ------------------------------------------------- perceptual-hash dedup
 
 
-def dhash_image(content: bytes, hash_size: int = 8) -> int:
+# dHash grid side: 8 x 8 comparisons, a 64-bit hash.
+_DHASH_SIZE = 8
+
+
+def dhash_image(content: bytes) -> int:
     """REAL difference-hash (dHash): decode, grayscale, box-downsample
-    to (hash_size+1) x hash_size, set bit (row-major) iff the left
+    to 9 x 8, set bit (row-major) iff the left
     cell is brighter than its right neighbor. Near-identical images
     (recompression, small edits, resize) land within a few bits; the
     standard cheap image near-dup signature. PIL path for any format;
@@ -539,8 +534,8 @@ def dhash_image(content: bytes, hash_size: int = 8) -> int:
 
     import numpy as np
 
-    w = hash_size + 1
-    h = hash_size
+    w = _DHASH_SIZE + 1
+    h = _DHASH_SIZE
     if Image is not None:
         import io
 
@@ -570,7 +565,7 @@ def dhash_image(content: bytes, hash_size: int = 8) -> int:
     areas = np.outer(np.diff(ys), np.diff(xs))
     means = box_sums // areas  # (h, w) grid
 
-    cmp = means[:, :hash_size] > means[:, 1:]  # left brighter than right
+    cmp = means[:, :_DHASH_SIZE] > means[:, 1:]  # left brighter than right
     bits = 0
     for i, v in enumerate(cmp.reshape(-1)):
         if v:
@@ -580,9 +575,6 @@ def dhash_image(content: bytes, hash_size: int = 8) -> int:
 
 def frame_scene_changes(
     frame_phashes: DataFrame,
-    id_col: str = "media_id",
-    idx_col: str = "frame_idx",
-    hash_col: str = "phash",
     threshold: int = 10,
 ) -> DataFrame:
     """Video scene-change detection over per-frame perceptual hashes:
@@ -600,13 +592,13 @@ def frame_scene_changes(
     (id, idx, long), the same narrow-feature contract as media_phash."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy(idx_col)
+    w = Window.partitionBy("media_id").orderBy("frame_idx")
     ham = F.bit_count(
-        F.col(hash_col).bitwiseXOR(F.lag(hash_col).over(w))
+        F.col("phash").bitwiseXOR(F.lag("phash").over(w))
     )
     return (
         frame_phashes.withColumn("_ham", ham)
-        .groupBy(id_col)
+        .groupBy("media_id")
         .agg(
             F.count("*").alias("n_frames"),
             F.coalesce(
@@ -633,8 +625,6 @@ def portable_phash(content: bytes) -> int:
 def media_phash(
     df: DataFrame,
     hasher: Callable[[bytes], int] = dhash_image,
-    id_col: str = "media_id",
-    content_col: str = "content",
 ) -> DataFrame:
     """Per-media 64-bit perceptual hash via Arrow mapInPandas — the
     narrow feature stage feeding visual near-dup dedup. The binary
@@ -648,23 +638,21 @@ def media_phash(
             # raises casting values >= 2^63 to the declared long).
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "media_id": pdf["media_id"].values,
                     "phash": [
                         h - (1 << 64) if h >= (1 << 63) else h
-                        for h in (hasher(b) for b in pdf[content_col])
+                        for h in (hasher(b) for b in pdf["content"])
                     ],
                 }
             )
 
-    return _spread(df.select(id_col, content_col)).mapInPandas(
-        _run, schema=f"{id_col} long, phash long"
+    return _spread(df.select("media_id", "content")).mapInPandas(
+        _run, schema="media_id long, phash long"
     )
 
 
 def phash_neardup_pairs(
     phashes: DataFrame,
-    id_col: str = "media_id",
-    hash_col: str = "phash",
     bits: int = 64,
     bands: int = 4,
     max_hamming: int = 3,
@@ -692,7 +680,7 @@ def phash_neardup_pairs(
         *[
             F.struct(
                 F.lit(b).alias("band_idx"),
-                F.shiftright(F.col(hash_col), b * bw)
+                F.shiftright(F.col("phash"), b * bw)
                 .bitwiseAND(F.lit(mask))
                 .alias("band_val"),
             )
@@ -700,15 +688,15 @@ def phash_neardup_pairs(
         ]
     )
     bt = phashes.select(
-        F.col(id_col), F.col(hash_col), F.explode(band_arr).alias("_b")
+        F.col("media_id"), F.col("phash"), F.explode(band_arr).alias("_b")
     ).select(
-        id_col, hash_col, F.col("_b.band_idx").alias("band_idx"),
+        "media_id", "phash", F.col("_b.band_idx").alias("band_idx"),
         F.col("_b.band_val").alias("band_val"),
     )
     a, b = bt.alias("a"), bt.alias("b")
-    ia, ib = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    ia, ib = F.col("a.media_id"), F.col("b.media_id")
     ham = F.bit_count(
-        F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
+        F.col("a.phash").bitwiseXOR(F.col("b.phash"))
     )
     return (
         a.join(

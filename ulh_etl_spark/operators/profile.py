@@ -3,14 +3,10 @@ before/after a load (the table-level companion of validate.py's
 file-level prechecks): per column, non-null count, exact distinct
 count, and min/max rendered as strings.
 
-Scale: ONE pass over the relation — all metrics for all columns go
-into a single agg (partial-aggregated map-side). Exact
-countDistinct over many columns expands the aggregate (one
-shuffled copy per distinct column — Spark's Expand); at true
-corpus scale swap `exact=False` to approx_count_distinct (HLL,
-constant memory, no expand) — the default stays exact because the
-profile IS the correctness artifact here and the DuckDB oracle is
-exact."""
+Scale: one two-phase aggregate leg per column (see
+``profile_columns``), never Spark's Expand. Distinct counts are
+exact, not HLL: the profile IS the correctness artifact here and the
+DuckDB oracle is exact."""
 
 from __future__ import annotations
 
@@ -18,11 +14,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def profile_columns(df: DataFrame, cols: list, exact: bool = True) -> DataFrame:
+def profile_columns(df: DataFrame, cols: list) -> DataFrame:
     """One row per profiled column:
     (column, n_nonnull, n_distinct, min_value, max_value).
 
-    r16 plan restructure for the exact path (values unchanged): the
+    r16 plan restructure (values unchanged): the
     old single agg with one ``countDistinct`` per column planned as
     Spark's Expand — |cols| + 1 shuffled copies of EVERY input row.
     Now each column is its own two-phase leg: ``groupBy(col)`` first
@@ -41,63 +37,39 @@ def profile_columns(df: DataFrame, cols: list, exact: bool = True) -> DataFrame:
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"unknown columns: {missing}")
-    if exact:
-        legs = []
-        for c in cols:
-            g = df.select(c).groupBy(c).agg(F.count("*").alias("_cnt"))
-            legs.append(
-                g.agg(
-                    F.coalesce(
-                        F.sum(
-                            F.when(F.col(c).isNotNull(), F.col("_cnt"))
-                        ),
-                        F.lit(0),
-                    )
-                    .cast("long")
-                    .alias("n_nonnull"),
-                    F.count(F.col(c)).cast("long").alias("n_distinct"),
-                    F.min(F.col(c)).cast("string").alias("min_value"),
-                    F.max(F.col(c)).cast("string").alias("max_value"),
-                ).select(
-                    F.lit(c).alias("column"),
-                    "n_nonnull",
-                    "n_distinct",
-                    "min_value",
-                    "max_value",
-                )
-            )
-        out = legs[0]
-        for leg in legs[1:]:
-            out = out.unionByName(leg)
-        return out
-    aggs = []
+    legs = []
     for c in cols:
-        aggs += [
-            F.count(F.col(c)).alias(f"{c}__nn"),
-            F.approx_count_distinct(F.col(c)).alias(f"{c}__nd"),
-            F.min(F.col(c)).cast("string").alias(f"{c}__min"),
-            F.max(F.col(c)).cast("string").alias(f"{c}__max"),
-        ]
-    wide = df.agg(*aggs)
-    rows = F.array(
-        *[
-            F.struct(
+        g = df.select(c).groupBy(c).agg(F.count("*").alias("_cnt"))
+        legs.append(
+            g.agg(
+                F.coalesce(
+                    F.sum(
+                        F.when(F.col(c).isNotNull(), F.col("_cnt"))
+                    ),
+                    F.lit(0),
+                )
+                .cast("long")
+                .alias("n_nonnull"),
+                F.count(F.col(c)).cast("long").alias("n_distinct"),
+                F.min(F.col(c)).cast("string").alias("min_value"),
+                F.max(F.col(c)).cast("string").alias("max_value"),
+            ).select(
                 F.lit(c).alias("column"),
-                F.col(f"{c}__nn").cast("long").alias("n_nonnull"),
-                F.col(f"{c}__nd").cast("long").alias("n_distinct"),
-                F.col(f"{c}__min").alias("min_value"),
-                F.col(f"{c}__max").alias("max_value"),
+                "n_nonnull",
+                "n_distinct",
+                "min_value",
+                "max_value",
             )
-            for c in cols
-        ]
-    )
-    return wide.select(F.explode(rows).alias("_r")).select("_r.*")
+        )
+    out = legs[0]
+    for leg in legs[1:]:
+        out = out.unionByName(leg)
+    return out
 
 
 def embedding_psi_drift(
     ref: DataFrame,
     cur: DataFrame,
-    vec_col: str = "embedding",
     dims: int = 8,
     bins: int = 4,
 ) -> DataFrame:
@@ -132,7 +104,7 @@ def embedding_psi_drift(
     def _expl(df: DataFrame, snap: int) -> DataFrame:
         return df.select(
             F.lit(snap).alias("snap"),
-            F.posexplode(F.slice(F.col(vec_col), 1, dims)).alias("dim", "x"),
+            F.posexplode(F.slice(F.col("embedding"), 1, dims)).alias("dim", "x"),
         )
 
     expl = _expl(ref, 0).unionByName(_expl(cur, 1)).select(
@@ -185,7 +157,6 @@ def embedding_psi_drift(
 def embedding_ks_drift(
     ref: DataFrame,
     cur: DataFrame,
-    vec_col: str = "embedding",
     dims: int = 8,
 ) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov drift between two embedding
@@ -217,7 +188,7 @@ def embedding_ks_drift(
     def _expl(df: DataFrame, snap: int) -> DataFrame:
         return df.select(
             F.lit(snap).alias("snap"),
-            F.posexplode(F.slice(F.col(vec_col), 1, dims)).alias("dim", "x"),
+            F.posexplode(F.slice(F.col("embedding"), 1, dims)).alias("dim", "x"),
         )
 
     expl = _expl(ref, 0).unionByName(_expl(cur, 1)).select(

@@ -11,7 +11,7 @@ with the plan a distributed sort actually wants:
    sorts, so it scales to arbitrary data sizes.
 2. a per-PARTITION ``row_number`` window (parallelism = number of
    range partitions, each task sorts only its slice),
-3. per-partition counts collected to the driver (<= num_partitions
+3. per-partition counts collected to the driver (<= defaultParallelism
    rows — driver-small by construction) and folded back in as a
    cumulative-offset array literal indexed by partition id,
 4. global rank = offset[pid] + local rank; the ntile bucket follows
@@ -63,7 +63,6 @@ def global_ntile(
     order_by: list[str | Column],
     k: int,
     out_col: str = "ntile",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append ``out_col`` = ``ntile(k) OVER (ORDER BY *order_by)``
     without an unpartitioned window. ``order_by`` must be a total
@@ -74,7 +73,7 @@ def global_ntile(
     consumer must see identical partition ids), which pins every
     incoming column — pre-project ``df`` to the columns you need
     before calling, since Catalyst cannot prune through the cache."""
-    local, rank_col, n = _global_index(df, order_by, num_partitions)
+    local, rank_col, n = _global_index(df, order_by)
     base, extra = n // k, n % k  # first `extra` buckets get base+1 rows
     cut = extra * (base + 1)
     if base == 0:
@@ -90,27 +89,23 @@ def global_row_number(
     df: DataFrame,
     order_by: list[str | Column],
     out_col: str = "row_num",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append ``out_col`` = ``row_number() OVER (ORDER BY *order_by)``
     (1-based) with the same scale-safe shape as :func:`global_ntile`
     — the global-index primitive behind deterministic corpus
     shuffling, sharded export, and position-based sampling. Same
     total-order and pre-projection contracts."""
-    local, rank_col, _n = _global_index(df, order_by, num_partitions)
+    local, rank_col, _n = _global_index(df, order_by)
     return local.withColumn(out_col, rank_col.cast("long")).drop("_pid", "_lrn")
 
 
 def _global_index(
-    df: DataFrame,
-    order_by: list[str | Column],
-    num_partitions: int | None,
+    df: DataFrame, order_by: list[str | Column]
 ) -> tuple[DataFrame, Column, int]:
-    """Shared core: range-repartition + per-slice rank + driver
-    offsets. Returns (frame with _pid/_lrn, 1-based global-rank
-    column, total row count)."""
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism
+    """Shared core: range-repartition into defaultParallelism slices +
+    per-slice rank + driver offsets. Returns (frame with _pid/_lrn,
+    1-based global-rank column, total row count)."""
+    num_partitions = df.sparkSession.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
 
     ranged = df.repartitionByRange(num_partitions, *cols).withColumn(
@@ -153,13 +148,13 @@ def group_quantile_calibrate(
     value_col: str,
     group_col: str,
     keep_frac: float | None = None,
-    out_col: str = "calibrated",
 ):
     """Per-group quantile calibration: map ``value_col`` to its
-    percent_rank WITHIN its group, making scores comparable across
-    groups with different scales/distributions — the source-fair
-    quality thresholding pass (CCNet applies it to perplexity per
-    language; same trick for heuristic quality per crawl source). A
+    percent_rank WITHIN its group (column ``calibrated``), making
+    scores comparable across groups with different
+    scales/distributions — the source-fair quality thresholding pass
+    (CCNet applies it to perplexity per language; same trick for
+    heuristic quality per crawl source). A
     single global cutoff on the raw score over-prunes whole sources
     whose scores run low; cutting on the calibrated rank keeps the
     same fraction of every group.
@@ -179,9 +174,9 @@ def group_quantile_calibrate(
     if keep_frac is not None and not 0.0 < keep_frac <= 1.0:
         raise ValueError("keep_frac must be in (0, 1]")
     w = Window.partitionBy(group_col).orderBy(value_col)
-    out = df.withColumn(out_col, F.round(F.percent_rank().over(w), 6))
+    out = df.withColumn("calibrated", F.round(F.percent_rank().over(w), 6))
     if keep_frac is not None:
         out = out.withColumn(
-            "keep", F.col(out_col) >= F.lit(1.0) - F.lit(keep_frac)
+            "keep", F.col("calibrated") >= F.lit(1.0) - F.lit(keep_frac)
         )
     return out

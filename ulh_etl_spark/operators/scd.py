@@ -28,12 +28,10 @@ def scd2_apply(
     keys: list[str],
     attr_cols: list[str],
     eff_col: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """Apply ``snapshot`` (one row per key, effective at ``eff_col``)
-    to an SCD2 ``history``; returns the new history.
+    to an SCD2 ``history`` versioned by (valid_from, valid_to,
+    is_current); returns the new history.
 
     Per key: unchanged attrs -> open version passes through; changed
     attrs -> open version closes at the snapshot's effective time and
@@ -42,8 +40,8 @@ def scd2_apply(
     is an upsert feed, not a full mirror — deletions are a separate
     op). Closed versions always pass through untouched.
     """
-    open_rows = history.filter(F.col(current_col))
-    closed_rows = history.filter(~F.col(current_col))
+    open_rows = history.filter(F.col("is_current"))
+    closed_rows = history.filter(~F.col("is_current"))
 
     # Fingerprint via JSON of a struct with nulls KEPT — concat_ws
     # silently skips NULL columns, so (NULL,'x') and ('x',NULL) (or a
@@ -58,7 +56,7 @@ def scd2_apply(
     o = open_rows.select(
         *keys,
         *attr_cols,
-        F.col(valid_from),
+        F.col("valid_from"),
         F.lit(0).alias("_prio"),
         fp.alias("_fp"),
         F.lit(None).cast("timestamp").alias("_eff"),
@@ -69,7 +67,7 @@ def scd2_apply(
         F.col(eff_col).cast("timestamp").alias("_eff"),
     ).select(
         "*",
-        F.col("_eff").alias(valid_from),
+        F.col("_eff").alias("valid_from"),
         F.lit(1).alias("_prio"),
         fp.alias("_fp"),
     )
@@ -94,10 +92,10 @@ def scd2_apply(
     out = annotated.filter(keep).select(
         *keys,
         *attr_cols,
-        F.col(valid_from),
+        F.col("valid_from"),
         F.when((F.col("_prio") == 0) & F.col("_changed"), F.col("_eff1"))
         .otherwise(F.lit(None).cast("timestamp"))
-        .alias(valid_to),
-        (~((F.col("_prio") == 0) & F.col("_changed"))).alias(current_col),
+        .alias("valid_to"),
+        (~((F.col("_prio") == 0) & F.col("_changed"))).alias("is_current"),
     )
     return closed_rows.select(*out.columns).unionByName(out)

@@ -38,31 +38,24 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def rp_signs(out_dim: int, in_dim: int, salt: str = "jlproj") -> list[list[float]]:
+def rp_signs(out_dim: int, in_dim: int) -> list[list[float]]:
     """Deterministic ±1 Rademacher projection matrix (out_dim x
     in_dim) from md5 — reproducible on any engine/driver with no RNG
     state (hash_split's determinism rationale). Sign(k, j) = +1 iff
-    the first hex digit of md5('salt_k_j') is even."""
+    the first hex digit of md5('jlproj_k_j') is even."""
     import hashlib
 
     out = []
     for k in range(out_dim):
         row = []
         for j in range(in_dim):
-            h = hashlib.md5(f"{salt}_{k}_{j}".encode()).hexdigest()
+            h = hashlib.md5(f"jlproj_{k}_{j}".encode()).hexdigest()
             row.append(1.0 if int(h[0], 16) % 2 == 0 else -1.0)
         out.append(row)
     return out
 
 
-def random_projection(
-    df: DataFrame,
-    dim: int,
-    out_dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "jlproj",
-) -> DataFrame:
+def random_projection(df: DataFrame, dim: int, out_dim: int) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction: project each
     embedding onto ``out_dim`` deterministic ±1 Rademacher directions
     (Achlioptas 2003 — database-friendly random projections: ±1
@@ -82,7 +75,7 @@ def random_projection(
     Output: (id, r00..r{out_dim-1}) — one double column per reduced
     coordinate (flat columns, not an array: each is independently
     hash-compared)."""
-    signs = rp_signs(out_dim, dim, salt)
+    signs = rp_signs(out_dim, dim)
     # r16: the sign matrix enters as ONE nested-array SQL literal and
     # all out_dim coordinates fold in ONE transform over the row axis
     # (the hyperplane_signature restructure): the per-row formulation
@@ -103,7 +96,7 @@ def random_projection(
             )
         )
     )
-    vec = F.col(vec_col)
+    vec = F.col("embedding")
     dots = F.transform(
         signs2d,
         lambda w: F.aggregate(
@@ -114,9 +107,9 @@ def random_projection(
             lambda acc, x: acc + x,
         ),
     )
-    staged = df.select(F.col(id_col), dots.alias("_dots"))
+    staged = df.select(F.col("vec_id"), dots.alias("_dots"))
     return staged.select(
-        F.col(id_col),
+        F.col("vec_id"),
         *[
             F.round(F.element_at(F.col("_dots"), k + 1), 6).alias(
                 f"r{k:02d}"
@@ -126,13 +119,7 @@ def random_projection(
     )
 
 
-def _cosine_topk_blas(
-    corpus: DataFrame,
-    q_rows,
-    id_col: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
+def _cosine_topk_blas(corpus: DataFrame, q_rows, k: int) -> DataFrame:
     """FOLD-EXACT brute-force scoring kernel for :func:`cosine_topk`
     (r16): the collected query vectors ride the task closure; one
     ``mapInPandas`` pass over the corpus computes every (query,
@@ -169,7 +156,7 @@ def _cosine_topk_blas(
     Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
     nq = _fold_norm(Q)
     b = Q.shape[0]
-    idt = corpus.schema[id_col].dataType
+    idt = corpus.schema["vec_id"].dataType
     out_schema = T.StructType(
         [
             T.StructField("query_id", idt),
@@ -186,12 +173,12 @@ def _cosine_topk_blas(
             m = len(pdf)
             if m == 0:
                 continue
-            nids = pdf[id_col].to_numpy()
+            nids = pdf["vec_id"].to_numpy()
             # pre-sort candidates by id so a STABLE score argsort
             # breaks exact-cosine ties by neighbor_id ascending
             order = np.argsort(nids, kind="stable")
             nids = nids[order]
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)[order]
+            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)[order]
             nv = _fold_norm(V)
             acc = np.zeros((b, m))
             for d in range(Q.shape[1]):
@@ -220,7 +207,7 @@ def _cosine_topk_blas(
                  "_cos": cv[keep]}
             )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
+    scored = corpus.select("vec_id", "embedding").mapInPandas(score, out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("_cos").desc(), F.col("neighbor_id")
     )
@@ -239,8 +226,6 @@ def _cosine_topk_blas(
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     max_collect_queries: int = 4096,
 ) -> DataFrame:
@@ -263,22 +248,22 @@ def cosine_topk(
     sets use ivf_topk instead.
     """
     q_rows = (
-        queries.select(id_col, vec_col)
+        queries.select("vec_id", "embedding")
         .limit(max_collect_queries + 1)
         .collect()
     )
     if 0 < len(q_rows) <= max_collect_queries:
-        return _cosine_topk_blas(corpus, q_rows, id_col, vec_col, k)
+        return _cosine_topk_blas(corpus, q_rows, k)
     # Norms precomputed per row on each side — never per pair: the
     # per-pair l2_norm would triple the interpreted HOF work across
     # |corpus| x |queries| rows. Same arithmetic, same bits.
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("_qn"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"),
+        l2_norm(F.col("embedding")).alias("_qn"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("_cn"),
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"),
+        l2_norm(F.col("embedding")).alias("_cn"),
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -311,8 +296,6 @@ def hard_negatives(
     corpus: DataFrame,
     queries: DataFrame,
     positives: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Hard-negative mining for retrieval/contrastive training (the
@@ -332,12 +315,12 @@ def hard_negatives(
     top-k window. For huge query sets, block by IVF cell first
     (ivf_topk) and anti-join the same way."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("_qn"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"),
+        l2_norm(F.col("embedding")).alias("_qn"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("_cn"),
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"),
+        l2_norm(F.col("embedding")).alias("_cn"),
     )
     pos = positives.select(
         F.col("query_id"), F.col("pos_id").alias("neighbor_id")
@@ -423,9 +406,6 @@ def rrf_fuse(
     legs: "list[DataFrame]",
     k_const: int = 60,
     topk: int = 10,
-    query_col: str = "query_id",
-    item_col: str = "item_id",
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009): fuse any number
     of per-query rankings into one — score(q, d) = sum over legs of
@@ -444,17 +424,17 @@ def rrf_fuse(
     fused = None
     for i, leg in enumerate(legs):
         contrib = leg.select(
-            F.col(query_col),
-            F.col(item_col),
+            F.col("query_id"),
+            F.col("item_id"),
             (
                 F.lit(1.0)
-                / (F.lit(k_const).cast("double") + F.col(rank_col).cast("double"))
+                / (F.lit(k_const).cast("double") + F.col("rank").cast("double"))
             ).alias(f"_s{i}"),
         )
         fused = (
             contrib
             if fused is None
-            else fused.join(contrib, [query_col, item_col], "full_outer")
+            else fused.join(contrib, ["query_id", "item_id"], "full_outer")
         )
     n = len(legs)
     score = None
@@ -462,10 +442,10 @@ def rrf_fuse(
         term = F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
         score = term if score is None else score + term
     scored = fused.select(
-        query_col, item_col, F.round(score, 6).alias("rrf_score")
+        "query_id", "item_id", F.round(score, 6).alias("rrf_score")
     )
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("rrf_score").desc(), F.col(item_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("rrf_score").desc(), F.col("item_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -492,10 +472,6 @@ def rerank_topk(
     candidates: DataFrame,
     texts: DataFrame,
     scorer,
-    query_col: str = "query_id",
-    item_col: str = "item_id",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 5,
 ) -> DataFrame:
     """Second-stage RERANK of first-stage candidates — the standard
@@ -520,18 +496,18 @@ def rerank_topk(
     # shuffle-free in each join, and only matched pair rows survive
     # into the next stage
     with_d = texts.select(
-        F.col(id_col).alias(item_col), F.col(text_col).alias("_dt")
-    ).join(F.broadcast(candidates.select(query_col, item_col)), item_col)
+        F.col("doc_id").alias("item_id"), F.col("text").alias("_dt")
+    ).join(F.broadcast(candidates.select("query_id", "item_id")), "item_id")
     pairs = texts.select(
-        F.col(id_col).alias(query_col), F.col(text_col).alias("_qt")
-    ).join(F.broadcast(with_d), query_col)
+        F.col("doc_id").alias("query_id"), F.col("text").alias("_qt")
+    ).join(F.broadcast(with_d), "query_id")
 
     def _score(batches):
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    query_col: pdf[query_col].values,
-                    item_col: pdf[item_col].values,
+                    "query_id": pdf["query_id"].values,
+                    "item_id": pdf["item_id"].values,
                     "score": [
                         scorer(q, d)
                         for q, d in zip(pdf["_qt"], pdf["_dt"])
@@ -540,12 +516,12 @@ def rerank_topk(
             )
 
     scored = pairs.mapInPandas(
-        _score, schema=f"{query_col} long, {item_col} long, score double"
+        _score, schema="query_id long, item_id long, score double"
     ).select(
-        query_col, item_col, F.round("score", 6).alias("score")
+        "query_id", "item_id", F.round("score", 6).alias("score")
     )
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("score").desc(), F.col(item_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("item_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -632,9 +608,6 @@ def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "centroid_vec",
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (squared-L2,
     deterministic lowest-cell tie-break) — the IVF build step.
@@ -655,13 +628,13 @@ def ivf_assign(
     pushed every (vector, centroid) pair through an Exchange — 256x
     shuffle amplification at C=256). The output is what you'd
     ``write.partitionBy("cell")`` so probes prune partitions.
+
+    Input: corpus (id_col, embedding), centroids (centroid_id,
+    centroid_vec). Output: (id_col, embedding, cell).
     """
-    return flat_cells_blas(
-        corpus, centroids, id_col, vec_col,
-        centroid_id, centroid_vec, nprobe=1,
-    ).select(
+    return flat_cells_blas(corpus, centroids, id_col).select(
         F.col(id_col),
-        F.col(vec_col),
+        F.col("embedding"),
         F.element_at(F.col("_cells"), 1).alias("cell"),
     )
 
@@ -737,10 +710,6 @@ def two_level_structure(rows) -> tuple:
 def ivf_assign_two_level(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "centroid_vec",
     coarse_nprobe: int = 2,
 ) -> DataFrame:
     """Two-level IVF assignment — the next-decade replacement for
@@ -773,22 +742,15 @@ def ivf_assign_two_level(
     over a 2-column projection — ZERO shuffles, partition-prunable
     on the output ``cell`` exactly like ivf_assign.
 
-    Output: (id_col, vec_col, cell) — same schema as ivf_assign."""
+    Output: (vec_id, embedding, cell) — same schema as ivf_assign."""
     if coarse_nprobe < 1:
         raise ValueError("coarse_nprobe must be >= 1")
-    cell_type = centroids.schema[centroid_id].dataType.simpleString()
+    cell_type = centroids.schema["centroid_id"].dataType.simpleString()
     return two_level_cells_blas(
-        corpus,
-        centroids,
-        id_col,
-        vec_col,
-        centroid_id,
-        centroid_vec,
-        nprobe=1,
-        coarse_nprobe=coarse_nprobe,
+        corpus, centroids, coarse_nprobe=coarse_nprobe
     ).select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         F.element_at(F.col("_cells"), 1).cast(cell_type).alias("cell"),
     )
 
@@ -928,8 +890,6 @@ def _np_two_level_topk(X, pl, nprobe: int) -> list:
 def two_level_cells_blas(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
     centroid_vec: str = "centroid_vec",
     nprobe: int = 1,
@@ -971,8 +931,8 @@ def two_level_cells_blas(
     payload = _two_level_blas_payload(rows, coarse_nprobe)
     out_schema = T.StructType(
         [
-            T.StructField(id_col, corpus.schema[id_col].dataType),
-            T.StructField(vec_col, corpus.schema[vec_col].dataType),
+            T.StructField("vec_id", corpus.schema["vec_id"].dataType),
+            T.StructField("embedding", corpus.schema["embedding"].dataType),
             T.StructField(
                 "_cells",
                 T.ArrayType(centroids.schema[centroid_id].dataType),
@@ -987,24 +947,23 @@ def two_level_cells_blas(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             codes = _np_two_level_topk(X, payload, nprobe)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
-                    vec_col: pdf[vec_col].to_numpy(),
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "embedding": pdf["embedding"].to_numpy(),
                     "_cells": [[all_cells[c] for c in cs] for cs in codes],
                 }
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(assign, out_schema)
+    return corpus.select("vec_id", "embedding").mapInPandas(assign, out_schema)
 
 
 def flat_cells_blas(
     corpus: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
     centroid_vec: str = "centroid_vec",
     nprobe: int = 1,
@@ -1050,7 +1009,7 @@ def flat_cells_blas(
     out_schema = T.StructType(
         [
             T.StructField(id_col, corpus.schema[id_col].dataType),
-            T.StructField(vec_col, corpus.schema[vec_col].dataType),
+            T.StructField("embedding", corpus.schema["embedding"].dataType),
             T.StructField(
                 "_cells",
                 T.ArrayType(centroids.schema[centroid_id].dataType),
@@ -1064,7 +1023,7 @@ def flat_cells_blas(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             xsq = np.einsum("ij,ij->i", X, X)
             tol = 1e-9 * (1.0 + xsq + sqmax)
             D = xsq[:, None] - 2.0 * (X @ VT) + vsq[None, :]
@@ -1093,12 +1052,17 @@ def flat_cells_blas(
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(),
-                    vec_col: pdf[vec_col].to_numpy(),
+                    "embedding": pdf["embedding"].to_numpy(),
                     "_cells": [[all_cells[c] for c in cs] for cs in codes],
                 }
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(assign, out_schema)
+    return corpus.select(id_col, "embedding").mapInPandas(assign, out_schema)
+
+
+# Query rows per numpy score block in the BLAS kernels below: caps the
+# per-task score matrix at _BATCH_ROWS x cell_size doubles.
+_BATCH_ROWS = 2048
 
 
 def _fold_norm(M):
@@ -1119,7 +1083,6 @@ def knn_score_topk_blas(
     probe: DataFrame,
     index: DataFrame,
     k: int,
-    batch_rows: int = 2048,
 ) -> DataFrame:
     """FOLD-EXACT batched candidate scoring + per-cell top-k for the
     kNN-graph build: cogroup the probe side (_qid, _v, cell — one row
@@ -1156,8 +1119,8 @@ def knn_score_topk_blas(
     Scale: the cogroup is ONE exchange per side on the uniformly
     hashed ``cell`` key — the same shuffle a same-cell join pays — and
     each Arrow group is O(cell·nprobe) rows; query blocks of
-    ``batch_rows`` cap the per-task score matrix at
-    batch_rows × cell_size doubles."""
+    ``_BATCH_ROWS`` cap the per-task score matrix at
+    _BATCH_ROWS × cell_size doubles."""
     import numpy as np  # noqa: F401 — hard requirement of this path
     from pyspark.sql import types as T
 
@@ -1195,8 +1158,8 @@ def knn_score_topk_blas(
         m = V.shape[0]
         tk = min(k + 1, m)  # +1: self may occupy one slot
         outs = []
-        for s in range(0, len(left), batch_rows):
-            blk = left.iloc[s : s + batch_rows]
+        for s in range(0, len(left), _BATCH_ROWS):
+            blk = left.iloc[s : s + _BATCH_ROWS]
             X = np.stack(blk["_v"].to_numpy()).astype(np.float64)
             qids = blk["_qid"].to_numpy()
             b = X.shape[0]
@@ -1238,13 +1201,7 @@ def knn_score_topk_blas(
     )
 
 
-def neardup_pairs_blas(
-    assigned: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_rows: int = 2048,
-) -> DataFrame:
+def neardup_pairs_blas(assigned: DataFrame, threshold: float) -> DataFrame:
     """FOLD-EXACT per-cell all-pairs scoring for the embedding
     near-dup join (r16): one grouped ``applyInPandas`` over the
     assigned relation computes every same-cell (id1 < id2) cosine in
@@ -1278,7 +1235,7 @@ def neardup_pairs_blas(
 
     from pyspark.sql import types as T
 
-    idt = assigned.schema[id_col].dataType
+    idt = assigned.schema["vec_id"].dataType
     out_schema = T.StructType(
         [
             T.StructField("id1", idt),
@@ -1295,26 +1252,26 @@ def neardup_pairs_blas(
         if m < 2:
             return pd.DataFrame(
                 {
-                    "id1": pdf[id_col].iloc[:0],
-                    "id2": pdf[id_col].iloc[:0],
+                    "id1": pdf["vec_id"].iloc[:0],
+                    "id2": pdf["vec_id"].iloc[:0],
                     "_cos": np.array([], dtype=np.float64),
                 }
             )
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         # sort by id so the global-row < column test IS id1 < id2
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)[order]
+        V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)[order]
         nv = _fold_norm(V)
         cols = np.arange(m)
         outs = []
-        for s in range(0, m, batch_rows):
-            X = V[s : s + batch_rows]
+        for s in range(0, m, _BATCH_ROWS):
+            X = V[s : s + _BATCH_ROWS]
             b = X.shape[0]
             acc = np.zeros((b, m))
             for d in range(V.shape[1]):
                 acc += X[:, d : d + 1] * V[None, :, d]
-            cos = acc / (nv[s : s + batch_rows][:, None] * nv[None, :])
+            cos = acc / (nv[s : s + _BATCH_ROWS][:, None] * nv[None, :])
             rows_idx = np.arange(s, s + b)
             keep = (rows_idx[:, None] < cols[None, :]) & (
                 (cos >= margin) | np.isnan(cos)
@@ -1332,7 +1289,7 @@ def neardup_pairs_blas(
         return pd.concat(outs, ignore_index=True)
 
     return (
-        assigned.select(id_col, vec_col, "cell")
+        assigned.select("vec_id", "embedding", "cell")
         .filter(F.col("cell").isNotNull())
         .groupBy("cell")
         .applyInPandas(score, out_schema)
@@ -1343,8 +1300,6 @@ def ivf_topk(
     assigned: DataFrame,
     centroids: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 2,
 ) -> DataFrame:
@@ -1352,11 +1307,11 @@ def ivf_topk(
     ``nprobe`` nearest cells, then exact cosine top-k within those
     cells only. Recall trades off with nprobe; the scan cost drops by
     ~C/nprobe versus brute force."""
-    q_cells = ivf_assign_queries(queries, centroids, id_col, vec_col, nprobe)
+    q_cells = ivf_assign_queries(queries, centroids, nprobe)
     c = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("_cn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        l2_norm(F.col("embedding")).alias("_cn"),
         F.col("cell"),
     )
     scored = (
@@ -1384,8 +1339,6 @@ def ivf_topk(
 def embedding_neardup_pairs(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, IVF-cell blocked: the
@@ -1405,10 +1358,8 @@ def embedding_neardup_pairs(
     Scale: one shuffle keyed on ``cell``; cells are the skew knob
     (more centroids = smaller buckets). Emits each pair once
     (id1 < id2)."""
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    pairs = neardup_pairs_blas(
-        assigned, threshold, id_col=id_col, vec_col=vec_col
-    )
+    assigned = ivf_assign(corpus, centroids)
+    pairs = neardup_pairs_blas(assigned, threshold)
     return pairs.select(
         "id1",
         "id2",
@@ -1419,8 +1370,6 @@ def embedding_neardup_pairs(
 def knn_graph(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 4,
     nprobe: int = 1,
     two_level: bool = False,
@@ -1479,18 +1428,17 @@ def knn_graph(
         # the cell labels differ.
         if two_level:
             assigned = ivf_assign_two_level(
-                corpus, centroids, id_col, vec_col,
-                coarse_nprobe=coarse_nprobe,
+                corpus, centroids, coarse_nprobe=coarse_nprobe
             )
         else:
-            assigned = ivf_assign(corpus, centroids, id_col, vec_col)
+            assigned = ivf_assign(corpus, centroids)
         assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
         track(assigned)
         a = assigned.select(
-            F.col(id_col).alias("_qid"), F.col(vec_col).alias("_v"), "cell"
+            F.col("vec_id").alias("_qid"), F.col("embedding").alias("_v"), "cell"
         )
         b = assigned.select(
-            F.col(id_col).alias("_nid"), F.col(vec_col).alias("_v"), "cell"
+            F.col("vec_id").alias("_nid"), F.col("embedding").alias("_v"), "cell"
         )
     else:
         # ONE narrow pass computes each vector's top-nprobe cell list
@@ -1509,23 +1457,22 @@ def knn_graph(
             assigned = cells_df
         elif two_level:
             assigned = two_level_cells_blas(
-                corpus, centroids, id_col, vec_col, cid, cvec,
+                corpus, centroids, cid, cvec,
                 nprobe=nprobe, coarse_nprobe=coarse_nprobe,
             )
         else:
             assigned = flat_cells_blas(
-                corpus, centroids, id_col, vec_col, cid, cvec,
-                nprobe=nprobe,
+                corpus, centroids, "vec_id", cid, cvec, nprobe=nprobe
             )
         if cells_df is None:
             assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
             track(assigned)
         b = assigned.select(
-            F.col(id_col).alias("_nid"), F.col(vec_col).alias("_v"),
+            F.col("vec_id").alias("_nid"), F.col("embedding").alias("_v"),
             F.element_at(F.col("_cells"), 1).alias("cell"),
         )
         a = assigned.select(
-            F.col(id_col).alias("_qid"), F.col(vec_col).alias("_v"),
+            F.col("vec_id").alias("_qid"), F.col("embedding").alias("_v"),
             F.explode_outer(F.col("_cells")).alias("cell"),
         )
     # fold-exact numpy scoring + per-cell top-k: the global rank
@@ -1541,7 +1488,7 @@ def knn_graph(
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("_qid").alias(id_col),
+            F.col("_qid").alias("vec_id"),
             F.col("_nid").alias("neighbor_id"),
             F.round(F.col("_cos"), 6).alias("cosine"),
             F.col("rank").cast("int").alias("rank"),
@@ -1553,8 +1500,6 @@ def knn_flat_probe_legs(
     corpus: DataFrame,
     centroids: DataFrame,
     query_pred: Column,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 4,
     nprobe: int = 6,
 ) -> tuple[DataFrame, DataFrame]:
@@ -1576,7 +1521,7 @@ def knn_flat_probe_legs(
     sets, same raw-double cosine, same (cos desc, neighbor) rank
     order — so existing oracles replay unchanged.
 
-    Returns ``(single_df, multi_df)``, each (id_col, neighbor_id,
+    Returns ``(single_df, multi_df)``, each (vec_id, neighbor_id,
     cosine, rank) like :func:`knn_graph`."""
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
@@ -1587,16 +1532,14 @@ def knn_flat_probe_legs(
         else ("centroid_id", "centroid_vec")
     )
     assigned = (
-        flat_cells_blas(
-            corpus, centroids, id_col, vec_col, cid, cvec, nprobe=nprobe
-        )
-        .withColumn("_norm", l2_norm(F.col(vec_col)))
+        flat_cells_blas(corpus, centroids, "vec_id", cid, cvec, nprobe=nprobe)
+        .withColumn("_norm", l2_norm(F.col("embedding")))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     track(assigned)
     b = assigned.select(
-        F.col(id_col).alias("_nid"),
-        F.col(vec_col).alias("v2"),
+        F.col("vec_id").alias("_nid"),
+        F.col("embedding").alias("v2"),
         F.col("_norm").alias("_n2"),
         F.element_at(F.col("_cells"), 1).alias("cell"),
     )
@@ -1613,7 +1556,7 @@ def knn_flat_probe_legs(
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select(
-                F.col("_qid").alias(id_col),
+                F.col("_qid").alias("vec_id"),
                 F.col("_nid").alias("neighbor_id"),
                 F.round(F.col("_cos"), 6).alias("cosine"),
                 "rank",
@@ -1622,16 +1565,16 @@ def knn_flat_probe_legs(
 
     single = _leg(
         qa.select(
-            F.col(id_col).alias("_qid"),
-            F.col(vec_col).alias("v1"),
+            F.col("vec_id").alias("_qid"),
+            F.col("embedding").alias("v1"),
             F.col("_norm").alias("_n1"),
             F.element_at(F.col("_cells"), 1).alias("cell"),
         )
     )
     multi = _leg(
         qa.select(
-            F.col(id_col).alias("_qid"),
-            F.col(vec_col).alias("v1"),
+            F.col("vec_id").alias("_qid"),
+            F.col("embedding").alias("v1"),
             F.col("_norm").alias("_n1"),
             F.explode_outer(F.col("_cells")).alias("cell"),
         )
@@ -1639,12 +1582,7 @@ def knn_flat_probe_legs(
     return single, multi
 
 
-def hash_ring_seed_graph(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    k: int = 4,
-    salt: str = "rnd_",
-) -> DataFrame:
+def hash_ring_seed_graph(corpus: DataFrame, k: int = 4) -> DataFrame:
     """Deterministic RANDOM-init seed graph for NN-Descent (Dong et
     al. WWW 2011 start from a random k-NN guess): every vector gets
     exactly ``k`` pseudo-random neighbors with ZERO geometric
@@ -1680,22 +1618,22 @@ def hash_ring_seed_graph(
     (self-wrap otherwise); stride collisions (md5 ties mod N-1) are
     deduped, so degree is k minus any collision.
 
-    Output: (id_col, neighbor_id) DISTINCT directed edges."""
+    Output: (vec_id, neighbor_id) DISTINCT directed edges."""
     from pyspark.storagelevel import StorageLevel
 
     from ulh_etl_spark.operators.rank import global_row_number
     from ulh_etl_spark.operators.text import md5_hash32
 
     h = md5_hash32(
-        F.concat(F.lit(salt), F.col(id_col).cast("string"))
+        F.concat(F.lit("rnd_"), F.col("vec_id").cast("string"))
     )
     ranked = track(
         global_row_number(
-            corpus.select(F.col(id_col), h.alias("_h")),
-            ["_h", id_col],
+            corpus.select(F.col("vec_id"), h.alias("_h")),
+            ["_h", "vec_id"],
             out_col="_rn",
         )
-        .select(id_col, "_rn")
+        .select("vec_id", "_rn")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     ncnt = ranked.agg(F.count("*").cast("long").alias("_N"))
@@ -1714,7 +1652,7 @@ def hash_ring_seed_graph(
     probes = (
         ranked.crossJoin(F.broadcast(ncnt))
         .select(
-            F.col(id_col).alias("_src"),
+            F.col("vec_id").alias("_src"),
             "_rn",
             "_N",
             strides.alias("_s"),
@@ -1726,12 +1664,12 @@ def hash_ring_seed_graph(
         )
     )
     b = ranked.select(
-        F.col(id_col).alias("neighbor_id"), F.col("_rn").alias("_trn")
+        F.col("vec_id").alias("neighbor_id"), F.col("_rn").alias("_trn")
     )
     return (
         probes.join(b, "_trn")
         .filter(F.col("_src") != F.col("neighbor_id"))
-        .select(F.col("_src").alias(id_col), "neighbor_id")
+        .select(F.col("_src").alias("vec_id"), "neighbor_id")
         .distinct()
     )
 
@@ -1780,8 +1718,6 @@ WHERE rank <= {k}
 def nn_descent_round(
     graph: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 4,
 ) -> DataFrame:
     """One NN-Descent refinement round (Dong, Moses & Li, WWW 2011:
@@ -1866,16 +1802,14 @@ def nn_descent_round(
         return quoted.replace("{", "{{").replace("}", "}}")
 
     q = (
-        _NND_ROUND_SQL.replace("{idc}", _ident(id_col))
-        .replace("{vecc}", _ident(vec_col))
+        _NND_ROUND_SQL.replace("{idc}", _ident("vec_id"))
+        .replace("{vecc}", _ident("embedding"))
         .replace("{k}", str(int(k)))
     )
     return graph.sparkSession.sql(q, g=graph, c=corpus)
 
 
-def mutual_knn_edges(
-    knn: DataFrame, id_col: str = "vec_id"
-) -> DataFrame:
+def mutual_knn_edges(knn: DataFrame) -> DataFrame:
     """Mutual-kNN edge filter: keep the undirected pair (i, j) only
     when i is in knn(j) AND j is in knn(i) — the standard
     symmetrization that strips hub-induced one-way edges before
@@ -1904,11 +1838,11 @@ def mutual_knn_edges(
     # fixpoint, was q160's sf10 exponent (+1.27). One count() pins
     # the blocks before the join plan ever executes.
     knn.count()
-    fwd = knn.filter(F.col(id_col) < F.col("neighbor_id")).select(
-        F.col(id_col).alias("id1"), F.col("neighbor_id").alias("id2")
+    fwd = knn.filter(F.col("vec_id") < F.col("neighbor_id")).select(
+        F.col("vec_id").alias("id1"), F.col("neighbor_id").alias("id2")
     )
-    rev = knn.filter(F.col("neighbor_id") < F.col(id_col)).select(
-        F.col("neighbor_id").alias("id1"), F.col(id_col).alias("id2")
+    rev = knn.filter(F.col("neighbor_id") < F.col("vec_id")).select(
+        F.col("neighbor_id").alias("id1"), F.col("vec_id").alias("id2")
     )
     return fwd.join(rev, ["id1", "id2"])
 
@@ -1916,8 +1850,6 @@ def mutual_knn_edges(
 def semantic_dedup(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
@@ -1941,28 +1873,26 @@ def semantic_dedup(
     margin), followed by a distinct on the dropped-id column and a
     same-key anti-join-style flag join. Never all-pairs.
 
-    Returns (id_col, cell, kept) for every input vector.
+    Returns (vec_id, cell, kept) for every input vector.
     """
     from pyspark.storagelevel import StorageLevel
 
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col).persist(
+    assigned = ivf_assign(corpus, centroids).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     track(assigned)
     dropped = (
-        neardup_pairs_blas(
-            assigned, threshold, id_col=id_col, vec_col=vec_col
-        )
+        neardup_pairs_blas(assigned, threshold)
         .filter(F.round(F.col("_cos"), 6) >= threshold)
-        .select(F.col("id2").alias(id_col))
+        .select(F.col("id2").alias("vec_id"))
         .distinct()
         .withColumn("_dropped", F.lit(True))
     )
     return (
-        assigned.select(id_col, "cell")
-        .join(dropped, id_col, "left")
+        assigned.select("vec_id", "cell")
+        .join(dropped, "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "cell",
             F.col("_dropped").isNull().alias("kept"),
         )
@@ -1973,8 +1903,6 @@ def kmeans_refine(
     corpus: DataFrame,
     centroids: DataFrame,
     iterations: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Lloyd's k-means refinement of IVF centroids: assign -> per-cell
     mean -> repeat. The per-cell mean is a grouped ``applyInPandas``
@@ -1995,7 +1923,7 @@ def kmeans_refine(
     def cell_mean(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
 
-        vecs = np.stack(pdf[vec_col].values)
+        vecs = np.stack(pdf["embedding"].values)
         mean = np.round(vecs.astype("float64").mean(axis=0), 6)
         return pd.DataFrame(
             {"centroid_id": [int(pdf["cell"].iloc[0])],
@@ -2004,7 +1932,7 @@ def kmeans_refine(
 
     cents = centroids
     for _ in range(iterations):
-        assigned = ivf_assign(corpus, cents, id_col, vec_col)
+        assigned = ivf_assign(corpus, cents)
         cents = assigned.groupBy("cell").applyInPandas(
             cell_mean,
             schema="centroid_id int, centroid_vec array<double>",
@@ -2029,8 +1957,6 @@ def hyperplane_weights(num_planes: int, dim: int) -> list[list[float]]:
 def hyperplane_signature(
     corpus: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_planes: int = 16,
 ) -> DataFrame:
     """Cosine-LSH bit signature: bit p = [w_p . v > 0] for
@@ -2065,7 +1991,7 @@ def hyperplane_signature(
         )
     )
     powers = F.lit([1 << p for p in range(num_planes)]).cast("array<long>")
-    v = F.col(vec_col)
+    v = F.col("embedding")
     dots = F.transform(
         planes2d,
         lambda w: F.aggregate(
@@ -2085,14 +2011,12 @@ def hyperplane_signature(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return corpus.select(F.col(id_col), sig.alias("hsig"))
+    return corpus.select(F.col("vec_id"), sig.alias("hsig"))
 
 
 def hyperplane_candidate_pairs(
     corpus: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_planes: int = 16,
     rows_per_band: int = 8,
 ) -> DataFrame:
@@ -2104,9 +2028,9 @@ def hyperplane_candidate_pairs(
 
     num_bands = num_planes // rows_per_band
     mask = (1 << rows_per_band) - 1
-    sigs = hyperplane_signature(corpus, dim, id_col, vec_col, num_planes)
+    sigs = hyperplane_signature(corpus, dim, num_planes)
     bands = sigs.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.explode(
             F.array(
                 *[
@@ -2121,7 +2045,7 @@ def hyperplane_candidate_pairs(
             )
         ).alias("band"),
     ).select(
-        id_col,
+        "vec_id",
         F.col("band.band_idx").alias("band_idx"),
         F.col("band.band_val").alias("band_val"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -2133,11 +2057,11 @@ def hyperplane_candidate_pairs(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id1"),
-            F.col(f"b.{id_col}").alias("id2"),
+            F.col("a.vec_id").alias("id1"),
+            F.col("b.vec_id").alias("id2"),
         )
         .distinct()
     )
@@ -2146,8 +2070,6 @@ def hyperplane_candidate_pairs(
 def ivf_assign_queries(
     queries: DataFrame,
     centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
     nprobe: int,
 ) -> DataFrame:
     """Per-query nearest-``nprobe`` cells — same zero-shuffle shape as
@@ -2164,7 +2086,7 @@ def ivf_assign_queries(
     scored = F.transform(
         cells,
         lambda c: F.struct(
-            _sq_dist(F.col(vec_col), c["cvec"]).alias("dist"),
+            _sq_dist(F.col("embedding"), c["cvec"]).alias("dist"),
             c["cell"].alias("cell"),
         ),
     )
@@ -2175,19 +2097,15 @@ def ivf_assign_queries(
     # the same pattern); the array is never empty (nprobe >= 1, C >= 1)
     # so the outer variant is semantically identical.
     return queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
         F.explode_outer(probed).alias("probe"),
     ).select(
         "query_id", "q_vec", F.col("probe.cell").cast(cell_type).alias("cell")
     )
 
 
-def write_ivf_index(
-    assigned: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-) -> None:
+def write_ivf_index(assigned: DataFrame, path: str) -> None:
     """Materialize the IVF index the way probes want to read it: one
     parquet directory per ``cell``, so ``ivf_probe_pruned`` scans are
     partition-pruned to the nprobe cells — at 100 TB a probe reads
@@ -2206,8 +2124,6 @@ def ivf_probe_pruned(
     index_path: str,
     centroids: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 2,
 ) -> DataFrame:
@@ -2216,13 +2132,10 @@ def ivf_probe_pruned(
     an IN-list the scan prunes DIRECTORIES with — `.explain` shows
     PartitionFilters, and only nprobe/C of the files are listed.
     Same semantics as ``ivf_topk`` over the in-memory assignment."""
-    q_cells = ivf_assign_queries(queries, centroids, id_col, vec_col, nprobe)
+    q_cells = ivf_assign_queries(queries, centroids, nprobe)
     cells = sorted({r["cell"] for r in q_cells.select("cell").distinct().collect()})
     assigned = spark.read.parquet(index_path).filter(F.col("cell").isin(cells))
-    return ivf_topk(
-        assigned, centroids, queries, id_col=id_col, vec_col=vec_col,
-        k=k, nprobe=nprobe,
-    )
+    return ivf_topk(assigned, centroids, queries, k=k, nprobe=nprobe)
 
 
 # ---------------------------------------------------- product quantization
@@ -2233,8 +2146,6 @@ def pq_codebook(
     dim: int,
     m: int = 4,
     ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic product-quantization codebook (Jégou et al. 2011,
     "Product Quantization for Nearest Neighbor Search"): split the
@@ -2254,9 +2165,9 @@ def pq_codebook(
     if ksub < 2:
         raise ValueError("ksub must be >= 2")
     dsub = dim // m
-    w = Window.orderBy(id_col)
+    w = Window.orderBy("vec_id")
     seeds = (
-        corpus.orderBy(id_col)
+        corpus.orderBy("vec_id")
         .limit(ksub)
         .withColumn("code", F.row_number().over(w) - 1)
     )
@@ -2265,7 +2176,7 @@ def pq_codebook(
             F.struct(
                 F.lit(s).alias("subspace"),
                 F.transform(
-                    F.slice(F.col(vec_col), s * dsub + 1, dsub),
+                    F.slice(F.col("embedding"), s * dsub + 1, dsub),
                     lambda x: x.cast("double"),
                 ).alias("cvec"),
             )
@@ -2308,12 +2219,7 @@ def _pq_literals(codebook: DataFrame) -> "list[tuple[Column, list]]":
     return cache["lits"]
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebook: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebook: DataFrame) -> DataFrame:
     """PQ-encode every vector: per subspace, the code of the nearest
     codeword (squared L2, deterministic lowest-code tie-break), plus
     the total reconstruction error — the audit metric that sizes
@@ -2344,23 +2250,19 @@ def pq_encode(
 
     bests = []
     for s, (lit, _) in enumerate(lits):
-        sub = F.slice(F.col(vec_col), s * dsub + 1, dsub)
+        sub = F.slice(F.col("embedding"), s * dsub + 1, dsub)
         bests.append(F.array_min(_scored(lit, sub)))
     recon = bests[0]["dist"]
     for b in bests[1:]:
         recon = recon + b["dist"]
     return corpus.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.array(*[b["code"] for b in bests]).alias("codes"),
         recon.alias("recon_err"),
     )
 
 
-def sq8_bounds(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[list, list]:
+def sq8_bounds(corpus: DataFrame) -> tuple[list, list]:
     """Exact per-dimension (min, max) over the corpus — the training
     pass of scalar quantization. One posexplode + groupBy(dim):
     min/max partial-aggregate map-side, so the shuffle carries only
@@ -2370,7 +2272,7 @@ def sq8_bounds(
     accumulation), so the DuckDB oracle computes bit-identical
     bounds from the same float32 values."""
     rows = (
-        corpus.select(F.posexplode(F.col(vec_col)).alias("_d", "_v"))
+        corpus.select(F.posexplode(F.col("embedding")).alias("_d", "_v"))
         .groupBy("_d")
         .agg(
             F.min(F.col("_v").cast("double")).alias("mn"),
@@ -2382,12 +2284,7 @@ def sq8_bounds(
     return [r.mn for r in rows], [r.mx for r in rows]
 
 
-def sq8_encode(
-    corpus: DataFrame,
-    bounds: tuple[list, list],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def sq8_encode(corpus: DataFrame, bounds: tuple[list, list]) -> DataFrame:
     """SQ8 scalar quantization: each dimension linearly quantized to
     an 8-bit code against the corpus [min, max] range —
     ``code_d = clamp(floor((v - mn) * 255 / (mx - mn)), 0, 255)`` —
@@ -2411,7 +2308,7 @@ def sq8_encode(
     mx_lit = F.expr(
         "array({})".format(", ".join(f"CAST({v!r} AS DOUBLE)" for v in mxs))
     )
-    v = F.col(vec_col)
+    v = F.col("embedding")
 
     def code_at(i):
         x = F.element_at(v, i).cast("double")
@@ -2444,7 +2341,7 @@ def sq8_encode(
     err_terms = F.transform(idx, lambda i: err_at(i))
     recon = F.aggregate(err_terms, F.lit(0.0), lambda a, x: a + x)
     return corpus.select(
-        F.col(id_col),
+        F.col("vec_id"),
         codes.alias("codes"),
         recon.alias("recon_err"),
     )
@@ -2454,8 +2351,6 @@ def pq_adc_topk(
     encoded: DataFrame,
     codebook: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: per query, precompute
@@ -2482,7 +2377,7 @@ def pq_adc_topk(
     """
     lits = _pq_literals(codebook)
     m = len(lits)
-    luts = _adc_luts(lits, queries, id_col, vec_col)
+    luts = _adc_luts(lits, queries)
     map_entries = ", ".join(
         f"CAST({qid} AS BIGINT), {_lut_sql(lut)}" for qid, lut in luts
     )
@@ -2497,26 +2392,26 @@ def pq_adc_topk(
     for s in range(1, m):
         dist = dist + lut[s][F.col("codes")[s]]
     scored = encoded.select(
-        F.col(id_col), F.col("codes"), F.explode(qid_lit).alias("query_id")
+        F.col("vec_id"), F.col("codes"), F.explode(qid_lit).alias("query_id")
     ).select(
         "query_id",
-        F.col(id_col),
+        F.col("vec_id"),
         dist.alias("_d"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("_d"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("_d"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             "query_id",
-            id_col,
+            "vec_id",
             F.round("_d", 6).alias("adc_dist"),
             "rank",
         )
     )
 
 
-def _adc_luts(lits, queries: DataFrame, id_col: str, vec_col: str):
+def _adc_luts(lits, queries: DataFrame):
     """Collect the (driver-small) query set and compute each query's
     m x ksub ADC lookup table: squared distances from its subvectors
     to every codeword, with the identical sequential double fold as
@@ -2525,7 +2420,7 @@ def _adc_luts(lits, queries: DataFrame, id_col: str, vec_col: str):
     m = len(lits)
     dsub = len(lits[0][1][0]["cvec"])
     q_rows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).collect()
     q_rows.sort(key=lambda r: r["query_id"])
     out = []
@@ -2551,30 +2446,24 @@ def _lut_sql(lut) -> str:
     )
 
 
-def l2_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
+def l2_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Brute-force exact squared-L2 top-k — the ground-truth leg for
     ADC/IVF recall audits. Same shape as cosine_topk: queries
     broadcast, corpus never shuffles, one per-query top-k window."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     scored = corpus.crossJoin(F.broadcast(q)).select(
         "query_id",
-        F.col(id_col),
-        _sq_dist(F.col(vec_col), F.col("q_vec")).alias("_d"),
+        F.col("vec_id"),
+        _sq_dist(F.col("embedding"), F.col("q_vec")).alias("_d"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("_d"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("_d"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            "query_id", id_col, F.round("_d", 6).alias("l2_sq"), "rank"
+            "query_id", "vec_id", F.round("_d", 6).alias("l2_sq"), "rank"
         )
     )
 
@@ -2584,8 +2473,6 @@ def ivfpq_adc_topk(
     codebook: DataFrame,
     centroids: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 2,
 ) -> DataFrame:
@@ -2609,27 +2496,27 @@ def ivfpq_adc_topk(
     """
     lits = _pq_literals(codebook)
     m = len(lits)
-    luts = _adc_luts(lits, queries, id_col, vec_col)
+    luts = _adc_luts(lits, queries)
     map_entries = ", ".join(
         f"CAST({qid} AS BIGINT), {_lut_sql(lut)}" for qid, lut in luts
     )
     lut_map = F.expr(f"map({map_entries})")
-    q_cells = ivf_assign_queries(
-        queries, centroids, id_col, vec_col, nprobe
-    ).select("query_id", "cell")
+    q_cells = ivf_assign_queries(queries, centroids, nprobe).select(
+        "query_id", "cell"
+    )
     lut = F.element_at(lut_map, F.col("query_id"))
     dist = lut[0][F.col("codes")[0]]
     for s in range(1, m):
         dist = dist + lut[s][F.col("codes")[s]]
     scored = encoded_cells.join(F.broadcast(q_cells), "cell").select(
-        "query_id", F.col(id_col), dist.alias("_d")
+        "query_id", F.col("vec_id"), dist.alias("_d")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("_d"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("_d"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            "query_id", id_col, F.round("_d", 6).alias("adc_dist"), "rank"
+            "query_id", "vec_id", F.round("_d", 6).alias("adc_dist"), "rank"
         )
     )
 
@@ -2639,8 +2526,6 @@ def ivf_append(
     index_path: str,
     new_vectors: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list:
     """Incremental maintenance of the at-rest IVF index: assign ONLY
     the new vectors to cells (ivf_assign — zero-shuffle narrow map)
@@ -2656,7 +2541,7 @@ def ivf_append(
     full rewrite) resets both drifts. Probes via ivf_probe_pruned see
     appended rows immediately — same PartitionFilters pruning, no
     index rebuild."""
-    assigned = ivf_assign(new_vectors, centroids, id_col, vec_col)
+    assigned = ivf_assign(new_vectors, centroids)
     cells = sorted(
         r["cell"] for r in assigned.select("cell").distinct().collect()
     )
@@ -2672,7 +2557,6 @@ def ivf_append(
 def compact_cells(
     spark,
     index_path: str,
-    cells: list | None = None,
     min_files: int = 2,
     target_files: int = 1,
 ) -> dict:
@@ -2681,8 +2565,8 @@ def compact_cells(
     append adds files to the touched cells; file COUNT, not bytes,
     dominates probe planning once appends accumulate).
 
-    Rewrites ONLY the named ``cells`` (default: every cell whose file
-    count >= ``min_files``) — each rewrite reads one cell directory
+    Rewrites ONLY the cells whose file count >= ``min_files`` — each
+    rewrite reads one cell directory
     (PartitionFilters-pruned scan), coalesces to ``target_files`` and
     atomically replaces just that directory. Untouched cells keep
     their exact files, so the hot path (probes) never waits on a
@@ -2722,18 +2606,11 @@ def compact_cells(
         if st.isDirectory() and name.startswith("cell="):
             dirs[name.split("=", 1)[1]] = st.getPath()
 
-    if cells is None:
-        todo = {
-            c: (p, _parquets(p))
-            for c, p in dirs.items()
-            if len(_parquets(p)) >= min_files
-        }
-    else:
-        todo = {
-            str(c): (dirs[str(c)], _parquets(dirs[str(c)]))
-            for c in cells
-            if str(c) in dirs
-        }
+    todo = {
+        c: (p, _parquets(p))
+        for c, p in dirs.items()
+        if len(_parquets(p)) >= min_files
+    }
     compacted = {}
     for cell, (cell_path, originals) in sorted(todo.items()):
         df = spark.read.parquet(cell_path.toString())
@@ -2772,8 +2649,6 @@ def hyperplane_multiprobe_topk(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_planes: int = 16,
     rows_per_band: int = 8,
     k: int = 10,
@@ -2811,7 +2686,7 @@ def hyperplane_multiprobe_topk(
             for f in flips
         ]
         return sig_df.select(
-            F.col(id_col).alias(out_id), F.explode(F.array(*rows)).alias("_b")
+            F.col("vec_id").alias(out_id), F.explode(F.array(*rows)).alias("_b")
         ).select(
             out_id,
             F.col("_b.band_idx").alias("band_idx"),
@@ -2819,12 +2694,12 @@ def hyperplane_multiprobe_topk(
         )
 
     c_bands = _bands(
-        hyperplane_signature(corpus, dim, id_col, vec_col, num_planes),
+        hyperplane_signature(corpus, dim, num_planes),
         "neighbor_id",
         probes=False,
     )
     q_bands = _bands(
-        hyperplane_signature(queries, dim, id_col, vec_col, num_planes),
+        hyperplane_signature(queries, dim, num_planes),
         "query_id",
         probes=True,
     )
@@ -2835,14 +2710,14 @@ def hyperplane_multiprobe_topk(
         .distinct()
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("_cn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        l2_norm(F.col("embedding")).alias("_cn"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("_qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        l2_norm(F.col("embedding")).alias("_qn"),
     )
     scored = (
         cand.join(c, "neighbor_id")
@@ -2871,12 +2746,7 @@ def hyperplane_multiprobe_topk(
     )
 
 
-def kcenter_coreset(
-    corpus: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
+def kcenter_coreset(corpus: DataFrame, k: int):
     """Greedy k-center coreset selection (Gonzalez 1985; the
     farthest-point diverse-subset pass of embedding-based data
     selection — pick the k most MUTUALLY DISTANT exemplars, a 2-approx
@@ -2893,7 +2763,8 @@ def kcenter_coreset(
     whose lineage is k chained least() expressions; persist the
     corpus projection once so the scan never re-runs.
 
-    Returns (step, id, dist_when_chosen) — dist is the squared L2 to
+    Returns (step, vec_id, dist_when_chosen), empty for an empty
+    corpus — dist is the squared L2 to
     the previously-chosen set at selection time (the coreset radius
     sequence; step 0's is NULL). Raw doubles: both engines fold
     identical arithmetic (the q132 rounding lesson)."""
@@ -2903,12 +2774,16 @@ def kcenter_coreset(
 
     # k argmax jobs run over this persisted projection; conditional
     # fan-out for 1-split inputs (no-op at real scale).
+    out_schema = "step int, vec_id long, dist_when_chosen double"
     base = fan_out(
-        corpus.select(F.col(id_col), F.col(vec_col))
+        corpus.select(F.col("vec_id"), F.col("embedding"))
     ).persist()
     try:
-        seed = base.orderBy(id_col).limit(1).collect()[0]
-        chosen = [(0, seed[id_col], None)]
+        first = base.orderBy("vec_id").limit(1).collect()
+        if not first:  # empty corpus: no centers
+            return local_frame(base.sparkSession, [], out_schema)
+        seed = first[0]
+        chosen = [(0, seed["vec_id"], None)]
 
         def _vec_lit(v):
             return F.expr(
@@ -2918,7 +2793,7 @@ def kcenter_coreset(
             )
 
         cur = base.withColumn(
-            "_mind", _sq_dist(F.col(vec_col), _vec_lit(seed[vec_col]))
+            "_mind", _sq_dist(F.col("embedding"), _vec_lit(seed["embedding"]))
         )
         for step in range(1, k):
             # exclude already-chosen ids (a k-item literal IN-list):
@@ -2927,28 +2802,24 @@ def kcenter_coreset(
             # once k approaches the number of DISTINCT vectors
             picked = (
                 cur.filter(
-                    ~F.col(id_col).isin(*[c[1] for c in chosen])
+                    ~F.col("vec_id").isin(*[c[1] for c in chosen])
                 )
-                .orderBy(F.col("_mind").desc(), F.col(id_col))
+                .orderBy(F.col("_mind").desc(), F.col("vec_id"))
                 .limit(1)
                 .collect()
             )
             if not picked:  # corpus exhausted: fewer than k vectors
                 break
             nxt = picked[0]
-            chosen.append((step, nxt[id_col], float(nxt["_mind"])))
+            chosen.append((step, nxt["vec_id"], float(nxt["_mind"])))
             cur = cur.withColumn(
                 "_mind",
                 F.least(
                     F.col("_mind"),
-                    _sq_dist(F.col(vec_col), _vec_lit(nxt[vec_col])),
+                    _sq_dist(F.col("embedding"), _vec_lit(nxt["embedding"])),
                 ),
             )
-        return local_frame(
-            base.sparkSession,
-            chosen,
-            f"step int, {id_col} long, dist_when_chosen double",
-        )
+        return local_frame(base.sparkSession, chosen, out_schema)
     finally:
         base.unpersist()
 
@@ -2956,8 +2827,6 @@ def kcenter_coreset(
 def cell_distance_outliers(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     z_threshold: float = 2.0,
     min_cell: int = 5,
 ) -> DataFrame:
@@ -2987,13 +2856,13 @@ def cell_distance_outliers(
     scored = F.transform(
         cells,
         lambda c: F.struct(
-            _sq_dist(F.col(vec_col), c["cvec"]).alias("dist"),
+            _sq_dist(F.col("embedding"), c["cvec"]).alias("dist"),
             c["cell"].alias("cell"),
         ),
     )
     best = F.array_min(scored)
     assigned = corpus.select(
-        F.col(id_col),
+        F.col("vec_id"),
         best["cell"].cast(cell_type).alias("cell"),
         best["dist"].alias("_d"),
     )
@@ -3016,7 +2885,7 @@ def cell_distance_outliers(
     )
     z = F.when(scoreable, (F.col("_d") - mean) / F.sqrt(var))
     return assigned.join(stats, "cell").select(
-        id_col,
+        "vec_id",
         "cell",
         F.round(F.col("_d"), 6).alias("dist"),
         F.round(z, 6).alias("z"),
@@ -3175,8 +3044,6 @@ def power_iteration_pca(
 
 def _kmpar_candidates(
     df: DataFrame,
-    id_col: str,
-    vec_col: str,
     rounds: int,
     oversample: float,
     salt: str,
@@ -3185,7 +3052,9 @@ def _kmpar_candidates(
     seeds = [(id, vec, round_selected)], wmap = nearest-seed
     weights. Driver-small by construction (expected 1 + l*rounds
     candidates at ANY corpus size — the per-round expected pick
-    count is l, independent of N)."""
+    count is l, independent of N). An empty corpus yields no seeds;
+    the rounds stop early once phi == 0 (every point coincides with
+    a seed, so no point can be selected)."""
     from pyspark.storagelevel import StorageLevel
 
     from ulh_etl_spark.operators.fanout import fan_out
@@ -3196,25 +3065,27 @@ def _kmpar_candidates(
     # core — conditional fan-out (r17 probe: q210 2.21 s -> 1.49 s,
     # q211 2.48 s -> 1.60 s; no-op at real scale).
     emb = fan_out(
-        df.select(F.col(id_col), F.col(vec_col).alias("_v"))
+        df.select(F.col("vec_id"), F.col("embedding").alias("_v"))
     ).persist(StorageLevel.MEMORY_AND_DISK)
     track(emb)
 
     first = (
         emb.select(
-            id_col,
+            "vec_id",
             "_v",
             md5_hash32(
                 F.concat(
-                    F.lit(f"{salt}_seed_"), F.col(id_col).cast("string")
+                    F.lit(f"{salt}_seed_"), F.col("vec_id").cast("string")
                 )
             ).alias("_h"),
         )
-        .orderBy("_h", id_col)
+        .orderBy("_h", "vec_id")
         .limit(1)
-        .collect()[0]
+        .collect()
     )
-    seeds = [(int(first[id_col]), list(first["_v"]), 0)]
+    if not first:
+        return [], {}
+    seeds = [(int(first[0]["vec_id"]), list(first[0]["_v"]), 0)]
 
     two60 = float(2 ** 60)
     for r in range(1, rounds + 1):
@@ -3226,25 +3097,30 @@ def _kmpar_candidates(
         d2 = F.array_min(
             F.transform(carr, lambda c: _sq_dist(F.col("_v"), c["cvec"]))
         )
-        scored = emb.select(id_col, "_v", d2.alias("_d2")).persist(
+        scored = emb.select("vec_id", "_v", d2.alias("_d2")).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         track(scored)
         phi = scored.agg(F.sum("_d2").alias("_phi")).collect()[0]["_phi"]
+        if phi == 0:
+            # d^2 == 0 everywhere: the threshold l * d^2 / phi would
+            # divide by zero (an ANSI error), and no point can be
+            # selected in this or any later round
+            break
         u = md5_hash60(
             F.concat(
-                F.lit(f"{salt}_sel_{r}_"), F.col(id_col).cast("string")
+                F.lit(f"{salt}_sel_{r}_"), F.col("vec_id").cast("string")
             )
         ).cast("double") / F.lit(two60)
         picked = (
             scored.filter(
                 u < (F.lit(float(oversample)) * F.col("_d2")) / F.lit(float(phi))
             )
-            .select(id_col, "_v")
+            .select("vec_id", "_v")
             .collect()
         )
-        for row in sorted(picked, key=lambda x: int(x[id_col])):
-            seeds.append((int(row[id_col]), list(row["_v"]), r))
+        for row in sorted(picked, key=lambda x: int(x["vec_id"])):
+            seeds.append((int(row["vec_id"]), list(row["_v"]), r))
 
     warr = F.expr(
         _rows_struct_sql([{"cell": s[0], "cvec": s[1]} for s in seeds])
@@ -3270,8 +3146,6 @@ def _kmpar_candidates(
 
 def kmeans_parallel_init(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     rounds: int = 3,
     oversample: float = 8.0,
     salt: str = "kmpar",
@@ -3312,9 +3186,7 @@ def kmeans_parallel_init(
     lexicographic tie-break; a seed whose vector duplicates a
     lower-id seed carries weight 0.
     """
-    seeds, wmap = _kmpar_candidates(
-        df, id_col, vec_col, rounds, oversample, salt
-    )
+    seeds, wmap = _kmpar_candidates(df, rounds, oversample, salt)
     return local_frame(
         df.sparkSession,
         [(sid, rsel, wmap.get(sid, 0)) for sid, _vec, rsel in seeds],
@@ -3324,8 +3196,6 @@ def kmeans_parallel_init(
 
 def kmeans_parallel_recluster(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     rounds: int = 3,
     oversample: float = 8.0,
     k: int = 8,
@@ -3348,13 +3218,18 @@ def kmeans_parallel_recluster(
     and k=1024 that is the whole argument for the algorithm.
 
     Output: one row per final center — (center_id, pick_order
-    0-based, n_assigned, mean_sqdist rounded to 6). Raises if the
-    candidate phase yields fewer than k candidates (the oracle
-    unrolls exactly k-1 picks and cannot adapt silently).
+    0-based, n_assigned, mean_sqdist rounded to 6); empty for an
+    empty corpus. Raises if the candidate phase yields fewer than k
+    candidates (the oracle unrolls exactly k-1 picks and cannot
+    adapt silently).
     """
-    seeds, wmap = _kmpar_candidates(
-        df, id_col, vec_col, rounds, oversample, salt
+    out_schema = (
+        "center_id bigint, pick_order int, n_assigned bigint, "
+        "mean_sqdist double"
     )
+    seeds, wmap = _kmpar_candidates(df, rounds, oversample, salt)
+    if not seeds:  # empty corpus: no centers
+        return local_frame(df.sparkSession, [], out_schema)
     cands = [(sid, vec, wmap.get(sid, 0)) for sid, vec, _r in seeds]
     if len(cands) < k:
         raise ValueError(
@@ -3384,7 +3259,7 @@ def kmeans_parallel_recluster(
 
     # Final-assignment narrow map: same under-parallel guard as the
     # candidate phase (no-op at real scale).
-    emb = fan_out(df.select(F.col(id_col), F.col(vec_col).alias("_v")))
+    emb = fan_out(df.select(F.col("vec_id"), F.col("embedding").alias("_v")))
     carr = F.expr(
         _rows_struct_sql(
             [{"cell": cid, "cvec": cv} for cid, cv, _w in centers]
@@ -3417,9 +3292,4 @@ def kmeans_parallel_recluster(
         rows.append(
             (cid, order, cnt, round(sd / cnt, 6) if cnt else 0.0)
         )
-    return local_frame(
-        df.sparkSession,
-        rows,
-        "center_id bigint, pick_order int, n_assigned bigint, "
-        "mean_sqdist double",
-    )
+    return local_frame(df.sparkSession, rows, out_schema)

@@ -577,7 +577,6 @@ def group_bottomk_sample(
     group_col: str,
     key_col: str,
     k: int = 16,
-    salt: str = "gs",
 ) -> DataFrame:
     """Fixed-budget per-group uniform sample: each group's k rows
     with the smallest portable md5 rank (ties by key) —
@@ -599,9 +598,7 @@ def group_bottomk_sample(
 
     from ulh_etl_spark.operators.text import md5_hash32
 
-    h = md5_hash32(
-        F.concat(F.lit(f"{salt}_"), F.col(key_col).cast("string"))
-    )
+    h = md5_hash32(F.concat(F.lit("gs_"), F.col(key_col).cast("string")))
     w = Window.partitionBy(group_col).orderBy("h", key_col)
     return (
         df.select(

@@ -20,19 +20,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_SALT_COL = "_salt"
 
-def with_salt(df: DataFrame, n: int, salt_col: str = "_salt") -> DataFrame:
+
+def with_salt(df: DataFrame, n: int) -> DataFrame:
     """Deterministic salt in [0, n): hash of the whole row — uniform
     without requiring a random seed (reproducible plans/tests)."""
     return df.withColumn(
-        salt_col, F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(n))
+        _SALT_COL, F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(n))
     )
 
 
-def replicate_for_salt(df: DataFrame, n: int, salt_col: str = "_salt") -> DataFrame:
+def replicate_for_salt(df: DataFrame, n: int) -> DataFrame:
     """Explode the dimension side into n copies, one per salt value."""
     return df.withColumn(
-        salt_col, F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
+        _SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
     )
 
 
@@ -48,5 +50,5 @@ def salted_join(
     dim's non-key columns (the salt is dropped)."""
     f = with_salt(fact, num_salts)
     d = replicate_for_salt(dim, num_salts)
-    joined = f.join(d, on + ["_salt"], how)
-    return joined.drop("_salt")
+    joined = f.join(d, on + [_SALT_COL], how)
+    return joined.drop(_SALT_COL)

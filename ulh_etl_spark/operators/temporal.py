@@ -57,7 +57,6 @@ def asof_join(
     right_ts: str,
     right_payload: tuple[str, ...],
     tiebreak: str | None = None,
-    prefix: str = "matched_",
     tolerance_seconds: int | None = None,
     direction: str = "backward",
 ) -> DataFrame:
@@ -65,7 +64,8 @@ def asof_join(
     ``right`` row with the same ``on`` key — the latest at-or-before
     (``direction='backward'``, default) or the earliest at-or-after
     (``direction='forward'``); unmatched rows keep nulls. The pandas
-    ``merge_asof`` surface, distributed.
+    ``merge_asof`` surface, distributed. Payload columns come out as
+    ``matched_<col>``.
 
     ``tolerance_seconds`` nulls out matches farther than the horizon
     (|left_ts - matched_ts| > tolerance): the match is computed in the
@@ -132,7 +132,7 @@ def asof_join(
     out = filled.filter(F.col("_side") == 1).select(
         *[F.col(c) for c in left.columns],
         *[
-            F.col("_match").getField(c).alias(f"{prefix}{c}")
+            F.col("_match").getField(c).alias(f"matched_{c}")
             for c in payload_cols
         ],
     )
@@ -410,11 +410,7 @@ def gap_fill_daily(
     )
 
 
-def peak_concurrency_daily(
-    sessions: DataFrame,
-    start_col: str = "session_start",
-    end_col: str = "session_end",
-) -> DataFrame:
+def peak_concurrency_daily(sessions: DataFrame) -> DataFrame:
     """Peak concurrent sessions per day — the sweep-line interval
     aggregate (capacity planning / rate-limit sizing over q51's
     sessionization), decomposed so the sweep NEVER needs a global
@@ -437,9 +433,10 @@ def peak_concurrency_daily(
     (ts, delta DESC) sort, so the per-day MAX is invariant to the
     residual tie order.
 
-    Output: (day 'yyyy-MM-dd', n_started, peak_concurrency)."""
-    s = F.col(start_col)
-    e = F.col(end_col)
+    Input: (session_start, session_end). Output: (day 'yyyy-MM-dd',
+    n_started, peak_concurrency)."""
+    s = F.col("session_start")
+    e = F.col("session_end")
     bounds = sessions.select(
         s.alias("ts"), F.lit(1).alias("delta")
     ).unionByName(sessions.select(e.alias("ts"), F.lit(-1).alias("delta")))

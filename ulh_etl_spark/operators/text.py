@@ -117,12 +117,12 @@ def char_ngrams(col: Column, n: int) -> Column:
     )
 
 
-def stopword_count(col: Column, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
+def stopword_count(col: Column) -> Column:
     # NB: measured against array_contains(lit(list), t) — the isin
     # chain wins (Catalyst compiles IN over literals to an optimized
     # set lookup; the array literal forces a linear scan per token).
     toks = whitespace_tokens(F.lower(col))
-    return F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
+    return F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS_EN)))
 
 
 def punct_count(col: Column) -> Column:
@@ -148,7 +148,7 @@ def quality_score(col: Column) -> Column:
     return F.round(score, 6)
 
 
-def with_quality_score(df, text_col: str, out_col: str = "quality"):
+def with_quality_score(df, text_col: str):
     """quality_score as a frame transform (DataFrame in, DataFrame out).
 
     Measured note: a staged two-Project variant that materialized the
@@ -159,7 +159,7 @@ def with_quality_score(df, text_col: str, out_col: str = "quality"):
     runtime subexpression elimination already dedupes the split inside
     one projection, so the closed-form expression is the fast shape.
     """
-    return df.withColumn(out_col, quality_score(F.col(text_col)))
+    return df.withColumn("quality", quality_score(F.col(text_col)))
 
 
 # Marker vocabularies for the n-gram/stopword language heuristic.
@@ -289,18 +289,17 @@ LANG_PROFILE_SAMPLES: dict[str, str] = {
 
 
 def lang_ngram_weights(
-    samples: dict[str, str] | None = None,
-    n: int = 3,
-    n_buckets: int = 512,
+    n: int = 3, n_buckets: int = 512
 ) -> dict[str, list[float]]:
     """Hashed char-n-gram language PROFILES (pure Python, runs once
-    at plan build): per language, bucket b's weight is the Laplace-
-    smoothed multinomial log-likelihood log((count_b + 1) /
-    (total + n_buckets)) of the language's training trigrams hashed
-    by the same md5 bucketing the engine applies per document —
-    the Cavnar-Trenkle n-gram profile idea in naive-Bayes form,
-    deployable exactly like hashed_model_weights (plan-constant
-    array, no vocab join). Weights round to 6 so the literal both
+    at plan build) trained on LANG_PROFILE_SAMPLES: per language,
+    bucket b's weight is the Laplace-smoothed multinomial
+    log-likelihood log((count_b + 1) / (total + n_buckets)) of the
+    language's training trigrams hashed by the same md5 bucketing
+    the engine applies per document — the Cavnar-Trenkle n-gram
+    profile idea in naive-Bayes form, deployable exactly like
+    hashed_model_weights (plan-constant array, no vocab join).
+    Weights round to 6 so the literal both
     engines parse is short and identical. 512 buckets: with ~1K
     training trigrams per language, 128 buckets average ~8 grams
     each and cross-language collision noise misclassifies clean
@@ -309,9 +308,8 @@ def lang_ngram_weights(
     import hashlib
     import math
 
-    samples = samples or LANG_PROFILE_SAMPLES
     out = {}
-    for lang, text in samples.items():
+    for lang, text in LANG_PROFILE_SAMPLES.items():
         t = text.lower()
         grams = (
             [t[i: i + n] for i in range(len(t) - n + 1)]
@@ -386,7 +384,6 @@ def lang_pred_from_scores(
 def lang_ngram_scores(
     col: Column,
     profiles: dict[str, list[float]],
-    n: int = 3,
 ) -> dict[str, Column]:
     """Per-language mean trigram log-likelihood (rounded 6) — the
     char-n-gram upgrade of lang_scores, as self-contained Columns.
@@ -394,27 +391,24 @@ def lang_ngram_scores(
     lang_gram_buckets once and lang_score_from_buckets per language
     (q150's shape) — this convenience form re-hashes the grams per
     language."""
-    buckets = lang_gram_buckets(col, n, len(next(iter(profiles.values()))))
+    buckets = lang_gram_buckets(col, 3, len(next(iter(profiles.values()))))
     return {
         lang: lang_score_from_buckets(buckets, w)
         for lang, w in profiles.items()
     }
 
 
-def lang_id_ngram(
-    col: Column,
-    profiles: dict[str, list[float]] | None = None,
-    n: int = 3,
-) -> Column:
+def lang_id_ngram(col: Column) -> Column:
     """Language ID by hashed char-n-gram naive-Bayes profiles — the
     production upgrade of the marker-word lang_id (which only sees
     exact stopword matches and calls everything else 'unknown').
-    argmax of the per-language mean log-likelihood (see
-    lang_pred_from_scores). Still a pure JVM expression chain — no
-    UDF, no join, the weight arrays ride the plan as parsed
-    literals."""
-    profiles = profiles or lang_ngram_weights(n=n)
-    return lang_pred_from_scores(lang_ngram_scores(col, profiles, n), col)
+    argmax of the per-language mean trigram log-likelihood under the
+    default lang_ngram_weights() profiles (see lang_pred_from_scores).
+    Still a pure JVM expression chain — no UDF, no join, the weight
+    arrays ride the plan as parsed literals."""
+    return lang_pred_from_scores(
+        lang_ngram_scores(col, lang_ngram_weights()), col
+    )
 
 
 def _isin_pred(markers: tuple[str, ...]):
@@ -486,9 +480,7 @@ def hash_split(
     )
 
 
-def weighted_sample_key(
-    id_col: Column, weight: Column, salt: str = "ws"
-) -> Column:
+def weighted_sample_key(id_col: Column, weight: Column) -> Column:
     """Efraimidis-Spirakis (A-ES) weighted-sampling key:
     ``u^(1/w)`` with u a deterministic md5-derived uniform in (0,1).
     Taking the top-k rows by this key samples WITHOUT replacement with
@@ -503,16 +495,16 @@ def weighted_sample_key(
     descending top-k, so zero-weight rows are never sampled — the
     A-ES limit of probability proportional to zero."""
     u = (
-        md5_hash32(F.concat(F.lit(salt), F.lit("_"), id_col.cast("string")))
+        md5_hash32(F.concat(F.lit("ws"), F.lit("_"), id_col.cast("string")))
         + F.lit(1.0)
     ) / F.lit(4294967297.0)  # (h+1)/(2^32+1) in (0,1)
     return F.pow(u, F.try_divide(F.lit(1.0), weight))
 
 
-def hashed_model_weights(n_buckets: int, salt: str = "qmodel") -> list[float]:
+def hashed_model_weights(n_buckets: int) -> list[float]:
     """Deterministic stand-in weight vector for
     :func:`hashed_linear_score`, shaped like a trained linear model:
-    w_i = md5-uniform(salt, i) - 0.5, centered in [-0.5, 0.5).
+    w_i = md5-uniform('qmodel', i) - 0.5, centered in [-0.5, 0.5).
     A REAL trained model (fastText-style hashed bag-of-words) plugs
     its weights into the same scorer unchanged — nothing about the
     Spark plan depends on where the numbers came from."""
@@ -520,14 +512,12 @@ def hashed_model_weights(n_buckets: int, salt: str = "qmodel") -> list[float]:
 
     out = []
     for i in range(n_buckets):
-        h = hashlib.md5(f"{salt}_{i}".encode()).hexdigest()[:8]
+        h = hashlib.md5(f"qmodel_{i}".encode()).hexdigest()[:8]
         out.append(round(int(h, 16) / 4294967296.0 - 0.5, 6))
     return out
 
 
-def hashed_linear_score(
-    text: Column, weights: list[float], round_to: int = 6
-) -> Column:
+def hashed_linear_score(text: Column, weights: list[float]) -> Column:
     """Model-based quality scoring at corpus scale — the fastText-
     style hashed bag-of-words linear classifier as a PURE JVM
     expression: each token hashes into one of ``len(weights)``
@@ -559,7 +549,7 @@ def hashed_linear_score(
         F.aggregate(logits, F.lit(0.0), lambda a, x: a + x)
         / F.size(toks).cast("double"),
     ).otherwise(F.lit(0.0))
-    return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-mean)), round_to)
+    return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-mean)), 6)
 
 
 def cap_per_group(
@@ -568,7 +558,6 @@ def cap_per_group(
     id_col: str,
     n: int,
     salt_buckets: int = 16,
-    rank_col: str = "cap_rank",
 ):
     """Per-group frequency cap — keep at most ``n`` rows per
     ``group_col``, selected deterministically (lowest
@@ -602,8 +591,8 @@ def cap_per_group(
     )
     w2 = Window.partitionBy(group_col).orderBy("_ck", id_col)
     return (
-        survivors.withColumn(rank_col, F.row_number().over(w2))
-        .filter(F.col(rank_col) <= n)
+        survivors.withColumn("cap_rank", F.row_number().over(w2))
+        .filter(F.col("cap_rank") <= n)
         .drop("_ck", "_cs")
     )
 
@@ -1345,7 +1334,6 @@ def pack_sequences(
     id_col: str,
     ctx_len: int = 512,
     n_shards: int | None = None,
-    salt: str = "pack",
 ):
     """Deterministic sequence packing (concat-then-chunk): assign each
     document a (shard, pack_idx, offset) so a training reader can
@@ -1381,7 +1369,7 @@ def pack_sequences(
 
     shard = (
         md5_hash32(
-            F.concat(F.lit(salt), F.lit("_"), F.col(id_col).cast("string"))
+            F.concat(F.lit("pack"), F.lit("_"), F.col(id_col).cast("string"))
         )
         % n_shards
     )
@@ -1711,13 +1699,7 @@ def compression_ratio(df, text_col: str, id_col: str, level: int = 6):
     )
 
 
-def needle_insert(
-    df,
-    text_col: str,
-    id_col: str,
-    needle: str = "XNEEDLEX",
-    salt: str = "needle",
-):
+def needle_insert(df, text_col: str, id_col: str):
     """Long-context eval-data synthesis (needle-in-a-haystack prep):
     insert a marker token into each document at a deterministic
     salted-md5 depth fraction — the generator for retrieval-depth
@@ -1728,7 +1710,8 @@ def needle_insert(
 
     Pure narrow map (tokenize, slice, concat). Returns (id,
     n_tokens — original count, depth_frac in [0, 1), needle_pos —
-    0-based token index, text_with_needle). Token-less docs get the
+    0-based token index, text_with_needle — the needle token is
+    ``XNEEDLEX``). Token-less docs get the
     needle alone at position 0."""
     with_t = df.select(
         F.col(id_col),
@@ -1738,14 +1721,14 @@ def needle_insert(
     nt = F.size(toks)
     frac = (
         md5_hash32(
-            F.concat(F.lit(salt + "_"), F.col(id_col).cast("string"))
+            F.concat(F.lit("needle_"), F.col(id_col).cast("string"))
         )
         % 1000
     ) / F.lit(1000.0)
     pos = F.floor(frac * nt).cast("int")
     inserted = F.concat(
         F.slice(toks, 1, pos),
-        F.array(F.lit(needle)),
+        F.array(F.lit("XNEEDLEX")),
         F.slice(toks, pos + 1, nt - pos),
     )
     return with_t.select(
@@ -1810,7 +1793,7 @@ def zipf_slope(df, text_col: str):
 
 
 def contrastive_span_pairs(
-    df, text_col: str, id_col: str, span_tokens: int = 16, salt: str = "span"
+    df, text_col: str, id_col: str, span_tokens: int = 16
 ):
     """Contrastive training-pair generation (the inverse-cloze /
     Contriever recipe): from every document long enough, two
@@ -1836,7 +1819,7 @@ def contrastive_span_pairs(
     off = (
         F.lit(span_tokens)
         + md5_hash32(
-            F.concat(F.lit(salt + "_"), F.col(id_col).cast("string"))
+            F.concat(F.lit("span_"), F.col(id_col).cast("string"))
         )
         % span_range
     )
@@ -1857,13 +1840,7 @@ LEET_FROM = "04135$@7"
 LEET_TO = "oaless" + "at"
 
 
-def blocklist_filter(
-    df,
-    text_col: str,
-    id_col: str,
-    blocklist: tuple,
-    leet_fold: bool = True,
-):
+def blocklist_filter(df, text_col: str, id_col: str, blocklist: tuple):
     """Safety/blocklist prefilter with obfuscation folding: lowercase
     the text, fold common leet substitutions (0->o, 4->a, 1->l, 3->e,
     5->s, $->s, @->a, 7->t) so 'sp4m'/'$pam' still match 'spam',
@@ -1878,10 +1855,9 @@ def blocklist_filter(
     needing one."""
     if not blocklist:
         raise ValueError("blocklist must be non-empty")
-    base = F.lower(F.col(text_col))
-    if leet_fold:
-        base = F.translate(base, LEET_FROM, LEET_TO)
-    toks = whitespace_tokens(base)
+    toks = whitespace_tokens(
+        F.translate(F.lower(F.col(text_col)), LEET_FROM, LEET_TO)
+    )
     bl = F.array(*[F.lit(t) for t in blocklist])
     matched = F.array_sort(F.array_intersect(F.array_distinct(toks), bl))
     # n_matches counts OCCURRENCES (policy wants volume, not just
@@ -1898,23 +1874,13 @@ def blocklist_filter(
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_rules(
-    df,
-    text_col: str,
-    id_col: str,
-    min_words: int = 10,
-    max_words: int = 100000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_alpha_word_frac: float = 0.8,
-    min_stopwords: int = 2,
-):
+def gopher_rules(df, text_col: str, id_col: str):
     """The Gopher rule-based quality filter (Rae et al. 2021,
     "Scaling Language Models", Table A1): per-document pass/fail
-    flags for word count bounds, mean word length bounds,
-    symbol-to-word ratio (# and ellipsis), alphabetic-word fraction,
-    and distinct-stopword presence, plus the conjunctive ``keep``.
+    flags for word count bounds (10..100000), mean word length bounds
+    (3..10), symbol-to-word ratio (# and ellipsis, <= 0.1),
+    alphabetic-word fraction (>= 0.8), and distinct-stopword presence
+    (>= 2), plus the conjunctive ``keep``.
     Returned per-rule (not just the verdict) because curation tuning
     reads WHICH rule rejected.
 
@@ -1941,14 +1907,11 @@ def gopher_rules(
         )
     )
     flags = {
-        "word_count_ok": (n_words >= min_words) & (n_words <= max_words),
-        "mean_word_len_ok": (mean_word_len >= min_mean_word_len)
-        & (mean_word_len <= max_mean_word_len),
-        "symbol_ratio_ok": n_symbols.cast("double") / n_safe
-        <= max_symbol_ratio,
-        "alpha_frac_ok": n_alpha.cast("double") / n_safe
-        >= min_alpha_word_frac,
-        "stopwords_ok": n_stop >= min_stopwords,
+        "word_count_ok": (n_words >= 10) & (n_words <= 100000),
+        "mean_word_len_ok": (mean_word_len >= 3.0) & (mean_word_len <= 10.0),
+        "symbol_ratio_ok": n_symbols.cast("double") / n_safe <= 0.1,
+        "alpha_frac_ok": n_alpha.cast("double") / n_safe >= 0.8,
+        "stopwords_ok": n_stop >= 2,
     }
     keep = None
     for c in flags.values():
@@ -1967,7 +1930,6 @@ def dsir_importance(
     id_col: str,
     target_col: str,
     n_buckets: int = 1024,
-    smoothing: float = 1.0,
 ):
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): per-document log
@@ -1976,7 +1938,7 @@ def dsir_importance(
     web data that "looks like" a high-quality target domain. Rows
     where boolean ``target_col`` holds define the target
     distribution; every row contributes to the raw distribution.
-    Both models are add-``smoothing`` estimates over ``n_buckets``
+    Both models are add-one estimates over ``n_buckets``
     hashed token buckets; a document's weight is the sum of its
     tokens' bucket log-ratios. Resample/top-k downstream with
     weighted_sample_key(exp(score)) or a plain orderBy.
@@ -2013,7 +1975,7 @@ def dsir_importance(
         F.count("*").alias("r_n"),
     )
     tot = hist.agg(F.sum("t_n").alias("t_tot"), F.sum("r_n").alias("r_tot"))
-    s = float(smoothing)
+    s = 1.0  # add-one smoothing
     sb = s * n_buckets
     ratio = hist.join(F.broadcast(tot)).select(
         "_b",
@@ -2842,14 +2804,12 @@ def _eq_pred(term: str):
     return lambda t: t == term
 
 
-def bm25_scores(
-    df,
-    text_col: str,
-    id_col: str,
-    query_terms: tuple[str, ...],
-    k1: float = 1.2,
-    b: float = 0.75,
-):
+# The standard BM25 term-saturation and length-normalization constants.
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+
+
+def bm25_scores(df, text_col: str, id_col: str, query_terms: tuple[str, ...]):
     """BM25 score of every document against a fixed bag of query
     terms (Robertson/Sparck-Jones idf; docs matching no term score 0
     — tf=0 zeroes the term weight naturally, no outer join needed).
@@ -2890,8 +2850,12 @@ def bm25_scores(
         )
         score = score + idf * (
             tf
-            * (k1 + 1.0)
-            / (tf + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
+            * (_BM25_K1 + 1.0)
+            / (
+                tf
+                + _BM25_K1
+                * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
+            )
         )
     return joined.select(F.col(id_col), F.round(score, 6).alias("bm25"))
 

@@ -36,10 +36,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().simpleString()
-
-
 def _dead_node_ids(plan: str) -> set[str]:
     """Node ids that appear ONLY inside an AQE ``== Initial Plan ==``
     tree section. When a cached/partially-executed AdaptiveSparkPlan

@@ -22,20 +22,21 @@ from pyspark.sql.types import StructType
 
 from ulh_etl_spark.sources.files import CSV_OPTIONS
 
+# Seconds stream_ingest_available_now waits for its drain to finish.
+_TIMEOUT_S = 120.0
+
 
 def _csv_stream(
     spark: SparkSession,
     directory: str,
     schema: StructType | str,
-    delimiter: str = ",",
 ) -> DataFrame:
-    """Streaming read of ``directory``'s CSV files, parsed with the
-    batch ``csv_scan``'s ``CSV_OPTIONS``."""
+    """Streaming read of ``directory``'s comma-separated files, parsed
+    with the batch ``csv_scan``'s ``CSV_OPTIONS``."""
     df = (
         spark.readStream.format("csv")
         .schema(schema)  # streams require an explicit schema (no inference race)
         .options(**CSV_OPTIONS)
-        .option("sep", delimiter)
         .load(directory)
     )
     # same provenance/lineage columns as the batch RAW stage
@@ -52,18 +53,16 @@ def stream_ingest_available_now(
     schema: StructType | str,
     target_table: str,
     checkpoint_dir: str,
-    delimiter: str = ",",
     transform=None,
-    timeout_s: float = 120.0,
 ) -> int:
     """Run one drain-everything cycle into ``target_table`` and wait
-    for completion — the exact shape of one reference pipeline run.
-    ``transform`` optionally applies the refined-stage column logic
+    (up to 120 s) for completion — the exact shape of one reference
+    pipeline run. ``transform`` optionally applies the refined-stage column logic
     inside the stream (transforms are narrow, so they stream as-is).
     Returns rows in the target table afterwards. Re-invoking after new
     files land processes ONLY the new files (checkpoint = the IS_NEW
     flags, without the race)."""
-    df = _csv_stream(spark, directory, schema, delimiter)
+    df = _csv_stream(spark, directory, schema)
     if transform is not None:
         df = transform(df)
     q = (
@@ -72,7 +71,7 @@ def stream_ingest_available_now(
         .trigger(availableNow=True)
         .toTable(target_table)
     )
-    q.awaitTermination(timeout_s)
+    q.awaitTermination(_TIMEOUT_S)
     if q.isActive:
         q.stop()
     return spark.table(target_table).count()
@@ -85,7 +84,6 @@ def stream_merge_available_now(
     target_table: str,
     checkpoint_dir: str,
     keys: list[str],
-    tiebreak_cols: list[str] | None = None,
 ) -> dict:
     """Streaming MERGE sink: drain the inbound directory exactly-once
     (AvailableNow + checkpoint) and upsert each micro-batch into the
@@ -111,7 +109,6 @@ def stream_merge_available_now(
             target_table,
             batch_df,
             keys=keys,
-            tiebreak_cols=tiebreak_cols,
         )
         stats["updated"] += out["updated"]
         stats["inserted"] += out["inserted"]

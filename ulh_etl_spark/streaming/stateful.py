@@ -21,14 +21,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def running_totals_stream(
-    df: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key running (count, sum) maintained in GroupState: each
-    micro-batch emits the UPDATED totals for keys seen in that batch.
-    Output: (key, total_events, total_value)."""
+def running_totals_stream(df: DataFrame) -> DataFrame:
+    """Per-``user_id`` running (count, sum of ``value``) maintained in
+    GroupState: each micro-batch emits the UPDATED totals for keys
+    seen in that batch. Output: (user_id, total_events, total_value)."""
     import pandas as pd
 
     def update(
@@ -39,15 +35,15 @@ def running_totals_stream(
         (cnt, tot) = state.get if state.exists else (0, 0.0)
         for pdf in batches:
             cnt += len(pdf)
-            tot += float(pdf[value_col].sum())
+            tot += float(pdf["value"].sum())
         state.update((cnt, round(tot, 6)))
         yield pd.DataFrame(
-            {key_col: [key[0]], "total_events": [cnt], "total_value": [round(tot, 6)]}
+            {"user_id": [key[0]], "total_events": [cnt], "total_value": [round(tot, 6)]}
         )
 
-    return df.groupBy(key_col).applyInPandasWithState(
+    return df.groupBy("user_id").applyInPandasWithState(
         update,
-        outputStructType=f"{key_col} long, total_events long, total_value double",
+        outputStructType="user_id long, total_events long, total_value double",
         stateStructType="cnt long, tot double",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -88,13 +84,12 @@ def seen_keys_dedup_stream(
 
 def running_zscore_stream(
     df: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
     min_points: int = 8,
     threshold: float = 3.0,
 ) -> DataFrame:
-    """Streaming per-key anomaly detection — the stateful twin of
-    operators.temporal.rolling_zscore_anomalies: each key's state
+    """Streaming per-``user_id`` anomaly detection over ``value`` — the
+    stateful twin of operators.temporal.rolling_zscore_anomalies: each
+    key's state
     carries Welford running moments (count, mean, M2), every incoming
     point is scored against the state BEFORE it is folded in (the
     baseline must not contain the point it judges), and points with
@@ -103,7 +98,7 @@ def running_zscore_stream(
     doubles) per key FOREVER — no window buffer — which is what makes
     it viable for unbounded per-key streams.
 
-    Emits ONLY anomalies (update mode): (key, value, zscore,
+    Emits ONLY anomalies (update mode): (user_id, value, zscore,
     n_baseline). Welford is numerically stable under streaming
     accumulation where the naive sum-of-squares form cancels
     catastrophically on long-running keys."""
@@ -119,7 +114,7 @@ def running_zscore_stream(
         (cnt, mean, m2) = state.get if state.exists else (0, 0.0, 0.0)
         rows = []
         for pdf in batches:
-            for v in pdf[value_col].astype(float):
+            for v in pdf["value"].astype(float):
                 if cnt >= min_points and m2 > 0:
                     std = math.sqrt(m2 / (cnt - 1))
                     z = (v - mean) / std
@@ -133,13 +128,13 @@ def running_zscore_stream(
         state.update((cnt, mean, m2))
         if rows:
             yield pd.DataFrame(
-                rows, columns=[key_col, value_col, "zscore", "n_baseline"]
+                rows, columns=["user_id", "value", "zscore", "n_baseline"]
             )
 
-    return df.groupBy(key_col).applyInPandasWithState(
+    return df.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=(
-            f"{key_col} long, {value_col} double, zscore double, "
+            "user_id long, value double, zscore double, "
             "n_baseline long"
         ),
         stateStructType="cnt long, mean double, m2 double",

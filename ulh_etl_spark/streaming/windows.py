@@ -102,19 +102,18 @@ def sessionize(
 
 def streaming_session_counts(
     df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap: str = "30 minutes",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Streaming sessionization via ``session_window`` — state bounded
-    by watermark + gap; the streaming twin of :func:`sessionize`."""
+    """Streaming sessionization of (user_id, ts) events via
+    ``session_window`` — state bounded by watermark + gap; the
+    streaming twin of :func:`sessionize`."""
     return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("sw"), F.col(user_col))
+        df.withWatermark("ts", watermark)
+        .groupBy(F.session_window(F.col("ts"), gap).alias("sw"), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
         .select(
-            F.col(user_col),
+            F.col("user_id"),
             F.col("sw.start").alias("session_start"),
             F.col("sw.end").alias("session_end"),
             F.col("n_events"),
