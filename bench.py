@@ -812,9 +812,9 @@ def main() -> None:
     # The driver tail-captures only the LAST 2000 chars of stdout and
     # json-parses the final line (BENCH_r07/r08 recorded "parsed":
     # null because the 79-query line overflowed the window). Keep the
-    # final stdout line under that window: compact separators first;
-    # if still too long, shorten query keys to their qNN prefix. The
-    # full payload (long names, errors) goes to a sidecar file.
+    # final stdout line under that window: compact separators, and
+    # if still too long, no per-query detail. The full payload (names,
+    # errors) goes to a sidecar file.
     # Per-cpus sidecar naming (r17, VERDICT r16 item 2): the driver's
     # scaling pass re-runs bench.py at a lower core count, and with a
     # single sidecar name that second run OVERWROTE the 32-core
@@ -832,37 +832,22 @@ def main() -> None:
     payload.pop("net_ratios", None)
     line = json.dumps(payload, separators=(",", ":"))
     if len(line) > 1900:
-        # qNN prefixes must stay unique or the dict comprehension
-        # silently collapses two queries' timings; fall back to full
-        # names on collision (ADVICE r9).
-        prefixes = [n.split("_", 1)[0] for n in timings]
-        shorten = (
-            (lambda n: n.split("_", 1)[0])
-            if len(set(prefixes)) == len(prefixes)
-            else (lambda n: n)
-        )
+        # over the 1,900-char tail window: drop per-query detail rather
+        # than ship a line it cannot parse — the sidecar
+        # bench_full.json keeps everything
         compact = dict(payload)
-        compact["queries"] = {shorten(n): s for n, s in timings.items()}
-        if errors:
-            compact["errors"] = {shorten(n): "see bench_full.json"
-                                 for n in errors}
+        compact["queries"] = {"_truncated": len(timings)}
+        compact.pop("errors", None)
+        if len(compact.get("flags", [])) > 5:
+            compact["flags"] = compact["flags"][:5] + [
+                {"q": "_truncated", "kind": "see bench_full.json"}
+            ]
+        if len(compact.get("adjudications", [])) > 5:
+            compact["adjudications"] = compact["adjudications"][:5] + [
+                {"q": "_truncated", "verdict": "see bench_full.json"}
+            ]
+        compact["note"] = "per-query detail in bench_full.json"
         line = json.dumps(compact, separators=(",", ":"))
-        if len(line) > 1900:
-            # still over the driver's tail window: drop per-query
-            # detail rather than ship a line it cannot parse — the
-            # sidecar bench_full.json keeps everything
-            compact["queries"] = {"_truncated": len(timings)}
-            compact.pop("errors", None)
-            if len(compact.get("flags", [])) > 5:
-                compact["flags"] = compact["flags"][:5] + [
-                    {"q": "_truncated", "kind": "see bench_full.json"}
-                ]
-            if len(compact.get("adjudications", [])) > 5:
-                compact["adjudications"] = compact["adjudications"][:5] + [
-                    {"q": "_truncated", "verdict": "see bench_full.json"}
-                ]
-            compact["note"] = "per-query detail in bench_full.json"
-            line = json.dumps(compact, separators=(",", ":"))
         assert len(line) <= 1900, f"bench line still {len(line)} chars"
     print(line)
     if errors:

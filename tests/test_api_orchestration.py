@@ -125,6 +125,25 @@ def test_run_api_practice_ordered_with_dependency(spark, api_cleanup):
     assert logs.filter("status = 'FAILED' AND entry = 'BrokenEndpoint'").count() == 1
 
 
+def test_run_api_practice_stamps_given_run_id(spark, api_cleanup):
+    """A caller-supplied parent run id (an outer orchestrator's) is
+    the one stamped on the RAW rows and on the audit row."""
+    t = FakeTransport()
+    t.route("POST", "https://lk/begin", ok({"records": [{"patientId": "p1"}]}))
+    cfg = load_config({"Practices": [{"practice_name": "p", "ingest": [
+        API_CONFIG["Practices"][0]["ingest"][0]
+    ]}]})
+    rpt = run_api_practice(spark, cfg.practice("p"), t, parent_run_id="outer-1")
+    assert rpt.parent_run_id == "outer-1"
+    assert [r.PARENT_RUN_ID for r in spark.table("api_raw_patients").collect()] == [
+        "outer-1"
+    ]
+    logs = spark.table("raw_ingest_log").filter("parent_run_id = 'outer-1'")
+    assert [(r.entry, r.status) for r in logs.collect()] == [
+        ("UpdatedPatients", "SUCCESS")
+    ]
+
+
 def test_auth_failure_skips_practice(spark, api_cleanup):
     t = FakeTransport()
     cfg = load_config(API_CONFIG)

@@ -35,6 +35,7 @@ class FakeTransport:
     def __init__(self):
         self.routes = {}
         self.calls = []
+        self.headers = []
 
     def route(self, method, url, *responses):
         self.routes[(method, url)] = list(responses)
@@ -42,6 +43,7 @@ class FakeTransport:
     def __call__(self, method, url, headers=None, json_body=None, timeout=60.0,
                  data=None, auth=None):
         self.calls.append((method, url, json_body, data))
+        self.headers.append(headers)
         queue = self.routes[(method, url)]
         return queue.pop(0) if len(queue) > 1 else queue[0]
 
@@ -110,10 +112,11 @@ def test_refresh_handshake(spark):
     waits = []
     df = refresh_handshake_source(
         spark, t, "https://hj/results.json", refresh_url="https://hj/refresh",
-        wait_s=120, sleeper=waits.append,
+        headers={"Authorization": "Bearer hj"}, wait_s=120, sleeper=waits.append,
     )
     assert df.count() == 2
     assert 120 in waits  # the fixed refresh wait
+    assert t.headers == [{"Authorization": "Bearer hj"}] * 2
 
 
 def test_refresh_handshake_derives_refresh_url(spark):
@@ -175,8 +178,13 @@ def test_odata_paging(spark):
     t.route("GET", "https://dv/appts",
             ok({"value": [{"g": "1"}], "@odata.nextLink": "https://dv/appts?p=2"}))
     t.route("GET", "https://dv/appts?p=2", ok({"value": [{"g": "2"}]}))
-    df = odata_paged_source(spark, t, "https://dv/appts", sleeper=NOSLEEP)
+    df = odata_paged_source(spark, t, "https://dv/appts",
+                            headers={"Authorization": "Bearer dv"}, sleeper=NOSLEEP)
     assert sorted(r.g for r in df.collect()) == ["1", "2"]
+    # caller headers ride every page request beside the page-size preference
+    assert t.headers == [
+        {"Prefer": "odata.maxpagesize=5000", "Authorization": "Bearer dv"}
+    ] * 2
 
 
 def test_hierarchy_walk(spark):
@@ -191,11 +199,12 @@ def test_hierarchy_walk(spark):
     df = hierarchy_walk_source(
         spark, t, "https://r8/permissions",
         lambda p, e: f"https://r8/reviews/{p['name']}/{e['id']}",
-        sleeper=NOSLEEP,
+        headers={"Authorization": "Basic r8"}, sleeper=NOSLEEP,
     )
     rows = df.collect()
     assert len(rows) == 1
     assert rows[0].rating == "5" and rows[0]._practice == "pr1"
+    assert t.headers == [{"Authorization": "Basic r8"}] * 3
 
 
 # ---------------------------------------------------------------- K7 sink
@@ -257,6 +266,27 @@ def test_entity_mirror_merge_skip_not_upserted(spark, mirror_cleanup):
     assert stats == {"updated": 0, "inserted": 1, "deleted": 0}
     out = {r.mbi: r.v for r in spark.table("entity_mirror").collect()}
     assert out == {"MBI1": "old", "MBI2": "new"}  # no MBI9
+
+
+def test_entity_mirror_merge_upsert_and_delete_same_key(spark, mirror_cleanup):
+    """A key upserted and deleted in one sync ends deleted, and is
+    counted both as upserted (inserted or updated) and as deleted."""
+    base = spark.createDataFrame(
+        [("MBI1", "old"), ("MBI2", "old")], "mbi string, v string"
+    )
+    write_table(base, "entity_mirror", mode="overwrite")
+    rows = spark.createDataFrame(
+        [("MBI2", "new", None), ("MBI2", "x", "delete"),
+         ("MBI3", "new", None), ("MBI3", "x", "delete"),
+         ("MBI5", "x", "delete")],
+        "mbi string, v string, _op string",
+    )
+    stats = entity_mirror_merge(
+        spark, "entity_mirror", rows, alternate_key=["mbi"], op_col="_op"
+    )
+    assert stats == {"updated": 1, "inserted": 1, "deleted": 2}
+    out = {r.mbi: r.v for r in spark.table("entity_mirror").collect()}
+    assert out == {"MBI1": "old"}
 
 
 def test_classify_create_update(spark):
@@ -341,6 +371,38 @@ def test_batch_upsert_http(spark, tmp_path):
     assert all(op["method"] == "PATCH" for op in flat)
     urls = {op["url"] for op in flat}
     assert "contacts(mbi='MBI0')" in urls  # alternate-key addressing
+
+
+def test_batch_upsert_http_sends_headers(spark, tmp_path):
+    """Caller headers (auth) reach every $batch request beside the
+    continue-on-error preference."""
+    spool_dir = str(tmp_path)
+
+    def _call(method, url, headers=None, json_body=None,
+              timeout=60.0, data=None, auth=None):
+        import json as _json
+        import os
+        import uuid
+
+        with open(os.path.join(spool_dir, f"{uuid.uuid4()}.json"), "w") as f:
+            _json.dump(headers, f)
+        n = len(data.splitlines())
+        return HttpResponse(
+            status=200, body="\n".join(_json.dumps({"status": 204}) for _ in range(n))
+        )
+
+    rows = spark.createDataFrame(
+        [(f"MBI{i}", f"v{i}") for i in range(4)], "mbi string, val string"
+    ).coalesce(1)
+    res = batch_upsert_http(
+        rows, "https://dv/$batch", "contacts", ["mbi"],
+        transport_factory=lambda: _call, batch_size=2,
+        headers={"Authorization": "Bearer dv"},
+    )
+    assert res.succeeded == 4 and res.batches == 2
+    assert read_spool(tmp_path) == [
+        {"Prefer": "odata.continue-on-error", "Authorization": "Bearer dv"}
+    ] * 2
 
 
 def test_batch_upsert_http_escapes_key_quotes(spark, tmp_path):
@@ -616,10 +678,10 @@ def _fanout_routes():
 
 
 def test_entity_fanout_auto_stays_on_driver_below_threshold(spark):
-    """AUTO mode (distribute=None): under the threshold the
-    reference-faithful sequential driver loop runs — exactly ONE
-    transport is constructed, and it has already made every call by
-    the time the source returns."""
+    """The auto rule: under the threshold the reference-faithful
+    sequential driver loop runs — exactly ONE transport is
+    constructed, and it has already made every call by the time the
+    source returns."""
     t = _fanout_routes()
     factories = []
 
@@ -693,8 +755,7 @@ def test_entity_fanout_auto_distributes_at_threshold(spark, tmp_path):
 def test_entity_fanout_auto_respects_pacing(spark):
     """AUTO mode must NOT silently turn a paced (rate-limited) caller
     into N concurrent per-partition callers: explicit api_delay_ms > 0
-    keeps the sequential driver loop even over the threshold; the
-    caller opts into concurrency with distribute=True."""
+    keeps the sequential driver loop even over the threshold."""
     t = _fanout_routes()
     df = entity_fanout_source(
         spark, lambda: t, ["p1", "p2", "p3"],
@@ -715,7 +776,7 @@ def test_entity_fanout_paths_emit_same_column_order(spark):
     df = entity_fanout_source(
         spark, lambda: t, ["p1", "p3"],
         lambda i: f"https://lk/patient/{i}",
-        api_delay_ms=0, sleeper=NOSLEEP, distribute=False,
+        api_delay_ms=0, sleeper=NOSLEEP,
     )
     assert df.columns == sorted(df.columns)
 

@@ -1,8 +1,8 @@
-"""Operators take only what a caller sets: every defaulted parameter of
-a public top-level function in ``operators/``, ``streaming/``,
-``functions/`` and ``cache.py`` must be passed by at least one call
-site. A default nobody overrides is a module constant, and the branch
-its other values would select is code no test runs.
+"""Functions take only what a caller sets: every defaulted parameter of
+a public top-level function in any ``ulh_etl_spark`` module must be
+passed by at least one call site. A default nobody overrides is a
+module constant, and the branch its other values would select is code
+no test runs.
 
 Reads source files only (no Spark session). A call is matched to a
 definition by name, so names defined more than once in the package are
@@ -15,12 +15,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "ulh_etl_spark"
-CHECKED = [
-    *sorted((PKG / "operators").glob("*.py")),
-    *sorted((PKG / "streaming").glob("*.py")),
-    *sorted((PKG / "functions").glob("*.py")),
-    PKG / "cache.py",
-]
+CHECKED = sorted(PKG.rglob("*.py"))
 CALLERS = [
     *PKG.rglob("*.py"),
     *(ROOT / "tools").rglob("*.py"),

@@ -216,6 +216,39 @@ def test_query_source_ingest(spark):
         spark.sql("DROP TABLE IF EXISTS e2e_qsrc_raw")
 
 
+def test_run_entry_stamps_given_run_id(spark, env):
+    """A caller-supplied parent run id is the one stamped on RAW
+    PARENT_RUN_ID and on every stage's audit row."""
+    from ulh_etl_spark.pipeline import run_entry
+
+    cfg = load_config(make_config(env))
+    practice = cfg.practice("testprac")
+    rpt = run_entry(spark, practice, practice.ingest[0], parent_run_id="outer-7")
+    assert rpt.status == "SUCCESS", rpt.error
+    assert rpt.parent_run_id == "outer-7"
+    raw_ids = {r.PARENT_RUN_ID for r in spark.table("e2e_raw_appts").collect()}
+    assert raw_ids == {"outer-7"}
+    for stage in ("precheck", "raw", "refined", "curated"):
+        log = spark.table(f"{stage}_ingest_log")
+        assert log.filter(F.col("parent_run_id") == "outer-7").count() >= 1, stage
+
+
+def test_run_practice_runs_only_named_entry(spark, env):
+    """entry_name selects one entry of the practice; the others do
+    not run."""
+    cfg_dict = make_config(env)
+    other = dict(cfg_dict["Practices"][0]["ingest"][0], name="other",
+                 raw_table="e2e_other_raw", refined_table="e2e_other_refined",
+                 curated_table="e2e_other_curated")
+    cfg_dict["Practices"][0]["ingest"].append(other)
+    cfg = load_config(cfg_dict)
+    reports = run_practice(spark, cfg, "testprac", entry_name="other")
+    assert [r.entry for r in reports] == ["other"]
+    assert reports[0].status == "SUCCESS", reports[0].error
+    assert spark.catalog.tableExists("e2e_other_raw")
+    assert not spark.catalog.tableExists("e2e_raw_appts")
+
+
 def test_zone_mode_end_to_end(spark, env):
     """use_zones=True routes unset table names into the medallion
     zone databases."""

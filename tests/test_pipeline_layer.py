@@ -6,7 +6,7 @@ import os
 import pytest
 
 from ulh_etl_spark.config import load_config
-from ulh_etl_spark.sinks.logs import append_log, log_table_name
+from ulh_etl_spark.sinks.logs import append_log, log_row, log_table_name
 from ulh_etl_spark.sinks.tables import (
     insert_select,
     merge_upsert,
@@ -14,7 +14,13 @@ from ulh_etl_spark.sinks.tables import (
     truncate_table,
     write_table,
 )
-from ulh_etl_spark.sources.files import csv_scan, head_lines, list_stage_files, move_file
+from ulh_etl_spark.sources.files import (
+    count_lines,
+    csv_scan,
+    head_lines,
+    list_stage_files,
+    move_file,
+)
 from ulh_etl_spark.state import mark_consumed, new_run_id, unconsumed
 from ulh_etl_spark.validate import PrecheckContract, precheck_file, strip_bom
 
@@ -95,7 +101,7 @@ def test_precheck_pass(spark, stage_dir):
         expected_columns=["id", "date", "patient"], min_row_count=1
     )
     f = list_stage_files(spark, stage_dir, r".*\.csv$")[0]
-    rpt = precheck_file(spark, f, contract)
+    rpt = precheck_file(spark, f, contract, count_lines(spark, [f.path])[f.path])
     assert rpt.passed
     by_check = {r.check: r.status for r in rpt.results}
     assert by_check["COLUMN_COUNT"] == "PASS"
@@ -112,7 +118,7 @@ def test_precheck_failures(spark, tmp_path):
     contract = PrecheckContract(
         expected_columns=["id", "date", "patient"], min_row_count=2
     )
-    rpt = precheck_file(spark, f, contract)
+    rpt = precheck_file(spark, f, contract, count_lines(spark, [f.path])[f.path])
     assert not rpt.passed
     by_check = {r.check: r.status for r in rpt.results}
     assert by_check["BOM_CHECK"] == "WARN"
@@ -131,7 +137,9 @@ def test_precheck_empty_file(spark, tmp_path):
     d.mkdir()
     (d / "e.csv").write_text("")
     f = list_stage_files(spark, str(d))[0]
-    rpt = precheck_file(spark, f, PrecheckContract())
+    rpt = precheck_file(
+        spark, f, PrecheckContract(), count_lines(spark, [f.path])[f.path]
+    )
     assert not rpt.passed
     assert rpt.results[0].check == "FILE_SIZE"
 
@@ -212,68 +220,50 @@ def test_merge_upsert_tiebreak_deterministic(warehouse):
     assert out == {(1, "a"): "old", (2, "b"): "v2", (3, "c"): "x"}
 
 
-def test_merge_upsert_dynamic_partition_overwrite(warehouse):
-    """Partitioned merge only rewrites partitions the source touches;
-    untouched partitions keep their original files."""
-    import glob
-    import os
+def test_merge_upsert_absent_target_dedups(warehouse):
+    """The first merge into a missing table keeps one row per key and
+    counts keys, like every later merge."""
+    spark = warehouse
+    spark.sql("DROP TABLE IF EXISTS t_merge_new")
+    src = spark.createDataFrame([("a", 1), ("a", 2), ("b", 3)], "k string, v int")
+    stats = merge_upsert(spark, "t_merge_new", src, keys=["k"])
+    assert stats == {"updated": 0, "inserted": 2}
+    rows = spark.table("t_merge_new").collect()
+    assert sorted(r.k for r in rows) == ["a", "b"]
+    assert {r.v for r in rows if r.k == "b"} == {3}
 
-    from ulh_etl_spark.sinks.tables import write_partitioned
+
+def test_merge_upsert_failed_swap_keeps_target(warehouse, monkeypatch):
+    """A swap whose staging rename fails must leave the old table in
+    place, and the next merge must build on it."""
+    from pyspark.sql import SparkSession
 
     spark = warehouse
-    df = spark.createDataFrame(
-        [(1, "p1", "old"), (2, "p1", "old"), (3, "p2", "keep")],
-        "id int, part string, v string",
+    write_table(
+        spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"),
+        "t_merge_swap", mode="overwrite",
     )
-    write_partitioned(df, "t_merge_dpo", ["part"])
-    tbl_dir = spark.sql("DESCRIBE FORMATTED t_merge_dpo").filter(
-        "col_name = 'Location'"
-    ).collect()[0].data_type.replace("file:", "")
-    before_p2 = sorted(glob.glob(os.path.join(tbl_dir, "part=p2", "*.parquet")))
+    real_sql = SparkSession.sql
 
-    src = spark.createDataFrame(
-        [(2, "p1", "new"), (4, "p1", "ins")], "id int, part string, v string"
-    )
-    stats = merge_upsert(spark, "t_merge_dpo", src, keys=["id"],
-                         partition_cols=["part"])
+    def failing_sql(self, query, *args, **kwargs):
+        if query.startswith("ALTER TABLE t_merge_swap__staging RENAME"):
+            raise RuntimeError("rename failed")
+        return real_sql(self, query, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", failing_sql)
+    src = spark.createDataFrame([("b", 20), ("c", 30)], "k string, v int")
+    with pytest.raises(RuntimeError, match="rename failed"):
+        merge_upsert(spark, "t_merge_swap", src, keys=["k"])
+    monkeypatch.setattr(SparkSession, "sql", real_sql)
+
+    assert {r.k: r.v for r in spark.table("t_merge_swap").collect()} == {
+        "a": 1, "b": 2
+    }
+    stats = merge_upsert(spark, "t_merge_swap", src, keys=["k"])
     assert stats == {"updated": 1, "inserted": 1}
-    out = {r.id: (r.part, r.v) for r in spark.table("t_merge_dpo").collect()}
-    assert out == {1: ("p1", "old"), 2: ("p1", "new"),
-                   3: ("p2", "keep"), 4: ("p1", "ins")}
-    after_p2 = sorted(glob.glob(os.path.join(tbl_dir, "part=p2", "*.parquet")))
-    assert before_p2 == after_p2  # untouched partition: same files
-
-
-def test_merge_upsert_partition_mover_guard(warehouse):
-    """A source row that moves a key to a different partition would
-    strand the old row (dynamic-partition-overwrite caveat); the
-    opt-in stability check fails fast instead of corrupting."""
-    import pytest
-
-    from ulh_etl_spark.sinks.tables import write_partitioned
-
-    spark = warehouse
-    df = spark.createDataFrame(
-        [(1, "p1", "old"), (2, "p2", "old")], "id int, part string, v string"
-    )
-    write_partitioned(df, "t_merge_mover", ["part"])
-    src = spark.createDataFrame(
-        [(1, "p2", "moved")], "id int, part string, v string"
-    )
-    with pytest.raises(ValueError, match="change partition"):
-        merge_upsert(
-            spark, "t_merge_mover", src, keys=["id"],
-            partition_cols=["part"], check_partition_stability=True,
-        )
-    # stable-partition source passes the check
-    ok = spark.createDataFrame(
-        [(2, "p2", "new")], "id int, part string, v string"
-    )
-    stats = merge_upsert(
-        spark, "t_merge_mover", ok, keys=["id"],
-        partition_cols=["part"], check_partition_stability=True,
-    )
-    assert stats == {"updated": 1, "inserted": 0}
+    assert {r.k: r.v for r in spark.table("t_merge_swap").collect()} == {
+        "a": 1, "b": 20, "c": 30
+    }
 
 
 def test_watermark_anti_join(warehouse):
@@ -293,10 +283,10 @@ def test_watermark_anti_join(warehouse):
 
 def test_append_log(warehouse):
     spark = warehouse
-    append_log(
-        spark, "RAW", "run1", "parent1", "adcs", "appointments", "SUCCESS",
+    append_log(spark, "RAW", [log_row(
+        "run1", "parent1", "adcs", "appointments", "SUCCESS",
         rows_read=10, rows_written=10,
-    )
+    )])
     t = spark.table(log_table_name("RAW"))
     assert t.count() == 1
     row = t.collect()[0]
@@ -392,7 +382,10 @@ def test_count_lines_keys_plain_paths(spark, tmp_path):
 def test_precheck_bom_names(spark, tmp_path, name, data, bom):
     (tmp_path / name).write_bytes(data)
     f = list_stage_files(spark, str(tmp_path))[0]
-    rpt = precheck_file(spark, f, PrecheckContract(expected_columns=["id", "date"]))
+    rpt = precheck_file(
+        spark, f, PrecheckContract(expected_columns=["id", "date"]),
+        count_lines(spark, [f.path])[f.path],
+    )
     by_check = {r.check: r for r in rpt.results}
     if bom:
         assert (by_check["BOM_CHECK"].status, by_check["BOM_CHECK"].actual) == ("WARN", bom)

@@ -71,6 +71,23 @@ def test_available_now_with_transform(spark, stream_env):
     assert spark.table("stream_target").collect()[0].name == "x"
 
 
+def test_available_now_cut_off_drain_raises(spark, stream_env, monkeypatch):
+    """A drain still running at the deadline must not report a row
+    count as if it had finished: it raises, naming the checkpoint."""
+    import os
+
+    from ulh_etl_spark.streaming import file_stream
+
+    inbound, ckpt = stream_env
+    with open(os.path.join(inbound, "f1.csv"), "w") as f:
+        f.write("id,name,val\n1,a,1.5\n")
+    monkeypatch.setattr(file_stream, "_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="checkpoint"):
+        stream_ingest_available_now(
+            spark, inbound, SCHEMA, "stream_target", ckpt
+        )
+
+
 def test_batch_and_stream_parse_csv_alike(spark, stream_env):
     """csv_scan and the streaming file source read a file with the
     same options: a quoted delimiter, doubled-quote escapes, padded

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ulh_etl_spark.config import IngestEntry, Practice
 from ulh_etl_spark.pipeline import write_raw
-from ulh_etl_spark.sinks.logs import append_log, clean_error_message
+from ulh_etl_spark.sinks.logs import append_log, clean_error_message, log_row
 from ulh_etl_spark.sources.http import (
     Transport,
     entity_fanout_source,
@@ -59,16 +59,15 @@ class ApiRunReport:
 
 
 def lookback_window(
-    days_back: float = 7.0,
     hours_back: float | None = None,
     clock_skew_hours: float = 6.0,
     now: datetime | None = None,
 ) -> tuple[datetime, datetime]:
-    """Incremental API pull window (reference :313-329): ``days_back``
-    / ``hours_back`` lookback with a clock-skew guard subtracted from
+    """Incremental API pull window (reference :313-329): a 7-day (or
+    ``hours_back``) lookback with a clock-skew guard subtracted from
     the start so slightly-late remote writes aren't missed."""
     now = now or datetime.now(timezone.utc)
-    span = timedelta(hours=hours_back) if hours_back else timedelta(days=days_back)
+    span = timedelta(hours=hours_back) if hours_back else timedelta(days=7)
     return now - span - timedelta(hours=clock_skew_hours), now
 
 
@@ -143,20 +142,20 @@ def run_api_practice(
             n = 0
             if not df.isEmpty():
                 n = write_raw(df, entry, rid)
-                append_log(
-                    spark, "RAW", new_run_id(), rid, practice.practice_name,
+                append_log(spark, "RAW", [log_row(
+                    new_run_id(), rid, practice.practice_name,
                     entry.name, "SUCCESS", rows_read=n, rows_written=n,
                     started_at=started,
-                )
+                )])
             rpt.endpoints.append(EndpointResult(entry.name, "SUCCESS", n))
         except Exception as e:  # continue-on-error per endpoint
             error = clean_error_message(str(e))
             try:
-                append_log(
-                    spark, "RAW", new_run_id(), rid, practice.practice_name,
+                append_log(spark, "RAW", [log_row(
+                    new_run_id(), rid, practice.practice_name,
                     entry.name, "FAILED", started_at=started,
                     error_message=error,
-                )
+                )])
             except Exception as log_error:  # keep continue-on-error
                 error += f"; audit row not written: {log_error}"[:300]
             rpt.endpoints.append(EndpointResult(entry.name, "FAILED", error=error))

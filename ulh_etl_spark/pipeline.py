@@ -132,7 +132,7 @@ def stage_precheck(
                 f"{r.check}={r.actual}" for r in rpt.results if r.status == "FAIL"
             )[:500],
         ))
-    append_log(spark, "PRECHECK", rows=log_rows)
+    append_log(spark, "PRECHECK", log_rows)
     return passing, failing, reports
 
 
@@ -181,10 +181,10 @@ def stage_raw(
     if df.isEmpty():  # zero-row short-circuit (reference :1013-1019)
         return 0
     n = write_raw(df, entry, parent_run_id)
-    append_log(
-        spark, "RAW", new_run_id(), parent_run_id, practice, entry.name, "SUCCESS",
+    append_log(spark, "RAW", [log_row(
+        new_run_id(), parent_run_id, practice, entry.name, "SUCCESS",
         rows_read=n, rows_written=n, started_at=started, finished_at=_utcnow(),
-    )
+    )])
     return n
 
 
@@ -231,11 +231,11 @@ def stage_refined(
     metrics = obs.get
     mark_consumed(spark, list(metrics["run_ids"]), stage=f"REFINED:{entry.raw_table}")
     n = int(metrics["rows"])
-    append_log(
-        spark, "REFINED", new_run_id(), parent_run_id, practice, entry.name,
+    append_log(spark, "REFINED", [log_row(
+        new_run_id(), parent_run_id, practice, entry.name,
         "SUCCESS", rows_read=n, rows_written=n,
         started_at=started, finished_at=_utcnow(),
-    )
+    )])
     return n
 
 
@@ -302,11 +302,11 @@ def stage_curated(
     dist = {t: c for t, c in obs_types.get.items() if c}
     mark_consumed(spark, list(obs_runs.get["run_ids"]),
                   stage=f"CURATED:{entry.refined_table}")
-    append_log(
-        spark, "CURATED", new_run_id(), parent_run_id, practice, entry.name,
+    append_log(spark, "CURATED", [log_row(
+        new_run_id(), parent_run_id, practice, entry.name,
         "SUCCESS", rows_read=n, rows_written=n,
         started_at=started, finished_at=_utcnow(),
-    )
+    )])
     return n, dist
 
 
@@ -408,11 +408,11 @@ def run_entry(
         rpt.error = clean_error_message(str(e))
         if stage:
             try:
-                append_log(
-                    spark, stage, new_run_id(), rid, practice.practice_name,
+                append_log(spark, stage, [log_row(
+                    new_run_id(), rid, practice.practice_name,
                     entry.name, "FAILED", started_at=started,
                     error_message=rpt.error,
-                )
+                )])
             except Exception as log_error:  # keep continue-on-error
                 rpt.error += f"; audit row not written: {log_error}"[:300]
         if notify:

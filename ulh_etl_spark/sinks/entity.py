@@ -31,7 +31,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
-from ulh_etl_spark.sinks.tables import _swap_staging, merge_upsert, table_exists
+from ulh_etl_spark.sinks.tables import _merged_frame, _replace, merge_upsert
 
 # classify_create_update's output columns, which batch_upsert_http reads.
 OP_COL = "_op"
@@ -69,7 +69,10 @@ def entity_mirror_merge(
     removed from the mirror by alternate key; all other rows upsert.
     The delete applies AFTER the upsert (a key present in both sets
     ends up deleted — matching the entity store, where the DELETE op
-    in the same $batch wins over an earlier PATCH)."""
+    in the same $batch wins over an earlier PATCH). Upsert and delete
+    are one merged frame and one mirror rewrite: the delete keys are
+    broadcast-anti-joined out of the merged rows, and every tally
+    rides that one write."""
     from pyspark.sql import functions as F
 
     if op_col is None or op_col not in rows.columns:
@@ -77,7 +80,6 @@ def entity_mirror_merge(
         stats["deleted"] = 0
         return stats
 
-    deletes = rows.filter(F.col(op_col) == "delete")
     # 'skip' = canceled rows with no synced GUID: the HTTP sink issues
     # no request for them, so the mirror must not upsert them either —
     # otherwise the mirror gains canceled entities the entity store
@@ -85,25 +87,25 @@ def entity_mirror_merge(
     upserts = rows.filter(
         F.col(op_col).isNull() | ~F.col(op_col).isin("delete", "skip")
     ).drop(op_col)
-    stats = merge_upsert(spark, mirror_table, upserts, keys=alternate_key)
-    stats["deleted"] = 0
-
-    if not deletes.isEmpty() and table_exists(spark, mirror_table):
-        del_keys = deletes.select(*alternate_key).distinct().withColumn(
-            "_del", F.lit(1)
-        )
-        tgt = spark.table(mirror_table)
-        marked = tgt.join(F.broadcast(del_keys), alternate_key, "left")
-        obs = Observation()
-        marked = marked.observe(
-            obs, F.count(F.when(F.col("_del") == 1, 1)).alias("deleted")
-        )
-        remaining = marked.filter(F.col("_del").isNull()).drop("_del")
-        staging = f"{mirror_table}__staging"
-        remaining.write.mode("overwrite").saveAsTable(staging)
-        _swap_staging(spark, mirror_table, staging)
-        stats["deleted"] = int(obs.get["deleted"])
-    return stats
+    merged, obs = _merged_frame(spark, mirror_table, upserts, alternate_key)
+    del_keys = (
+        rows.filter(F.col(op_col) == "delete")
+        .select(*alternate_key).distinct().withColumn("_del", F.lit(1))
+    )
+    obs_del = Observation()
+    marked = merged.join(F.broadcast(del_keys), alternate_key, "left").observe(
+        obs_del, F.count(F.when(F.col("_del") == 1, 1)).alias("deleted")
+    )
+    _replace(
+        spark, mirror_table,
+        marked.filter(F.col("_del").isNull()).select(*merged.columns),
+    )
+    m = obs.get
+    return {
+        "updated": int(m["updated"]),
+        "inserted": int(m["inserted"]),
+        "deleted": int(obs_del.get["deleted"]),
+    }
 
 
 def classify_create_update(

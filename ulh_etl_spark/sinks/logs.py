@@ -83,14 +83,9 @@ def log_row(
     )
 
 
-def append_log(
-    spark: SparkSession, stage: str, *fields, rows: list[tuple] | None = None, **kw
-) -> None:
-    """Append audit rows to ``stage``'s log table in one write: the
-    ``log_row`` tuples in ``rows``, or else the one row whose
-    ``log_row`` arguments are ``fields``/``kw``."""
-    if rows is None:
-        rows = [log_row(*fields, **kw)]
+def append_log(spark: SparkSession, stage: str, rows: list[tuple]) -> None:
+    """Append the ``log_row`` tuples in ``rows`` to ``stage``'s log
+    table in one write."""
     if not rows:
         return
     local_frame(

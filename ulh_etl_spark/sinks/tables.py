@@ -2,8 +2,7 @@
 
 Storage model: managed Spark catalog tables (parquet). MERGE (which
 Snowflake gave the reference for free) is implemented over plain
-parquet via a staging-table swap or, for partitioned targets, a
-dynamic partition overwrite.
+parquet as one staging-table write plus a swap.
 
 Scale notes: merge_upsert shuffles once on the merge keys and keeps
 map-side dedup via row_number; the staging swap is a metadata
@@ -72,9 +71,9 @@ def write_bucketed(
     tables on their join key once, join shuffle-free forever after.
     Sorted within buckets for sort-merge-friendly probes.
 
-    The drop-and-clear only runs for ``mode='overwrite'`` (mirroring
-    ``write_partitioned``) — an append must extend the existing
-    buckets, and error/ignore semantics rely on the table surviving."""
+    The drop-and-clear only runs for ``mode='overwrite'`` — an append
+    must extend the existing buckets, and error/ignore semantics rely
+    on the table surviving."""
     spark = df.sparkSession
     if mode == "overwrite":
         _drop_with_orphaned_location(spark, name)
@@ -108,13 +107,12 @@ def write_partitioned(
     df: DataFrame,
     name: str,
     partition_cols: list[str],
-    mode: str = "overwrite",
     cluster: bool = False,
 ) -> None:
-    """Partitioned write: one directory per partition value, so
+    """Partitioned overwrite: one directory per partition value, so
     filters on partition columns prune entire directories at plan
     time (PartitionFilters in the scan) — the layout for zone tables
-    keyed by practice/ingest-date. Overwrites drop through
+    keyed by practice/ingest-date. The table is dropped through
     ``_drop_with_orphaned_location`` first — a prior session's
     managed-table directory otherwise blocks re-creation under a
     fresh in-memory catalog (the q182 cross-session bench failure).
@@ -128,99 +126,74 @@ def write_partitioned(
     count from the data. Off by default: callers that pre-shaped
     their input (a repartition(n) for parallel readers) keep their
     layout."""
-    if mode == "overwrite":
-        _drop_with_orphaned_location(df.sparkSession, name)
+    _drop_with_orphaned_location(df.sparkSession, name)
     if cluster:
         df = df.repartition(*[F.col(c) for c in partition_cols])
-    df.write.mode(mode).partitionBy(*partition_cols).saveAsTable(name)
+    df.write.mode("overwrite").partitionBy(*partition_cols).saveAsTable(name)
 
 
-def _swap_staging(spark: SparkSession, target: str, staging: str) -> None:
-    """Replace ``target`` with ``staging`` (metadata-only swap)."""
-    spark.sql(f"DROP TABLE IF EXISTS {target}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {target}")
+def _rename(spark: SparkSession, src: str, dst: str) -> None:
+    """ALTER TABLE RENAME, then re-sync a partitioned table's
+    partitions: the rename moves the data directory but the metastore's
+    per-partition locations stay absolute (classic Hive semantics) and
+    still name the old path. Left stale, a later DROP of ``dst`` would
+    delete whatever now lives at those paths."""
+    spark.sql(f"ALTER TABLE {src} RENAME TO {dst}")
+    # catalog metadata, not spark.catalog.listColumns (which runs jobs)
+    state = spark._jsparkSession.sessionState()
+    meta = state.catalog().getTableMetadata(
+        state.sqlParser().parseTableIdentifier(dst)
+    )
+    if not meta.partitionColumnNames().isEmpty():
+        spark.sql(f"REPAIR TABLE {dst} SYNC PARTITIONS")
 
 
-def merge_upsert(
+def _replace(
+    spark: SparkSession,
+    target: str,
+    df: DataFrame,
+    partition_cols: list[str] | None = None,
+) -> None:
+    """Write ``df`` to a staging table and swap it in as ``target``
+    (the swap is metadata-only). The old target is renamed aside, not
+    dropped, until staging holds its name: if that rename fails the
+    old table is put back before the error propagates, so a failed
+    swap never leaves ``target`` missing."""
+    staging = f"{target}__staging"
+    writer = df.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.saveAsTable(staging)
+    if not table_exists(spark, target):
+        _rename(spark, staging, target)
+        return
+    aside = f"{target}__aside"
+    _drop_with_orphaned_location(spark, aside)
+    _rename(spark, target, aside)
+    try:
+        _rename(spark, staging, target)
+    except Exception:
+        _rename(spark, aside, target)
+        raise
+    spark.sql(f"DROP TABLE {aside}")
+
+
+def _merged_frame(
     spark: SparkSession,
     target: str,
     source_df: DataFrame,
     keys: list[str],
     tiebreak_cols: list[str] | None = None,
-    partition_cols: list[str] | None = None,
-    check_partition_stability: bool = False,
-) -> dict[str, int]:
-    """K4: MERGE upsert — WHEN MATCHED UPDATE all columns, WHEN NOT
-    MATCHED INSERT (reference Rater8_Reviews.ipynb ``run_merge`` on
-    (SURVEY_ID, QUESTION_ID)).
-
-    Implementation: union target+source with a priority column,
-    keep-latest per key via row_number (source wins). One
-    shuffle on the merge keys; the updated/inserted tallies ride the
-    SAME job via ``observe()`` on the merged frame (no pre-counts, no
-    extra scans). Returns {"updated": ..., "inserted": ...} counted
-    per key group — exactly what a native MERGE reports.
-
-    Precondition: at most one source row per key, OR pass
-    ``tiebreak_cols`` (descending; highest wins — mirror of q20's
-    ts/event_id tiebreak). Without a tiebreak, duplicate-key source
-    rows leave the survivor nondeterministic.
-
-    ``partition_cols``: when the target is partitioned on these
-    columns, the merge only reads + rewrites the partitions the source
-    touches (dynamic partition overwrite) instead of the whole table —
-    the rewrite is bounded by the source's partition footprint, which
-    is what keeps a parquet MERGE viable at 100 TB.
-
-    PRECONDITION (partitioned mode): a key's partition value must be
-    STABLE — if a source row moves a key to a different partition, the
-    old row survives in its untouched partition (duplicate key) and
-    the tally counts the key as inserted. This is the standard dynamic
-    -partition-overwrite caveat (Hive behaves identically; Delta MERGE
-    detects it). Set ``check_partition_stability=True`` to pay one
-    anti-join scan of the out-of-footprint target partitions and fail
-    fast instead.
-    """
-    if not table_exists(spark, target):
-        obs = Observation()
-        observed = source_df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = observed.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.saveAsTable(target)
-        return {"updated": 0, "inserted": int(obs.get["rows"])}
-
-    tgt = spark.table(target)
-    if partition_cols:
-        # restrict the target side to partitions the source touches;
-        # the broadcast semi-join prunes untouched directories
-        touched = source_df.select(*partition_cols).distinct()
-        tgt_side = tgt.join(F.broadcast(touched), partition_cols, "left_semi")
-        if check_partition_stability:
-            # a source key living in an UNtouched target partition
-            # means the key is moving partitions — the overwrite would
-            # leave the stale row behind. One extra scan, opt-in.
-            outside = tgt.join(
-                F.broadcast(touched), partition_cols, "left_anti"
-            )
-            movers = outside.join(
-                F.broadcast(source_df.select(*keys).distinct()),
-                keys,
-                "left_semi",
-            )
-            n_movers = movers.count()
-            if n_movers:
-                raise ValueError(
-                    f"merge_upsert: {n_movers} key(s) change partition "
-                    f"value(s) {partition_cols}; dynamic partition "
-                    "overwrite would strand their old rows. Merge "
-                    "without partition_cols or delete the old rows "
-                    "first."
-                )
-    else:
-        tgt_side = tgt
-
-    combined = tgt_side.withColumn("_prio", F.lit(0)).unionByName(
+) -> tuple[DataFrame, Observation]:
+    """``target`` merged with ``source_df``: one row per key, the
+    source row winning (then the highest ``tiebreak_cols``). An absent
+    target merges as an empty one. The returned Observation carries
+    the updated/inserted key tallies once a job evaluates the frame."""
+    tgt = (
+        spark.table(target) if table_exists(spark, target)
+        else source_df.limit(0)
+    )
+    combined = tgt.withColumn("_prio", F.lit(0)).unionByName(
         source_df.withColumn("_prio", F.lit(1))
     )
     order = [F.col("_prio").desc()] + [
@@ -246,21 +219,37 @@ def merge_upsert(
             F.when((F.col("_prio") == 1) & (F.col("_had_tgt") == 0), 1)
         ).alias("inserted"),
     ).drop("_prio", "_rn", "_had_tgt")
+    return merged, obs
 
-    if partition_cols:
-        # dynamic mode: only partitions present in `merged` (= the
-        # touched ones) are replaced; everything else is untouched
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            cols = [f.name for f in tgt.schema.fields]
-            merged.select(*cols).write.mode("overwrite").insertInto(target)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    else:
-        staging = f"{target}__staging"
-        merged.write.mode("overwrite").saveAsTable(staging)
-        _swap_staging(spark, target, staging)
+
+def merge_upsert(
+    spark: SparkSession,
+    target: str,
+    source_df: DataFrame,
+    keys: list[str],
+    tiebreak_cols: list[str] | None = None,
+) -> dict[str, int]:
+    """K4: MERGE upsert — WHEN MATCHED UPDATE all columns, WHEN NOT
+    MATCHED INSERT (reference Rater8_Reviews.ipynb ``run_merge`` on
+    (SURVEY_ID, QUESTION_ID)).
+
+    Implementation: union target+source with a priority column,
+    keep-latest per key via row_number (source wins), one staging
+    write and a swap. One shuffle on the merge keys; the
+    updated/inserted tallies ride the SAME job via ``observe()`` on the
+    merged frame (no pre-counts, no extra scans). Returns
+    {"updated": ..., "inserted": ...} counted per key group — exactly
+    what a native MERGE reports. A missing target is created the same
+    way, from an empty target side, so the first merge also keeps one
+    row per key.
+
+    Precondition: at most one source row per key, OR pass
+    ``tiebreak_cols`` (descending; highest wins — mirror of q20's
+    ts/event_id tiebreak). Without a tiebreak, duplicate-key source
+    rows leave the survivor nondeterministic.
+    """
+    merged, obs = _merged_frame(spark, target, source_df, keys, tiebreak_cols)
+    _replace(spark, target, merged)
     m = obs.get
     return {"updated": int(m["updated"]), "inserted": int(m["inserted"])}
 
@@ -290,17 +279,5 @@ def compact_table(
         df.repartition(n, *partition_cols) if partition_cols
         else df.repartition(n)
     )
-    staging = f"{table}__compact_staging"
-    writer = compacted.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.saveAsTable(staging)
-    _swap_staging(spark, table, staging)
-    if partition_cols:
-        # ALTER TABLE RENAME moves the data directory but the
-        # metastore's per-partition locations still reference the old
-        # staging path (absolute locations — classic Hive semantics);
-        # re-sync them from the filesystem.
-        spark.sql(f"MSCK REPAIR TABLE {table}")
-        spark.catalog.refreshTable(table)
+    _replace(spark, table, compacted, partition_cols)
     return len(spark.table(table).inputFiles())

@@ -22,8 +22,12 @@ from pyspark.sql import functions as F
 
 from ulh_etl_spark.operators.text import pack_sequences
 
+# The corpus columns the export reads and the manifest digests.
+TEXT_COL = "text"
+ID_COL = "doc_id"
 
-def _ids_digest(id_col: str) -> Column:
+
+def _ids_digest() -> Column:
     """md5 over the ','-joined doc ids in shard order (start_offset
     ascending) — order-sensitive, so a reordered or partial shard
     changes the digest."""
@@ -34,7 +38,7 @@ def _ids_digest(id_col: str) -> Column:
                     F.collect_list(
                         F.struct(
                             F.col("start_offset").alias("o"),
-                            F.col(id_col).cast("string").alias("i"),
+                            F.col(ID_COL).cast("string").alias("i"),
                         )
                     )
                 ),
@@ -48,20 +52,19 @@ def _ids_digest(id_col: str) -> Column:
 def export_training_shards(
     df: DataFrame,
     path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     ctx_len: int = 512,
     n_shards: int | None = None,
 ) -> DataFrame:
-    """Write the corpus as ``path/data/shard=S/`` parquet (id, text,
-    n_tokens, start_offset, pack_idx — reader-ordered by
-    start_offset) plus ``path/manifest/`` with one row per shard
+    """Write the corpus (columns ``doc_id``, ``text``) as
+    ``path/data/shard=S/`` parquet (id, text, n_tokens, start_offset,
+    pack_idx — reader-ordered by start_offset) plus
+    ``path/manifest/`` with one row per shard
     (n_docs, n_tokens, n_windows, ids_digest). Returns the manifest
     DataFrame (already written)."""
     packed = pack_sequences(
-        df, text_col, id_col, ctx_len=ctx_len, n_shards=n_shards
+        df, TEXT_COL, ID_COL, ctx_len=ctx_len, n_shards=n_shards
     )
-    data = packed.join(df.select(id_col, text_col), id_col)
+    data = packed.join(df.select(ID_COL, TEXT_COL), ID_COL)
     (
         data.repartition("shard")
         .sortWithinPartitions("start_offset")
@@ -72,16 +75,14 @@ def export_training_shards(
     manifest = packed.groupBy("shard").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"),
-        _ids_digest(id_col).alias("ids_digest"),
+        _ids_digest().alias("ids_digest"),
         F.ceil(F.sum("n_tokens") / ctx_len).cast("long").alias("n_windows"),
     )
     manifest.write.mode("overwrite").parquet(f"{path}/manifest")
     return manifest
 
 
-def verify_training_shards(
-    spark: SparkSession, path: str, id_col: str = "doc_id"
-) -> DataFrame:
+def verify_training_shards(spark: SparkSession, path: str) -> DataFrame:
     """Recompute counts/tokens/digest from the written data and
     compare against the manifest: one row per shard with ``ok`` =
     everything matches (full outer join, so a missing or extra shard
@@ -91,7 +92,7 @@ def verify_training_shards(
     recomputed = data.groupBy("shard").agg(
         F.count("*").alias("r_docs"),
         F.sum("n_tokens").alias("r_tokens"),
-        _ids_digest(id_col).alias("r_digest"),
+        _ids_digest().alias("r_digest"),
     )
     manifest = spark.read.parquet(f"{path}/manifest")
     return manifest.join(recomputed, "shard", "full").select(

@@ -106,23 +106,25 @@ def csv_scan(
     return df
 
 
+# jsonl_scan's in-schema column for lines that fail to parse.
+_CORRUPT_COL = "_corrupt_record"
+
+
 def jsonl_scan(
     spark: SparkSession,
     paths: list[str] | str,
     schema: str,
-    corrupt_col: str = "_corrupt_record",
-    with_file_name: bool = True,
 ) -> "tuple[DataFrame, DataFrame]":
     """Typed JSON-lines scan with corrupt-record quarantine — the
     standard entry point for web-scrape training corpora (one JSON
     doc per line, schema declared up front, garbage lines preserved
     rather than silently dropped).
 
-    Returns (good, quarantine): ``good`` has the declared schema
-    (+provenance); ``quarantine`` carries the raw unparseable line and
-    file for triage — mirroring the precheck suite's reject-don't-drop
-    stance on CSV (SURVEY §2.8). Schema-on-read: no inference job over
-    100 TB.
+    Returns (good, quarantine): ``good`` has the declared schema plus
+    a ``file_name`` provenance column; ``quarantine`` carries the raw
+    unparseable line and its file for triage — mirroring the precheck
+    suite's reject-don't-drop stance on CSV (SURVEY §2.8).
+    Schema-on-read: no inference job over 100 TB.
 
     Implementation: text scan + ``from_json`` carrying an in-schema
     corrupt-record column, rather than the native JSON reader's
@@ -136,17 +138,16 @@ def jsonl_scan(
     parsed = raw.select(
         F.from_json(
             F.col("value"),
-            f"{schema}, {corrupt_col} STRING",
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt_col},
+            f"{schema}, {_CORRUPT_COL} STRING",
+            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT_COL},
         ).alias("_j"),
         F.col("value"),
-        *([F.input_file_name().alias("file_name")] if with_file_name else []),
+        F.input_file_name().alias("file_name"),
     )
-    prov = ["file_name"] if with_file_name else []
-    bad = F.col("_j").isNull() | F.col(f"_j.{corrupt_col}").isNotNull()
-    good = parsed.filter(~bad).select("_j.*", *prov).drop(corrupt_col)
+    bad = F.col("_j").isNull() | F.col(f"_j.{_CORRUPT_COL}").isNotNull()
+    good = parsed.filter(~bad).select("_j.*", "file_name").drop(_CORRUPT_COL)
     quarantine = parsed.filter(bad).select(
-        F.col("value").alias("raw_line"), *prov
+        F.col("value").alias("raw_line"), "file_name"
     )
     return good, quarantine
 

@@ -16,9 +16,9 @@ Rate limiting, retries, and pagination live HERE, on the driver —
 Spark only sees the resulting DataFrame. Fetches are driver-side by
 design: these APIs are rate-limited single-tenant endpoints (the
 bottleneck is the remote API, not the client), and results are small.
-The one scale knob that matters is ``entity_fanout``'s executor mode
-(``distribute=True``) which fans per-entity calls across partitions
-via ``mapInPandas`` for APIs that tolerate parallelism.
+The one shape that scales is ``entity_fanout_source``'s executor mode,
+which fans per-entity calls across partitions via ``mapInPandas`` once
+the id set is large and the caller sets no pacing.
 
 Secrets arrive as values resolved by the caller from env/secret-store
 aliases (SURVEY §0 — never inline credentials in config).
@@ -167,9 +167,17 @@ def extract_records(payload: Any) -> list[dict]:
     return []
 
 
+def _cell(v: Any) -> str | None:
+    """One API value as a string column value: nested dict/list as
+    JSON (the reference, ELLKAY...py:713-717), None as NULL, anything
+    else through ``str``."""
+    if isinstance(v, (dict, list)):
+        return json.dumps(v)
+    return None if v is None else str(v)
+
+
 def records_to_df(spark: SparkSession, records: list[dict]) -> DataFrame:
-    """API rows -> DataFrame. Nested dict/list values are stringified
-    to JSON, matching the reference (ELLKAY...py:713-717) — callers
+    """API rows -> DataFrame of string columns (``_cell``) — callers
     wanting typed structs can parse with ``from_json`` downstream."""
     if not records:
         return local_frame(spark, [], "dummy string").drop("dummy")
@@ -178,19 +186,16 @@ def records_to_df(spark: SparkSession, records: list[dict]) -> DataFrame:
         for k in r:
             if k not in cols:
                 cols.append(k)
-    flat = [
-        tuple(
-            json.dumps(v) if isinstance(v, (dict, list)) else
-            (None if v is None else str(v))
-            for v in (r.get(c) for c in cols)
-        )
-        for r in records
-    ]
+    flat = [tuple(_cell(r.get(c)) for c in cols) for r in records]
     schema = ", ".join(f"`{c}` string" for c in cols)
     return local_frame(spark, flat, schema)
 
 
 # ---------------------------------------------------------------- sources
+
+# Token field of the token-paginated API, and the paging sources' page cap.
+_TOKEN_FIELD = "nextToken"
+_MAX_PAGES = 1000
 
 
 def extract_query_id(api_url: str) -> str | None:
@@ -220,14 +225,13 @@ def refresh_handshake_source(
     transport: Transport,
     results_url: str,
     refresh_url: str | None = None,
-    rows_path: str = "query_result.data.rows",
     headers: dict | None = None,
     wait_s: float = 120.0,
     sleeper: Sleeper = time.sleep,
 ) -> DataFrame:
     """S7 (HealthJump): POST a refresh, wait a fixed interval for the
-    remote query to rerun, GET results.json, extract rows by dotted
-    path (API_TO_RAW_SNOWFLAKE.py:344-424). ``refresh_url`` defaults
+    remote query to rerun, GET results.json, extract the rows at
+    ``query_result.data.rows`` (API_TO_RAW_SNOWFLAKE.py:344-424). ``refresh_url`` defaults
     to the one derived from ``results_url`` (the reference stores only
     the results URL in config and composes the refresh endpoint)."""
     if refresh_url is None:
@@ -244,7 +248,8 @@ def refresh_handshake_source(
     resp = retry_call(transport, "GET", results_url, headers=headers, sleeper=sleeper)
     if resp.status >= 400:
         raise RuntimeError(f"results fetch failed: HTTP {resp.status}")
-    return records_to_df(spark, extract_records(dotted_path(resp.json(), rows_path)))
+    rows = dotted_path(resp.json(), "query_result.data.rows")
+    return records_to_df(spark, extract_records(rows))
 
 
 def single_call_source(
@@ -254,11 +259,9 @@ def single_call_source(
     method: str = "POST",
     headers: dict | None = None,
     json_body: Any = None,
-    sleeper: Sleeper = time.sleep,
 ) -> DataFrame:
     """S8 single-call fetch (ELLKAY single pattern)."""
-    resp = retry_call(transport, method, url, headers=headers, json_body=json_body,
-                      sleeper=sleeper)
+    resp = retry_call(transport, method, url, headers=headers, json_body=json_body)
     if resp.status >= 400:
         raise RuntimeError(f"fetch failed: HTTP {resp.status}")
     return records_to_df(spark, extract_records(resp.json()))
@@ -271,12 +274,11 @@ def token_paginated_source(
     next_url: str,
     headers: dict | None = None,
     json_body: Any = None,
-    token_field: str = "nextToken",
-    max_pages: int = 1000,
+    max_pages: int = _MAX_PAGES,
     sleeper: Sleeper = time.sleep,
 ) -> DataFrame:
     """S9 (``beginNext``): call Begin, then loop Next with the
-    returned token until exhausted, capped at ``max_pages``
+    returned ``nextToken`` until exhausted, capped at ``max_pages``
     (ELLKAY_API_TO_RAW_SNOWFLAKE.py:625-691)."""
     records: list[dict] = []
     resp = retry_call(transport, "POST", begin_url, headers=headers,
@@ -285,16 +287,16 @@ def token_paginated_source(
         raise RuntimeError(f"begin failed: HTTP {resp.status}")
     payload = resp.json()
     records.extend(extract_records(payload))
-    token = payload.get(token_field) if isinstance(payload, dict) else None
+    token = payload.get(_TOKEN_FIELD) if isinstance(payload, dict) else None
     pages = 1
     while token and pages < max_pages:
         resp = retry_call(transport, "POST", next_url, headers=headers,
-                          json_body={token_field: token}, sleeper=sleeper)
+                          json_body={_TOKEN_FIELD: token}, sleeper=sleeper)
         if resp.status >= 400:
             raise RuntimeError(f"next page failed: HTTP {resp.status}")
         payload = resp.json()
         records.extend(extract_records(payload))
-        token = payload.get(token_field) if isinstance(payload, dict) else None
+        token = payload.get(_TOKEN_FIELD) if isinstance(payload, dict) else None
         pages += 1
     return records_to_df(spark, records)
 
@@ -307,7 +309,6 @@ def entity_fanout_source(
     headers: dict | None = None,
     api_delay_ms: int | None = None,
     sleeper: Sleeper = time.sleep,
-    distribute: bool | None = None,
     distribute_threshold: int = 500,
     spool_path: str | None = None,
 ) -> DataFrame:
@@ -316,7 +317,7 @@ def entity_fanout_source(
     continue on per-id failure; paced
     by ``api_delay_ms`` (ELLKAY_API_TO_RAW_SNOWFLAKE.py:548-623).
     ``api_delay_ms=None`` (default) = the reference's 2 s pacing in
-    the sequential loop, no pacing on executors.
+    the sequential loop; the executor path is never paced.
 
     ``ids`` may be a DataFrame (its first column, made distinct — the
     reference's ``SELECT DISTINCT patientId``). A DataFrame id set
@@ -325,18 +326,16 @@ def entity_fanout_source(
     executor path keeps ids as a frame end-to-end (a 100M-id corpus
     must not materialize on the driver just to be scattered back).
 
-    ``distribute``: False = the reference-faithful sequential driver
-    loop; True = fan out on executors via ``mapInPandas``
-    (per-partition transport + pacing clock) for APIs that allow
-    concurrent callers; None (default) = AUTO — distribute when the
-    id count reaches ``distribute_threshold`` AND the caller did not
-    ask for pacing. A driver loop over 100k ids at the reference's
-    2 s pacing is a 2-day serial job; the executor path is the only
-    shape that survives scale, so scale must not depend on the caller
-    remembering a flag. But an explicit ``api_delay_ms > 0`` means
-    the API is rate-limited — auto must NOT silently turn one paced
-    caller into N concurrent ones; such callers opt in with
-    ``distribute=True`` (each partition then paces independently).
+    Path selection: the fan-out runs on executors via
+    ``mapInPandas`` (one transport per partition) when the id count
+    reaches ``distribute_threshold`` AND the caller asked for no
+    pacing; otherwise it is the reference-faithful sequential driver
+    loop. A driver loop over 100k ids at the reference's 2 s pacing is
+    a 2-day serial job; the executor path is the only shape that
+    survives scale, so scale must not depend on the caller remembering
+    a flag. But an explicit ``api_delay_ms > 0`` means the API is
+    rate-limited — it must NOT silently turn one paced caller into N
+    concurrent ones, so a paced fan-out always stays on the driver.
     Both paths return the SAME all-string stringified-record schema
     with columns sorted by name (a first-seen order would be
     partition-order-dependent in the distributed path).
@@ -352,18 +351,17 @@ def entity_fanout_source(
     ids_frame: DataFrame | None = None
     if isinstance(ids, DataFrame):
         ids_frame = ids.select(ids.columns[0]).toDF("entity_id").distinct()
-        if distribute is None:
-            # limit-bounded probe: "are there >= threshold ids?" must
-            # not pay a full count over a 100M-id frame to decide a
-            # boolean — touch at most `threshold` rows.
-            distribute = (
-                not api_delay_ms
-                and ids_frame.limit(distribute_threshold).count()
-                >= distribute_threshold
-            )
+        # limit-bounded probe: "are there >= threshold ids?" must not
+        # pay a full count over a 100M-id frame to decide a boolean —
+        # touch at most `threshold` rows.
+        distribute = (
+            not api_delay_ms
+            and ids_frame.limit(distribute_threshold).count()
+            >= distribute_threshold
+        )
         if not distribute:
             ids = [r[0] for r in ids_frame.collect()]
-    elif distribute is None:
+    else:
         distribute = not api_delay_ms and len(ids) >= distribute_threshold
 
     def fetch_one(transport: Transport, eid: str) -> list[dict]:
@@ -388,8 +386,8 @@ def entity_fanout_source(
         # same column order as the distributed path (sorted by name)
         return out.select(*sorted(out.columns)) if out.columns else out
 
-    # executor path: ids scattered across partitions; one transport and
-    # one pacing clock per partition
+    # executor path (unpaced): ids scattered across partitions, one
+    # transport per partition
     import pandas as pd
 
     from pyspark.sql import functions as F
@@ -401,16 +399,10 @@ def entity_fanout_source(
         else local_frame(spark, [(i,) for i in ids], "entity_id string")
     )
 
-    delay_ms = api_delay_ms or 0
-
     def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         transport = transport_factory()
-        first = True
         for pdf in batches:
             for eid in pdf["entity_id"]:
-                if not first and delay_ms:
-                    time.sleep(delay_ms / 1000.0)
-                first = False
                 recs = fetch_one(transport, eid)
                 if recs:
                     yield pd.DataFrame(
@@ -446,15 +438,7 @@ def entity_fanout_source(
             recs = [json.loads(s) for s in pdf["record_json"]]
             yield pd.DataFrame(
                 {
-                    k: pd.array(
-                        [
-                            json.dumps(v)
-                            if isinstance(v, (dict, list))
-                            else (None if v is None else str(v))
-                            for v in (r.get(k) for r in recs)
-                        ],
-                        dtype="object",
-                    )
+                    k: pd.array([_cell(r.get(k)) for r in recs], dtype="object")
                     for k in keys
                 },
                 columns=keys,
@@ -469,25 +453,22 @@ def odata_paged_source(
     transport: Transport,
     url: str,
     headers: dict | None = None,
-    page_size: int = 5000,
-    value_field: str = "value",
-    next_link_field: str = "@odata.nextLink",
-    max_pages: int = 1000,
     sleeper: Sleeper = time.sleep,
 ) -> DataFrame:
-    """S11 (Dataverse read): GET with ``$top``/maxpagesize, follow
-    ``@odata.nextLink`` until exhausted (REFINED_SNOWFLAKE_TO_CURATED_
-    SNOWFLAKE.py:1705-1754)."""
-    hdrs = {"Prefer": f"odata.maxpagesize={page_size}", **(headers or {})}
+    """S11 (Dataverse read): GET ``value`` pages of at most 5000 rows
+    (``odata.maxpagesize``), follow ``@odata.nextLink`` until exhausted
+    or 1000 pages (REFINED_SNOWFLAKE_TO_CURATED_SNOWFLAKE.py:
+    1705-1754)."""
+    hdrs = {"Prefer": "odata.maxpagesize=5000", **(headers or {})}
     records: list[dict] = []
     pages = 0
-    while url and pages < max_pages:
+    while url and pages < _MAX_PAGES:
         resp = retry_call(transport, "GET", url, headers=hdrs, sleeper=sleeper)
         if resp.status >= 400:
             raise RuntimeError(f"odata fetch failed: HTTP {resp.status}")
         payload = resp.json()
-        records.extend(payload.get(value_field, []))
-        url = payload.get(next_link_field)
+        records.extend(payload.get("value", []))
+        url = payload.get("@odata.nextLink")
         pages += 1
     return records_to_df(spark, records)
 
@@ -498,8 +479,6 @@ def hierarchy_walk_source(
     permissions_url: str,
     leaf_url: Callable[[dict, dict], str],
     headers: dict | None = None,
-    practices_field: str = "practices",
-    employees_field: str = "employees",
     sleeper: Sleeper = time.sleep,
 ) -> DataFrame:
     """S12 (rater8): walk /permissions -> practices -> employees, one
@@ -511,8 +490,8 @@ def hierarchy_walk_source(
         raise RuntimeError(f"permissions fetch failed: HTTP {resp.status}")
     perms = resp.json()
     records: list[dict] = []
-    for practice in perms.get(practices_field, []):
-        for emp in practice.get(employees_field, []):
+    for practice in perms.get("practices", []):
+        for emp in practice.get("employees", []):
             leaf = retry_call(transport, "GET", leaf_url(practice, emp),
                               headers=headers, sleeper=sleeper)
             if leaf.status >= 400 or leaf.body.strip().upper() == "NULL":

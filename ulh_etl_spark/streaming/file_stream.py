@@ -61,7 +61,9 @@ def stream_ingest_available_now(
     inside the stream (transforms are narrow, so they stream as-is).
     Returns rows in the target table afterwards. Re-invoking after new
     files land processes ONLY the new files (checkpoint = the IS_NEW
-    flags, without the race)."""
+    flags, without the race). A drain still running at the deadline is
+    stopped and raises ``TimeoutError``; the next call resumes it from
+    the checkpoint."""
     df = _csv_stream(spark, directory, schema)
     if transform is not None:
         df = transform(df)
@@ -71,9 +73,12 @@ def stream_ingest_available_now(
         .trigger(availableNow=True)
         .toTable(target_table)
     )
-    q.awaitTermination(_TIMEOUT_S)
-    if q.isActive:
+    if not q.awaitTermination(_TIMEOUT_S):
         q.stop()
+        raise TimeoutError(
+            f"drain into {target_table} still running after {_TIMEOUT_S} s; "
+            f"stopped, resume from checkpoint {checkpoint_dir}"
+        )
     return spark.table(target_table).count()
 
 

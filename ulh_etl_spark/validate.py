@@ -25,7 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from ulh_etl_spark.config import PrecheckContract
-from ulh_etl_spark.sources.files import FileInfo, count_lines, head_lines
+from ulh_etl_spark.sources.files import FileInfo, head_lines
 
 # Characters forbidden in headers (reference :102-113): control chars,
 # quotes, SQL-comment introducers.
@@ -91,13 +91,12 @@ def precheck_file(
     spark: SparkSession,
     file: FileInfo,
     contract: PrecheckContract,
+    line_count: int,
     delimiter: str = ",",
-    line_count: int | None = None,
 ) -> PrecheckReport:
     """Run the full §2.8 check suite against one staged file.
-    ``line_count`` is the file's physical line count when the caller
-    already has it (``count_lines`` over a whole landing); otherwise
-    the file is counted on its own."""
+    ``line_count`` is the file's physical line count, from one
+    ``count_lines`` job over the whole landing."""
     rpt = PrecheckReport(file=file.path)
 
     # FILE_SIZE (:771-780)
@@ -195,8 +194,6 @@ def precheck_file(
             rpt.add("COLUMN_ORDER", "PASS", "declared order", "matches")
 
     # MIN/MAX_ROW_COUNT (:1050-1093) — data rows = physical lines - 1
-    if line_count is None:
-        line_count = count_lines(spark, [file.path])[file.path]
     data_rows = max(line_count - 1, 0)
     if data_rows < contract.min_row_count:
         rpt.add("MIN_ROW_COUNT", "FAIL", f">= {contract.min_row_count}", str(data_rows))
